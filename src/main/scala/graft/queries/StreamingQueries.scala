@@ -3,9 +3,9 @@ package graft.queries
 import graft.GraftSession
 import graft.GraftSession.table
 import graft.streaming.SessionPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming under the correctness gate (SURVEY.md §2 D1,
   * D6): the events parquet replayed as a file stream, session-window
@@ -50,11 +50,18 @@ object StreamingQueries {
          |wm AS (SELECT max(tsec) - $DelayS AS final_watermark FROM e)
          |SELECT user_id, start_s, end_s, n_events, sum_value
          |FROM agg, wm WHERE end_s < final_watermark""".stripMargin) { (s, dir) =>
-      runSessionStream(s, dir)
+      val events = eventStream(s, dir).select(
+        col("user_id"), col("value"), expr("ts div 1000000000").as("tsec"))
+      runToMemory(s, SessionPipeline.sessionWindowAgg(events,
+        s"$GapS seconds", s"$DelayS seconds"), "graft_stream_sessions")
     },
 
     Q("streaming_stateful_sessionize", statefulOracle) { (s, dir) =>
-      runStatefulStream(s, dir)
+      val sessions = SessionPipeline
+        .statefulSessionizeEventTime(sessEvents(s, dir), GapS, DelayS)
+        .toDF()
+        .withColumn("sum_value", round(col("sum_value"), 2))
+      runToMemory(s, sessions, "graft_stream_stateful")
     },
 
     // D4 under the gate: real streaming dropDuplicatesWithinWatermark
@@ -94,25 +101,7 @@ object StreamingQueries {
          |FROM e a JOIN e b ON a.user_id = b.user_id
          |WHERE a.event_type = 'click' AND b.event_type = 'purchase'
          |  AND b.tsec >= a.tsec AND b.tsec <= a.tsec + $GapS""".stripMargin) { (s, dir) =>
-      // ONE readStream, filter-split into the two sides (a streaming
-      // self-join): the micro-batch planner tracks a single source and
-      // both branches replay the same batch — vs two independent
-      // sources each listing + scanning the parquet on every trigger.
-      val ev = eventStream(s, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val joined = clicks.join(purchases,
-          col("user_id") === col("r_user") &&
-            col("r_ts") >= col("l_ts") &&
-            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"))
+      val joined = clickPurchaseJoin(s, dir, "inner")
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_timestamp(col("r_ts")) - unix_timestamp(col("l_ts"))).as("lag_s"))
       runToMemory(s, joined, "graft_stream_join")
@@ -150,22 +139,7 @@ object StreamingQueries {
          |    SELECT 1 FROM p WHERE p.user_id = c.user_id
          |      AND p.tsec >= c.tsec AND p.tsec <= c.tsec + $GapS))
          |SELECT * FROM matched UNION ALL SELECT * FROM unmatched""".stripMargin) { (s, dir) =>
-      val ev = eventStream(s, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val joined = clicks.join(purchases,
-          col("user_id") === col("r_user") &&
-            col("r_ts") >= col("l_ts") &&
-            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"),
-          "leftOuter")
+      val joined = clickPurchaseJoin(s, dir, "leftOuter")
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_timestamp(col("r_ts")) - unix_timestamp(col("l_ts"))).as("lag_s"))
       runToMemory(s, joined, "graft_stream_ljoin")
@@ -190,22 +164,7 @@ object StreamingQueries {
          |FROM c WHERE EXISTS (
          |  SELECT 1 FROM p WHERE p.user_id = c.user_id
          |    AND p.tsec >= c.tsec AND p.tsec <= c.tsec + $GapS)""".stripMargin) { (s, dir) =>
-      val ev = eventStream(s, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val joined = clicks.join(purchases,
-          col("user_id") === col("r_user") &&
-            col("r_ts") >= col("l_ts") &&
-            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"),
-          "leftSemi")
+      val joined = clickPurchaseJoin(s, dir, "leftSemi")
         .select(col("user_id"), col("click_id"),
           unix_timestamp(col("l_ts")).as("click_s"))
       runToMemory(s, joined, "graft_stream_sjoin")
@@ -253,22 +212,7 @@ object StreamingQueries {
          |SELECT * FROM matched
          |UNION ALL SELECT * FROM unmatched_c
          |UNION ALL SELECT * FROM unmatched_p""".stripMargin) { (s, dir) =>
-      val ev = eventStream(s, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val joined = clicks.join(purchases,
-          col("user_id") === col("r_user") &&
-            col("r_ts") >= col("l_ts") &&
-            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"),
-          "fullOuter")
+      val joined = clickPurchaseJoin(s, dir, "fullOuter")
         .select(coalesce(col("user_id"), col("r_user")).as("user_id"),
           col("click_id"), col("purchase_id"),
           (unix_timestamp(col("r_ts")) - unix_timestamp(col("l_ts"))).as("lag_s"))
@@ -436,15 +380,9 @@ object StreamingQueries {
          |SELECT purchase_id, user_id, hour_start_s, last_click_id, n_clicks
          |FROM a, wm WHERE hour_start_s + 3600 + $GapS + $DelayS < fw""".stripMargin) { (s, dir) =>
       val ev = eventStream(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("c_ts"),
-          (expr("ts div 1000000000") * 1073741824L + col("event_id")).as("ck"))
-        .withWatermark("c_ts", s"$DelayS seconds")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("p_ts"))
-        .withWatermark("p_ts", s"$DelayS seconds")
+      val clicks = watermarkedSide(ev, "click", "user_id", "click_id", "c_ts",
+        (expr("ts div 1000000000") * 1073741824L + col("event_id")).as("ck"))
+      val purchases = watermarkedSide(ev, "purchase", "p_user", "purchase_id", "p_ts")
       val joined = purchases.join(clicks,
         col("p_user") === col("user_id") &&
           col("c_ts") >= col("p_ts") - expr(s"INTERVAL $GapS seconds") &&
@@ -489,17 +427,10 @@ object StreamingQueries {
           floor(col("value") * 100).cast("long").as("cents"))
         .as[graft.streaming.TwsEvent]
       val live = graft.streaming.TwsProfile.profile(ev).toDF()
-      // transformWithState requires multiple state column families —
-      // RocksDB only (the 100 TB provider anyway); restore after.
-      val prev = graft.sources.Sources.useRocksDBStateStore(s)
-      val streamed =
-        try runToMemory(s, live, "graft_stream_tws", mode = "update")
-        finally graft.sources.Sources.restoreStateStore(s, prev)
       // keep the final emission per key: n_events strictly grows, so
       // max_by over it is the last update regardless of batch count
-      streamed.groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n_events")).as("n_events"),
-          max_by(col("cents_sum"), col("n_events")).as("cents_sum"))
+      latestPerKey(runToMemory(s, live, "graft_stream_tws", mode = "update",
+        rocksDB = true), Seq("user_id", "event_type"), "n_events", "cents_sum")
     },
 
     // D29 under the gate: TWS ListState — bounded per-key top-k
@@ -530,15 +461,8 @@ object StreamingQueries {
           floor(col("value") * 100).cast("long").as("cents"))
         .as[graft.streaming.TwsEvent]
       val live = graft.streaming.TwsTopk.topk(ev).toDF()
-      val prev = graft.sources.Sources.useRocksDBStateStore(s)
-      val streamed =
-        try runToMemory(s, live, "graft_stream_twstopk", mode = "update")
-        finally graft.sources.Sources.restoreStateStore(s, prev)
-      streamed.groupBy(col("user_id"))
-        .agg(max(col("n_seen")).as("n_seen"),
-          max_by(col("top1"), col("n_seen")).as("top1"),
-          max_by(col("top2"), col("n_seen")).as("top2"),
-          max_by(col("top3"), col("n_seen")).as("top3"))
+      latestPerKey(runToMemory(s, live, "graft_stream_twstopk", mode = "update",
+        rocksDB = true), Seq("user_id"), "n_seen", "top1", "top2", "top3")
     },
 
     // D28 under the gate: the D2 sessionizer on transformWithState
@@ -548,18 +472,11 @@ object StreamingQueries {
     // under D2's ORACLE VERBATIM: every non-final session emitted,
     // final sessions iff (last + gap) < final watermark.
     Q("streaming_tws_sessions", statefulOracle) { (s, dir) =>
-      import s.implicits._
-      val events = eventStream(s, dir).select(
-        col("user_id"), col("event_id"),
-        expr("ts div 1000000000").as("tsec"), col("value"))
-        .as[SessionPipeline.SessEvent]
       val sessions = graft.streaming.TwsSessions
-        .sessionize(events, GapS, DelayS)
+        .sessionize(sessEvents(s, dir), GapS, DelayS)
         .toDF()
         .withColumn("sum_value", round(col("sum_value"), 2))
-      val prev = graft.sources.Sources.useRocksDBStateStore(s)
-      try runToMemory(s, sessions, "graft_stream_tws_sess")
-      finally graft.sources.Sources.restoreStateStore(s, prev)
+      runToMemory(s, sessions, "graft_stream_tws_sess", rocksDB = true)
     },
 
     // D50: STREAMING STATE-TTL / EVICTION AUDIT (r10 verdict #7 —
@@ -591,23 +508,9 @@ object StreamingQueries {
          |SELECT n_live AS n_sess_rows, n_live AS n_deadline_rows,
          |  n_live AS n_timers, n_live AS n_live_expected
          |FROM live""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val events = eventStream(s, dir).select(
-        col("user_id"), col("event_id"),
-        expr("ts div 1000000000").as("tsec"), col("value"))
-        .as[SessionPipeline.SessEvent]
-      val sessions = graft.streaming.TwsSessions
-        .sessionize(events, GapS, DelayS)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ttl_ckpt").toString
-      val prev = graft.sources.Sources.useRocksDBStateStore(s)
-      try withStatePartitions(s, 8) {
-        val name = s"graft_stream_ttl_${System.nanoTime()}"
-        val q = sessions.toDF().writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      runStream(s, "graft_stream_ttl", rocksDB = true, scratch = Some("graft_ttl_ckpt")) { _ =>
+        graft.streaming.TwsSessions.sessionize(sessEvents(s, dir), GapS, DelayS).toDF()
+      } { (_, ckpt) =>
         def stateCount(opts: (String, String)*): Long =
           opts.foldLeft(s.read.format("statestore").option("path", ckpt)) {
             case (r, (k, v)) => r.option(k, v)
@@ -628,7 +531,7 @@ object StreamingQueries {
             lit(dlRows).as("n_deadline_rows"),
             lit(timers).as("n_timers"),
             col("n_live_expected"))
-      } finally graft.sources.Sources.restoreStateStore(s, prev)
+      }
     },
 
     // D30 ORACLE-GATED (round 12; r11 verdict #4 — promoted from the
@@ -683,51 +586,44 @@ object StreamingQueries {
       val ev = table(s, dir, "events").select(col("user_id"),
           col("event_id"), expr("ts div 1000000000").as("tsec"),
           floor(col("value") * 100).cast("long").as("cents"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_late_acct").toString
-      val src = s"$tmp/in"
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      val fs = srcPath.getFileSystem(s.sessionState.newHadoopConf())
-      // one FILE per wave with pinned ascending mtimes: the file
-      // source processes files in mtime order, so batch k = wave k.
-      // Round-13 optimization (guide §1.2): ONE pass writes all three
-      // waves — `repartition(3, wave)` puts each wave's rows in one
-      // task and `partitionBy("wave")` routes them to one file per
-      // wave directory, replacing the r12 3× (filter + coalesce(1))
-      // chains, each of which ran the whole scan AND the whole write
-      // single-threaded, serially. Batch composition is unchanged:
-      // the same three single-file waves in the same mtime order.
-      ev.withColumn("wave", pmod(col("user_id"), lit(3)))
-        .repartition(3, col("wave"))
-        .write.partitionBy("wave").mode("overwrite").parquet(src)
-      var seen = Set.empty[String]
-      (0 until 3).foreach { k =>
-        val waveDir = new org.apache.hadoop.fs.Path(src, s"wave=$k")
-        fs.listStatus(waveDir).map(_.getPath)
-          .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-          .foreach { p => fs.setTimes(p, (k + 1) * 60000L, -1L)
-            seen += s"wave=$k/" + p.getName }
-      }
-      require(seen.size == 3, s"expected 3 wave files, found ${seen.size}")
-      val sch = s.read.parquet(src).schema
-      val kept = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .withColumn("ets", timestamp_seconds(col("tsec")))
-        .withWatermark("ets", s"$DelayS seconds")
-        .dropDuplicates("event_id", "ets")
-      withStatePartitions(s, 8) {
-        val name = s"graft_stream_late_${System.nanoTime()}"
-        val q = kept.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      runStream(s, "graft_stream_late", scratch = Some("graft_late_acct")) { tmp =>
+        val src = s"$tmp/in"
+        val srcPath = new org.apache.hadoop.fs.Path(src)
+        val fs = srcPath.getFileSystem(s.sessionState.newHadoopConf())
+        // one FILE per wave with pinned ascending mtimes: the file
+        // source processes files in mtime order, so batch k = wave k.
+        // Round-13 optimization (guide §1.2): ONE pass writes all three
+        // waves — `repartition(3, wave)` puts each wave's rows in one
+        // task and `partitionBy("wave")` routes them to one file per
+        // wave directory, replacing the r12 3× (filter + coalesce(1))
+        // chains, each of which ran the whole scan AND the whole write
+        // single-threaded, serially. Batch composition is unchanged:
+        // the same three single-file waves in the same mtime order.
+        ev.withColumn("wave", pmod(col("user_id"), lit(3)))
+          .repartition(3, col("wave"))
+          .write.partitionBy("wave").mode("overwrite").parquet(src)
+        var seen = Set.empty[String]
+        (0 until 3).foreach { k =>
+          val waveDir = new org.apache.hadoop.fs.Path(src, s"wave=$k")
+          fs.listStatus(waveDir).map(_.getPath)
+            .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+            .foreach { p => fs.setTimes(p, (k + 1) * 60000L, -1L)
+              seen += s"wave=$k/" + p.getName }
+        }
+        require(seen.size == 3, s"expected 3 wave files, found ${seen.size}")
+        val sch = s.read.parquet(src).schema
+        s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(src)
+          .withColumn("ets", timestamp_seconds(col("tsec")))
+          .withWatermark("ets", s"$DelayS seconds")
+          .dropDuplicates("event_id", "ets")
+      } { (q, _) =>
         // the ENGINE-REPORTED late-row ledger, summed over batches
         val dropped = q.recentProgress
           .map(p => p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
           .sum
         val nInput = ev.count()
-        s.table(name)
+        s.table(q.name)
           .agg(count(lit(1)).as("n_on_time"),
             coalesce(sum(col("cents")), lit(0L)).as("on_time_cents"))
           .select(lit(nInput).as("n_input"), lit(dropped).as("n_dropped"),
@@ -772,29 +668,9 @@ object StreamingQueries {
          |SELECT lx.n AS n_left_state, rx.n AS n_right_state,
          |  lx.n AS n_left_expected, rx.n AS n_right_expected
          |FROM lx, rx""".stripMargin) { (s, dir) =>
-      val ev = eventStream(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"),
-          col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val joined = clicks.join(purchases,
-        col("user_id") === col("r_user") &&
-          col("r_ts") >= col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"))
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_jsa_ckpt").toString
-      withStatePartitions(s, 8) {
-        val name = s"graft_stream_jsa_${System.nanoTime()}"
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      runStream(s, "graft_stream_jsa", scratch = Some("graft_jsa_ckpt")) { _ =>
+        clickPurchaseJoin(s, dir, "inner")
+      } { (_, ckpt) =>
         def sideCount(side: String): Long =
           s.read.format("statestore").option("path", ckpt)
             .option("joinSide", side).load().count()
@@ -878,18 +754,15 @@ object StreamingQueries {
         .as[graft.streaming.PatEv]
       val live = graft.streaming.TwsPattern
         .patterns(events, GapS, DelayS, maxLen).toDF()
-      val prev = graft.sources.Sources.useRocksDBStateStore(s)
-      val streamed =
-        try runToMemory(s, live, "graft_stream_pattern")
-        finally graft.sources.Sources.restoreStateStore(s, prev)
-      streamed.select(col("user_id"), col("session_seq"),
-        length(col("seq")).cast("long").as("seq_len"),
-        expr("regexp_count(seq, 'CV*P')").cast("long").as("n_conv_paths"),
-        when(col("seq").rlike("E.*P"), 1).otherwise(0).cast("int")
-          .as("err_before_purchase"),
-        coalesce(
-          array_max(expr("transform(regexp_extract_all(seq, 'V+', 0), x -> length(x))")),
-          lit(0)).cast("long").as("max_view_run"))
+      runToMemory(s, live, "graft_stream_pattern", rocksDB = true)
+        .select(col("user_id"), col("session_seq"),
+          length(col("seq")).cast("long").as("seq_len"),
+          expr("regexp_count(seq, 'CV*P')").cast("long").as("n_conv_paths"),
+          when(col("seq").rlike("E.*P"), 1).otherwise(0).cast("int")
+            .as("err_before_purchase"),
+          coalesce(
+            array_max(expr("transform(regexp_extract_all(seq, 'V+', 0), x -> length(x))")),
+            lit(0)).cast("long").as("max_view_run"))
     },
 
     // D11 under the gate: STREAMING corpus curation — the C-family
@@ -1657,20 +1530,9 @@ object StreamingQueries {
          |  CAST(sum(anom) AS BIGINT) AS n_anomalies,
          |  CAST(sum(c) AS BIGINT) AS sum_cents
          |FROM a GROUP BY event_type""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulAnomalyFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_zscore", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("n_anomalies"),
-          col("sum_cents"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.n_anomalies").as("n_anomalies"),
-          col("m.sum_cents").as("sum_cents"))
+      val folded = SessionPipeline.statefulAnomalyFold(anomEvents(s, dir), DelayS).toDF()
+      latestPerKey(runToMemory(s, folded, "graft_stream_zscore", mode = "update"),
+        Seq("event_type"), "n_folded", "n_anomalies", "sum_cents")
     },
 
     // D53: STREAMING CONFORMAL p-VALUE GATE (round 13) — the
@@ -1725,20 +1587,9 @@ object StreamingQueries {
          |  CAST(sum(CASE WHEN band >= 32 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS hi_mass
          |FROM a GROUP BY event_type""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulConformalFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_conformal", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("n_alarms"),
-          col("hi_mass"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.n_alarms").as("n_alarms"),
-          col("m.hi_mass").as("hi_mass"))
+      val folded = SessionPipeline.statefulConformalFold(anomEvents(s, dir), DelayS).toDF()
+      latestPerKey(runToMemory(s, folded, "graft_stream_conformal", mode = "update"),
+        Seq("event_type"), "n_folded", "n_alarms", "hi_mass")
     },
 
     // D54: STREAMING ISOTONIC CALIBRATION (round 13) — C155's PAVA
@@ -1919,20 +1770,9 @@ object StreamingQueries {
          |  CAST(max(ph) AS BIGINT) AS max_ph_e6,
          |  CAST(count(*) FILTER (ph > 5000000000) AS BIGINT) AS n_alarms
          |FROM ph GROUP BY event_type""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulPageHinkley(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_ph", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("max_ph_e6"),
-          col("n_alarms"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.max_ph_e6").as("max_ph_e6"),
-          col("m.n_alarms").as("n_alarms"))
+      val folded = SessionPipeline.statefulPageHinkley(anomEvents(s, dir), DelayS).toDF()
+      latestPerKey(runToMemory(s, folded, "graft_stream_ph", mode = "update"),
+        Seq("event_type"), "n_folded", "max_ph_e6", "n_alarms")
     },
 
     // D48: streaming SPRT — Wald's sequential test run LIVE per
@@ -1989,15 +1829,8 @@ object StreamingQueries {
               .cast("int").as("x"))
           .as[SessionPipeline.SprtEvent]
         val folded = SessionPipeline.statefulSprt(ev, DelayS).toDF()
-        runToMemory(s, folded, "graft_stream_sprt", mode = "update")
-          .groupBy(col("shard"))
-          .agg(max_by(struct(col("n_seen"), col("n1"), col("decision"),
-            col("n_at_decision"), col("n1_at_decision")), col("n_seen"))
-            .as("m"))
-          .select(col("shard"), col("m.n_seen").as("n_seen"),
-            col("m.n1").as("n1"), col("m.decision").as("decision"),
-            col("m.n_at_decision").as("n_at_decision"),
-            col("m.n1_at_decision").as("n1_at_decision"))
+        latestPerKey(runToMemory(s, folded, "graft_stream_sprt", mode = "update"),
+          Seq("shard"), "n_seen", "n1", "decision", "n_at_decision", "n1_at_decision")
     },
 
     // D49: streaming two-proportion z monitor — B167's pooled z-test
@@ -2230,22 +2063,7 @@ object StreamingQueries {
          |WHERE c.tsec + $GapS < wm.fw AND NOT EXISTS (
          |  SELECT 1 FROM p WHERE p.user_id = c.user_id
          |    AND p.tsec >= c.tsec AND p.tsec <= c.tsec + $GapS)""".stripMargin) { (s, dir) =>
-      val ev = eventStream(s, dir)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("l_ts"))
-        .withWatermark("l_ts", s"$DelayS seconds")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("event_id").as("purchase_id"),
-          timestamp_seconds(expr("ts div 1000000000")).as("r_ts"))
-        .withWatermark("r_ts", s"$DelayS seconds")
-      val unconverted = clicks.join(purchases,
-          col("user_id") === col("r_user") &&
-            col("r_ts") >= col("l_ts") &&
-            col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"),
-          "leftOuter")
+      val unconverted = clickPurchaseJoin(s, dir, "leftOuter")
         .filter(col("purchase_id").isNull)
         .select(col("user_id"), col("click_id"),
           unix_timestamp(col("l_ts")).as("click_s"))
@@ -2407,11 +2225,8 @@ object StreamingQueries {
             .otherwise(-floor(col("value") * 100).cast("long")).as("cents"))
         .as[SessionPipeline.BalDelta]
       val folded = SessionPipeline.statefulBalanceFold(deltas, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_balance", mode = "update")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_folded"), col("balance_cents"))).as("m"))
-        .select(col("user_id"), col("m.n_folded").as("n_folded"),
-          col("m.balance_cents").as("balance_cents"))
+      latestPerKey(runToMemory(s, folded, "graft_stream_balance", mode = "update"),
+        Seq("user_id"), "n_folded", "balance_cents")
     },
 
     // D41: STREAMING ROLLING DEBOUNCE — B119's cooldown rule over an
@@ -2459,13 +2274,8 @@ object StreamingQueries {
           expr("ts div 1000000000").as("tsec"))
         .as[SessionPipeline.DebEvent]
       val folded = SessionPipeline.statefulDebounceFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_debounce", mode = "update")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_seen"), col("n_kept"), col("kept_id_sum")))
-          .as("m"))
-        .select(col("user_id"), col("m.n_seen").as("n_seen"),
-          col("m.n_kept").as("n_kept"),
-          col("m.kept_id_sum").as("kept_id_sum"))
+      latestPerKey(runToMemory(s, folded, "graft_stream_debounce", mode = "update"),
+        Seq("user_id"), "n_seen", "n_kept", "kept_id_sum")
     },
 
     // D37: STREAMING TIME-DECAYED COUNTS — the "trending now" shape
@@ -2787,14 +2597,7 @@ object StreamingQueries {
     * session's 32 — correctness is partition-count-independent, and
     * on a real cluster this knob sizes with state volume, not cores.
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val eff = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
-    spark.conf.set(key, eff.toString)
-    try f finally spark.conf.set(key, prev)
-  }
+  private val StatePartitions = 8
 
   /** Streams table `tbl` from `dir`, robust to BOTH on-disk layouts:
     * the driver's flat single-file `<dir>/<tbl>.parquet` and a
@@ -2832,17 +2635,108 @@ object StreamingQueries {
   private def eventStream(spark: SparkSession, dir: String): DataFrame =
     tableStream(spark, dir, "events")
 
-  private def runToMemory(spark: SparkSession, df: DataFrame,
-      prefix: String, mode: String = "append"): DataFrame = withStatePartitions(spark, 8) {
-    val name = s"${prefix}_${System.nanoTime()}"
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+  /** The one stream-run point. Runs `build(tmp)` as an AvailableNow
+    * query into a memory sink named `<prefix>_<nanos>` — Bench's
+    * releaseState drops every graft_stream_* view — at
+    * [[StatePartitions]] state partitions; the final no-data batch
+    * advances the watermark and flushes everything the watermark has
+    * closed. `inspect(q, ckpt)` then reads the terminated query (its
+    * `recentProgress`, its sink `spark.table(q.name)`, its state store).
+    *
+    * With a `scratch` prefix, `tmp` is a fresh dir `<scratch>*` under
+    * java.io.tmpdir that `build` may write stream input into, the query
+    * checkpoints at `ckpt` = `<tmp>/ckpt`, and the dir is deleted once
+    * `inspect` — which must read eagerly whatever it needs from it —
+    * returns. Without one, `tmp` and `ckpt` are null and the query
+    * uses Spark's own temporary checkpoint. `rocksDB` runs the query
+    * on the RocksDB state store (transformWithState needs its multiple
+    * state column families), restoring the provider after.
+    */
+  private def runStream[A](spark: SparkSession, prefix: String,
+      mode: String = "append", rocksDB: Boolean = false, scratch: Option[String] = None)(
+      build: String => DataFrame)(inspect: (StreamingQuery, String) => A): A = {
+    val tmp = scratch.map(java.nio.file.Files.createTempDirectory(_).toFile)
+    try {
+      val df = build(tmp.map(_.toString).orNull)
+      val ckpt = tmp.map(d => s"$d/ckpt").orNull
+      val partitionsKey = "spark.sql.shuffle.partitions"
+      val prevPartitions = spark.conf.get(partitionsKey)
+      val prevProvider =
+        if (rocksDB) Some(graft.sources.Sources.useRocksDBStateStore(spark)) else None
+      spark.conf.set(partitionsKey, StatePartitions.toString)
+      try {
+        val w = df.writeStream.outputMode(mode).format("memory")
+          .queryName(s"${prefix}_${System.nanoTime()}")
+        val q = Option(ckpt).fold(w)(w.option("checkpointLocation", _))
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        inspect(q, ckpt)
+      } finally {
+        spark.conf.set(partitionsKey, prevPartitions)
+        prevProvider.foreach(graft.sources.Sources.restoreStateStore(spark, _))
+      }
+    } finally tmp.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
+  /** [[runStream]] without scratch: the memory sink's content. */
+  private def runToMemory(spark: SparkSession, df: DataFrame, prefix: String,
+      mode: String = "append", rocksDB: Boolean = false): DataFrame =
+    runStream(spark, prefix, mode, rocksDB)(_ => df)((q, _) => spark.table(q.name))
+
+  /** The D7-family click → purchase fixture. ONE readStream,
+    * filter-split into the two sides (a streaming self-join): the
+    * micro-batch planner tracks a single source and both branches
+    * replay the same batch — vs two independent sources each listing +
+    * scanning the parquet on every trigger. The watermarked click side
+    * (user_id, click_id, l_ts) joins the purchase side (r_user,
+    * purchase_id, r_ts) `how`, on the same user with the purchase at
+    * most GapS after the click — the event-time range that bounds join
+    * state.
+    */
+  private def clickPurchaseJoin(s: SparkSession, dir: String, how: String): DataFrame = {
+    val ev = eventStream(s, dir)
+    watermarkedSide(ev, "click", "user_id", "click_id", "l_ts")
+      .join(watermarkedSide(ev, "purchase", "r_user", "purchase_id", "r_ts"),
+        col("user_id") === col("r_user") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $GapS seconds"), how)
+  }
+
+  /** One side of a stream-stream event join: the `eventType` rows of
+    * `ev` as (user, id, ts, extra…), watermarked DelayS behind `ts`. */
+  private def watermarkedSide(ev: DataFrame, eventType: String, user: String,
+      id: String, ts: String, extra: Column*): DataFrame =
+    ev.filter(col("event_type") === eventType)
+      .select(Seq(col("user_id").as(user), col("event_id").as(id),
+        timestamp_seconds(expr("ts div 1000000000")).as(ts)) ++ extra: _*)
+      .withWatermark(ts, s"$DelayS seconds")
+
+  /** An update-mode fold's last emission per `keys`: the row with the
+    * greatest `counter`, which grows strictly with every emission. */
+  private def latestPerKey(df: DataFrame, keys: Seq[String], counter: String,
+      rest: String*): DataFrame = {
+    val fields = counter +: rest
+    df.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(fields.map(col): _*), col(counter)).as("m"))
+      .select(keys.map(col) ++ fields.map(f => col(s"m.$f").as(f)): _*)
+  }
+
+  /** The events stream as D2 sessionizer input. */
+  private def sessEvents(s: SparkSession, dir: String): Dataset[SessionPipeline.SessEvent] = {
+    import s.implicits._
+    eventStream(s, dir).select(col("user_id"), col("event_id"),
+        expr("ts div 1000000000").as("tsec"), col("value"))
+      .as[SessionPipeline.SessEvent]
+  }
+
+  /** The events stream as per-type cents input of the D44/D47/D53 folds. */
+  private def anomEvents(s: SparkSession, dir: String): Dataset[SessionPipeline.AnomEvent] = {
+    import s.implicits._
+    eventStream(s, dir)
+      .select(col("event_type"), col("event_id"),
+        expr("ts div 1000000000").as("tsec"),
+        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+      .as[SessionPipeline.AnomEvent]
   }
 
   // D2 under the gate: the custom flatMapGroupsWithState sessionizer
@@ -2877,43 +2771,4 @@ object StreamingQueries {
        |wm AS (SELECT max(tsec) - $DelayS AS final_watermark FROM e)
        |SELECT user_id, start_s, end_s, n_events, sum_value
        |FROM agg, wm WHERE rn_desc > 1 OR end_s < final_watermark""".stripMargin
-
-  private def runStatefulStream(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val raw = eventStream(spark, dir)
-    val events = raw.select(
-      col("user_id"), col("event_id"),
-      expr("ts div 1000000000").as("tsec"), col("value"))
-      .as[SessionPipeline.SessEvent]
-    val sessions = SessionPipeline.statefulSessionizeEventTime(events, GapS, DelayS)
-      .toDF()
-      .withColumn("sum_value", round(col("sum_value"), 2))
-    // through runToMemory: one memory-sink path, one naming
-    // convention — Bench's releaseState drops graft_stream_* views,
-    // and a bespoke name here leaked its driver-side row buffer for
-    // the whole session
-    runToMemory(spark, sessions, "graft_stream_stateful")
-  }
-
-  /** Replays events as a real streaming query; returns the memory
-    * sink's content. Uses AvailableNow so the run terminates; the
-    * final no-data batch advances the watermark and flushes every
-    * closed session.
-    */
-  private def runSessionStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = eventStream(spark, dir)
-    val events = raw.select(
-      col("user_id"), col("value"),
-      timestamp_seconds(expr("ts div 1000000000")).as("ts"))
-    val sessions = events
-      .withWatermark("ts", s"$DelayS seconds")
-      .groupBy(session_window(col("ts"), s"$GapS seconds"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-      .select(
-        col("user_id"),
-        unix_timestamp(col("session_window.start")).as("start_s"),
-        unix_timestamp(col("session_window.end")).as("end_s"),
-        col("n_events"), col("sum_value"))
-    runToMemory(spark, sessions, "graft_stream_sessions")
-  }
 }

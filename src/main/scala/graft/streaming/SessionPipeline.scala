@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming re-expression of the reference pipeline
   * (SURVEY.md §2 A4, A5, D1-D4).
@@ -146,14 +147,55 @@ object SessionPipeline extends Serializable {
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(update)
   }
 
+  /** An event of an event-time stateful operator: its second `tsec`,
+    * tie-broken by `event_id` — the (tsec, event_id) order every fold
+    * and sessionizer here processes rows in.
+    */
+  trait Stamped { def event_id: Long; def tsec: Long }
+
+  /** `events` watermarked `delayS` seconds behind their `tsec` stamps
+    * and grouped by `key` — the wiring every event-time stateful
+    * operator here shares (the buffered folds, both D2 sessionizers,
+    * the D34 pattern operator).
+    */
+  private[streaming] def keyedByEventTime[E <: Stamped : Encoder, K : Encoder](
+      events: Dataset[E], delayS: Long)(key: E => K): KeyValueGroupedDataset[K, E] =
+    events
+      .withColumn("ts", timestamp_seconds(col("tsec")))
+      .withWatermark("ts", s"$delayS seconds")
+      .as[E]
+      .groupByKey(key)
+
   /** One event for the event-time sessionizer. */
   case class SessEvent(user_id: Long, event_id: Long, tsec: Long, value: Double)
+      extends Stamped
 
   /** One closed session. */
   case class SessOut(user_id: Long, start_s: Long, end_s: Long,
       n_events: Long, sum_value: Double)
 
-  case class SessState(startS: Long, lastS: Long, nEv: Long, sumV: Double)
+  case class SessState(startS: Long, lastS: Long, nEv: Long, sumV: Double) {
+    /** `end_s` is last_event + gap (session_window convention). */
+    def close(uid: Long, gapS: Long): SessOut =
+      SessOut(uid, startS, lastS + gapS, nEv, sumV)
+  }
+
+  /** The D2 in-batch session step both event-time sessionizers share
+    * (`statefulSessionizeEventTime`, `TwsSessionProcessor`): folds rows
+    * sorted by (tsec, event_id) into the `open` session — a row more
+    * than `gapS` after the session's last event closes it and opens the
+    * next, any other row extends it. Returns the sessions closed, in
+    * order, and the session left open.
+    */
+  private[graft] def sessionStep(open: Option[SessState], sorted: Seq[SessEvent],
+      gapS: Long): (Seq[SessState], Option[SessState]) =
+    sorted.foldLeft((Vector.empty[SessState], open)) {
+      case ((closed, Some(s)), r) if r.tsec - s.lastS <= gapS =>
+        (closed, Some(SessState(s.startS, math.max(s.lastS, r.tsec),
+          s.nEv + 1, s.sumV + r.value)))
+      case ((closed, prev), r) =>
+        (closed ++ prev, Some(SessState(r.tsec, r.tsec, 1L, r.value)))
+    }
 
   /** Custom stateful sessionizer with EVENT-TIME timeout — the
     * deterministic form of the reference's inactivity trigger
@@ -169,49 +211,32 @@ object SessionPipeline extends Serializable {
       gapS: Long, delayS: Long): Dataset[SessOut] = {
     import events.sparkSession.implicits._
 
-    def close(uid: Long, s: SessState): SessOut =
-      SessOut(uid, s.startS, s.lastS + gapS, s.nEv, s.sumV)
-
     def update(uid: Long, rows: Iterator[SessEvent],
         state: GroupState[SessState]): Iterator[SessOut] = {
       if (state.hasTimedOut) {
         val s = state.get
         state.remove()
-        Iterator.single(close(uid, s))
+        Iterator.single(s.close(uid, gapS))
       } else {
         val sorted = rows.toSeq.sortBy(r => (r.tsec, r.event_id))
-        val out = scala.collection.mutable.ArrayBuffer.empty[SessOut]
-        var st = state.getOption
-        sorted.foreach { r =>
-          st match {
-            case None =>
-              st = Some(SessState(r.tsec, r.tsec, 1L, r.value))
-            case Some(s) if r.tsec - s.lastS > gapS =>
-              out += close(uid, s)
-              st = Some(SessState(r.tsec, r.tsec, 1L, r.value))
-            case Some(s) =>
-              st = Some(SessState(s.startS, math.max(s.lastS, r.tsec), s.nEv + 1, s.sumV + r.value))
+        val (closed, open) = sessionStep(state.getOption, sorted, gapS)
+        val expired = open.flatMap { s =>
+          val deadlineMs = (s.lastS + gapS) * 1000L
+          if (deadlineMs <= state.getCurrentWatermarkMs()) {
+            // already expired relative to the current watermark
+            state.remove()
+            Some(s)
+          } else {
+            state.update(s)
+            state.setTimeoutTimestamp(deadlineMs)
+            None
           }
         }
-        val s = st.get
-        val deadlineMs = (s.lastS + gapS) * 1000L
-        if (deadlineMs <= state.getCurrentWatermarkMs()) {
-          // already expired relative to the current watermark
-          out += close(uid, s)
-          state.remove()
-        } else {
-          state.update(s)
-          state.setTimeoutTimestamp(deadlineMs)
-        }
-        out.iterator
+        (closed ++ expired).iterator.map(_.close(uid, gapS))
       }
     }
 
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[SessEvent]
-      .groupByKey(_.user_id)
+    keyedByEventTime(events, delayS)(_.user_id)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
@@ -222,14 +247,64 @@ object SessionPipeline extends Serializable {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCols)
 
+  /** The buffered folds' shared timer and remove tail: a timed-out key
+    * whose buffer has drained is removed; otherwise `next` is stored and
+    * the event-time timer re-armed STRICTLY above the current watermark
+    * (Spark rejects anything else) — just past the oldest held row, or
+    * 1 s on when none is held — so a quiet key still drains.
+    */
+  private def rearm[S](state: GroupState[S], next: S, oldestHeldS: Option[Long]): Unit =
+    if (oldestHeldS.isEmpty && state.hasTimedOut) state.remove()
+    else {
+      state.update(next)
+      val wmMs = state.getCurrentWatermarkMs()
+      state.setTimeoutTimestamp(
+        oldestHeldS.fold(wmMs + 1000L)(t => math.max(t * 1000L + 1L, wmMs + 1L)))
+    }
+
+  /** A buffered fold's state: the fold accumulator and the rows still
+    * at/above the watermark. */
+  case class Buffered[A, E](acc: A, buffered: Seq[E])
+
+  /** The D23 buffered-fold kernel: an ORDERED, non-decomposable per-key
+    * fold over an out-of-order stream. Each key buffers its rows in
+    * state and folds them into `zero` with `step` in (tsec, event_id)
+    * order ONLY below the watermark — the horizon below which no earlier
+    * row can still arrive; rows at/above it stay buffered for the next
+    * batch, and the event-time timer ([[rearm]]) drains a quiet key.
+    * Emission is update-mode: `out(key, acc)` once per call that folded
+    * a row; the fold's counter grows strictly, so consumers take the
+    * max-counter row per key, which over an AvailableNow replay equals
+    * the batch fold over every row strictly below the final watermark.
+    */
+  private def bufferedFold[E <: Product with Stamped : TypeTag, K : Encoder,
+      A <: Product : TypeTag, O <: Product : TypeTag](
+      events: Dataset[E], delayS: Long, key: E => K, zero: A)(
+      step: (A, E) => A)(out: (K, A) => O): Dataset[O] = {
+    def update(k: K, rows: Iterator[E],
+        state: GroupState[Buffered[A, E]]): Iterator[O] = {
+      val wmS = state.getCurrentWatermarkMs() / 1000L
+      val st = state.getOption.getOrElse(Buffered(zero, Seq.empty[E]))
+      val all = if (state.hasTimedOut) st.buffered else st.buffered ++ rows
+      val (ready, hold) = all.partition(_.tsec < wmS)
+      val acc = ready.sortBy(r => (r.tsec, r.event_id)).foldLeft(st.acc)(step)
+      rearm(state, Buffered(acc, hold), hold.map(_.tsec).minOption)
+      if (ready.isEmpty) Iterator.empty else Iterator.single(out(k, acc))
+    }
+
+    keyedByEventTime(events, delayS)(key)(Encoders.product[E], implicitly[Encoder[K]])
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
+        update)(Encoders.product[Buffered[A, E]], Encoders.product[O])
+  }
+
   case class BalDelta(user_id: Long, event_id: Long, tsec: Long, cents: Long)
-  case class BalState(balance: Long, nFolded: Long, buffered: Seq[BalDelta])
+      extends Stamped
+  case class BalState(balance: Long, nFolded: Long)
   case class BalOut(user_id: Long, n_folded: Long, balance_cents: Long)
 
-  case class DebEvent(user_id: Long, event_id: Long, tsec: Long)
+  case class DebEvent(user_id: Long, event_id: Long, tsec: Long) extends Stamped
   /** lastKept = Long.MinValue ⇒ nothing kept yet (the fold seed). */
-  case class DebState(lastKept: Long, nSeen: Long, nKept: Long,
-      idSum: Long, buffered: Seq[DebEvent])
+  case class DebState(lastKept: Long, nSeen: Long, nKept: Long, idSum: Long)
   case class DebOut(user_id: Long, n_seen: Long, n_kept: Long,
       kept_id_sum: Long)
 
@@ -237,61 +312,20 @@ object SessionPipeline extends Serializable {
     * event iff ≥ `cooldownS` since the last KEPT event of its key)
     * over an out-of-order stream. Like the D23 balance fold, the
     * rule is a genuine ordered NON-DECOMPOSABLE fold (survival
-    * depends on which earlier events survived), so each key buffers
-    * rows in state and folds them in (tsec, event_id) order ONLY
-    * below the watermark; rows at/above it stay buffered for the
-    * next batch. Event-time timers re-arm above the watermark so a
-    * quiet key still drains. Emission (update mode): one running
+    * depends on which earlier events survived), so it runs on the
+    * [[bufferedFold]] kernel. Emission (update mode): one running
     * (n_seen, n_kept, kept_id_sum) row per fold step — consumers
     * take the max-n_seen row per key (the D23 convention).
     */
   def statefulDebounceFold(events: Dataset[DebEvent], delayS: Long,
       cooldownS: Long = 300L): Dataset[DebOut] = {
     import events.sparkSession.implicits._
-
-    def foldReady(uid: Long, st: DebState, wmS: Long): (DebState, Option[DebOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var last = st.lastKept; var nk = st.nKept; var ids = st.idSum
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          if (last == Long.MinValue || r.tsec - last >= cooldownS) {
-            last = r.tsec; nk += 1; ids += r.event_id
-          }
-        }
-        val next = DebState(last, st.nSeen + ready.size, nk, ids, hold)
-        (next, Some(DebOut(uid, next.nSeen, next.nKept, next.idSum)))
-      }
-    }
-
-    def update(uid: Long, rows: Iterator[DebEvent],
-        state: GroupState[DebState]): Iterator[DebOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption
-        .getOrElse(DebState(Long.MinValue, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(uid, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[DebEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
+    bufferedFold(events, delayS, (e: DebEvent) => e.user_id,
+        DebState(Long.MinValue, 0L, 0L, 0L)) { (s, r) =>
+      if (s.lastKept == Long.MinValue || r.tsec - s.lastKept >= cooldownS)
+        DebState(r.tsec, s.nSeen + 1, s.nKept + 1, s.idSum + r.event_id)
+      else s.copy(nSeen = s.nSeen + 1)
+    } { (uid, s) => DebOut(uid, s.nSeen, s.nKept, s.idSum) }
   }
 
   /** D23: streaming NON-DECOMPOSABLE ordered fold — the floored
@@ -309,53 +343,14 @@ object SessionPipeline extends Serializable {
   def statefulBalanceFold(deltas: Dataset[BalDelta],
       delayS: Long): Dataset[BalOut] = {
     import deltas.sparkSession.implicits._
-
-    def foldReady(uid: Long, st: BalState, wmS: Long): (BalState, Option[BalOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var bal = st.balance
-        ready.sortBy(r => (r.tsec, r.event_id))
-          .foreach(r => bal = math.max(bal + r.cents, 0L))
-        val next = BalState(bal, st.nFolded + ready.size, hold)
-        (next, Some(BalOut(uid, next.nFolded, next.balance)))
-      }
-    }
-
-    def update(uid: Long, rows: Iterator[BalDelta],
-        state: GroupState[BalState]): Iterator[BalOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(BalState(0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(uid, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        // re-arm strictly above the current watermark or Spark rejects
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    deltas
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[BalDelta]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
+    bufferedFold(deltas, delayS, (d: BalDelta) => d.user_id, BalState(0L, 0L)) {
+      (s, r) => BalState(math.max(s.balance + r.cents, 0L), s.nFolded + 1)
+    } { (uid, s) => BalOut(uid, s.nFolded, s.balance) }
   }
 
   case class AnomEvent(event_type: String, event_id: Long, tsec: Long,
-      cents: Long)
-  case class AnomState(n: Long, s: Long, q: Long, nAnom: Long,
-      buffered: Seq[AnomEvent])
+      cents: Long) extends Stamped
+  case class AnomState(n: Long, s: Long, q: Long, nAnom: Long)
   case class AnomOut(event_type: String, n_folded: Long,
       n_anomalies: Long, sum_cents: Long)
 
@@ -387,49 +382,11 @@ object SessionPipeline extends Serializable {
       }
     }
 
-    def foldReady(key: String, st: AnomState,
-        wmS: Long): (AnomState, Option[AnomOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val hit = if (anomalous(cur, r.cents)) 1L else 0L
-          cur = AnomState(cur.n + 1, cur.s + r.cents,
-            cur.q + r.cents * r.cents, cur.nAnom + hit, Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        (next, Some(AnomOut(key, next.n, next.nAnom, next.s)))
-      }
-    }
-
-    def update(key: String, rows: Iterator[AnomEvent],
-        state: GroupState[AnomState]): Iterator[AnomOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(AnomState(0L, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
+    bufferedFold(events, delayS, (e: AnomEvent) => e.event_type,
+        AnomState(0L, 0L, 0L, 0L)) { (cur, r) =>
+      val hit = if (anomalous(cur, r.cents)) 1L else 0L
+      AnomState(cur.n + 1, cur.s + r.cents, cur.q + r.cents * r.cents, cur.nAnom + hit)
+    } { (key, s) => AnomOut(key, s.n, s.nAnom, s.s) }
   }
 
   // Round-13 optimization (guide §2.3 "narrower types", applied to
@@ -441,6 +398,8 @@ object SessionPipeline extends Serializable {
   // key) dominated the state commit. Array[Long] fields encode as
   // three binary blobs. Fold order and emissions are unchanged: the
   // ready set is still sorted by (tsec, event_id) before folding.
+  // It therefore keeps its own buffer handling and shares only the
+  // wiring and the [[rearm]] tail with the [[bufferedFold]] kernel.
   case class ConfState(n: Long, hist: Seq[Long], nAlarms: Long,
       hiMass: Long, bufT: Array[Long], bufI: Array[Long], bufC: Array[Long])
   case class ConfOut(event_type: String, n_folded: Long, n_alarms: Long,
@@ -540,29 +499,17 @@ object SessionPipeline extends Serializable {
             bufC = st0.bufC ++ bc.result())
         }
       val (next, out) = foldReady(key, withNew, wmS)
-      if (next.bufT.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake =
-          if (next.bufT.isEmpty) state.getCurrentWatermarkMs() + 1000L
-          else math.max(next.bufT.min * 1000L + 1L,
-            state.getCurrentWatermarkMs() + 1L)
-        state.setTimeoutTimestamp(wake)
-      }
+      rearm(state, next, next.bufT.minOption)
       out.iterator
     }
 
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
+    keyedByEventTime(events, delayS)(_.event_type)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   case class PhState(n: Long, s: Long, m: Long, minM: Long, maxPh: Long,
-      nAlarms: Long, buffered: Seq[AnomEvent])
+      nAlarms: Long)
   case class PhOut(event_type: String, n_folded: Long, max_ph_e6: Long,
       n_alarms: Long)
 
@@ -581,61 +528,23 @@ object SessionPipeline extends Serializable {
   def statefulPageHinkley(events: Dataset[AnomEvent], delayS: Long,
       lambdaE6: Long = 5000L * 1000000): Dataset[PhOut] = {
     import events.sparkSession.implicits._
-
-    def foldReady(key: String, st: PhState,
-        wmS: Long): (PhState, Option[PhOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val n = cur.n + 1
-          val s = cur.s + r.cents
-          val dev = r.cents * 1000000L - (s * 1000000L) / n
-          val m = cur.m + dev
-          val minM = math.min(cur.minM, m)
-          val ph = m - minM
-          cur = PhState(n, s, m, minM, math.max(cur.maxPh, ph),
-            cur.nAlarms + (if (ph > lambdaE6) 1L else 0L), Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        (next, Some(PhOut(key, next.n, next.maxPh, next.nAlarms)))
-      }
-    }
-
-    def update(key: String, rows: Iterator[AnomEvent],
-        state: GroupState[PhState]): Iterator[PhOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(
-        PhState(0L, 0L, 0L, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
+    bufferedFold(events, delayS, (e: AnomEvent) => e.event_type,
+        PhState(0L, 0L, 0L, 0L, 0L, 0L)) { (cur, r) =>
+      val n = cur.n + 1
+      val s = cur.s + r.cents
+      val dev = r.cents * 1000000L - (s * 1000000L) / n
+      val m = cur.m + dev
+      val minM = math.min(cur.minM, m)
+      val ph = m - minM
+      PhState(n, s, m, minM, math.max(cur.maxPh, ph),
+        cur.nAlarms + (if (ph > lambdaE6) 1L else 0L))
+    } { (key, s) => PhOut(key, s.n, s.maxPh, s.nAlarms) }
   }
 
   case class SprtEvent(shard: Long, event_id: Long, tsec: Long, x: Int)
+      extends Stamped
   case class SprtState(n: Long, n1: Long, decision: Int, nAt: Long,
-      n1At: Long, buffered: Seq[SprtEvent])
+      n1At: Long)
   case class SprtOut(shard: Long, n_seen: Long, n1: Long, decision: String,
       n_at_decision: Long, n1_at_decision: Long)
 
@@ -659,60 +568,22 @@ object SessionPipeline extends Serializable {
     val C0 = -0.05715841383994864    // ln(0.85/0.90), pinned
     val Bound = 2.9444389791664403   // ln(0.95/0.05), pinned
 
-    def foldReady(key: Long, st: SprtState,
-        wmS: Long): (SprtState, Option[SprtOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
+    bufferedFold(events, delayS, (e: SprtEvent) => e.shard,
+        SprtState(0L, 0L, 0, 0L, 0L)) { (cur, r) =>
+      val n = cur.n + 1
+      val n1 = cur.n1 + r.x
+      if (cur.decision != 0) cur.copy(n = n, n1 = n1)
       else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val n = cur.n + 1
-          val n1 = cur.n1 + r.x
-          var dec = cur.decision
-          var nAt = cur.nAt
-          var n1At = cur.n1At
-          if (dec == 0) {
-            val llr = n1 * C1 + (n - n1) * C0
-            if (llr >= Bound) { dec = 1; nAt = n; n1At = n1 }
-            else if (llr <= -Bound) { dec = 2; nAt = n; n1At = n1 }
-          }
-          cur = SprtState(n, n1, dec, nAt, n1At, Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        val decision = next.decision match {
-          case 1 => "accept_h1"; case 2 => "accept_h0"; case _ => "continue"
-        }
-        (next, Some(SprtOut(key, next.n, next.n1, decision,
-          next.nAt, next.n1At)))
+        val llr = n1 * C1 + (n - n1) * C0
+        if (llr >= Bound) SprtState(n, n1, 1, n, n1)
+        else if (llr <= -Bound) SprtState(n, n1, 2, n, n1)
+        else SprtState(n, n1, 0, cur.nAt, cur.n1At)
       }
-    }
-
-    def update(key: Long, rows: Iterator[SprtEvent],
-        state: GroupState[SprtState]): Iterator[SprtOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(SprtState(0L, 0L, 0, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
+    } { (key, s) =>
+      val decision = s.decision match {
+        case 1 => "accept_h1"; case 2 => "accept_h0"; case _ => "continue"
       }
-      out.iterator
+      SprtOut(key, s.n, s.n1, decision, s.nAt, s.n1At)
     }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[SprtEvent]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
   }
 }

@@ -30,6 +30,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * B106 — one regexp contract for both the batch and streaming forms.
   */
 case class PatEv(user_id: Long, event_id: Long, tsec: Long, ini: String)
+    extends SessionPipeline.Stamped
 case class PatOut(user_id: Long, session_seq: Long, seq: String)
 
 class TwsPatternProcessor(gapS: Long, maxLen: Int)
@@ -63,8 +64,23 @@ class TwsPatternProcessor(gapS: Long, maxLen: Int)
     val sorted = evs.get().toSeq.sortBy(e => (e.tsec, e.event_id))
     val n = (if (seqNo.exists()) seqNo.get() else 0L) + 1L
     seqNo.update(n)
-    evs.clear()
+    persistOpen(openIsFromState = false, hadOpenAtStart = true, Nil)
     PatOut(uid, n, sorted.iterator.map(_.ini).mkString)
+  }
+
+  /** The one place the state list follows the open session — the
+    * invariant "evs holds exactly the events of the open session, and
+    * is empty when `bounds` is" lives here alone. `pending` are the
+    * open session's events from this batch (empty when no session
+    * stays open); `openIsFromState` says its earlier events are already
+    * in the list; `hadOpenAtStart` says the list may be non-empty. The
+    * list is touched at most once by clear and once by appendList (the
+    * round-14 touch pattern below).
+    */
+  private def persistOpen(openIsFromState: Boolean, hadOpenAtStart: Boolean,
+      pending: collection.Seq[PatEv]): Unit = {
+    if (hadOpenAtStart && !openIsFromState) evs.clear()
+    if (pending.nonEmpty) evs.appendList(pending.toArray)
   }
 
   private def guardLen(nEv: Long): Unit =
@@ -141,15 +157,14 @@ class TwsPatternProcessor(gapS: Long, maxLen: Int)
         if (deadlineMs <= timerValues.getCurrentWatermarkInMs()) {
           out += closeNow()
           bounds.clear()
-          if (hadOpenAtStart) evs.clear()
+          persistOpen(openIsFromState = false, hadOpenAtStart, Nil)
         } else {
           bounds.update(st.get)
           deadline.update(deadlineMs)
           getHandle.registerTimer(deadlineMs)
           // persist the open session so the timer path (and the next
           // batch) sees its full event list in state
-          if (!openIsFromState && hadOpenAtStart) evs.clear()
-          if (pending.nonEmpty) evs.appendList(pending.toArray)
+          persistOpen(openIsFromState, hadOpenAtStart, pending)
         }
       case None =>
     }
@@ -172,13 +187,9 @@ object TwsPattern {
     */
   def patterns(events: Dataset[PatEv], gapS: Long, delayS: Long,
       maxLen: Int): Dataset[PatOut] = {
-    import org.apache.spark.sql.functions.{col, timestamp_seconds}
     implicit val outEnc = Encoders.product[PatOut]
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[PatEv](Encoders.product[PatEv])
-      .groupByKey(_.user_id)(Encoders.scalaLong)
+    SessionPipeline.keyedByEventTime(events, delayS)(_.user_id)(
+        Encoders.product[PatEv], Encoders.scalaLong)
       .transformWithState(new TwsPatternProcessor(gapS, maxLen),
         TimeMode.EventTime(), OutputMode.Append(), outEnc)
   }

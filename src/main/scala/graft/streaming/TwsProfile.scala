@@ -149,42 +149,28 @@ class TwsSessionProcessor(gapS: Long) extends StatefulProcessor[
       Encoders.scalaLong, TTLConfig.NONE)
   }
 
-  private def close(uid: Long, s: SessState): SessOut =
-    SessOut(uid, s.startS, s.lastS + gapS, s.nEv, s.sumV)
-
   private def dropTimerIfAny(): Unit =
     if (deadline.exists()) { getHandle.deleteTimer(deadline.get()); deadline.clear() }
 
   override def handleInputRows(key: Long, rows: Iterator[SessEvent],
       timerValues: TimerValues): Iterator[SessOut] = {
     val sorted = rows.toSeq.sortBy(r => (r.tsec, r.event_id))
-    val out = scala.collection.mutable.ArrayBuffer.empty[SessOut]
-    var st = if (sess.exists()) Some(sess.get()) else None
-    sorted.foreach { r =>
-      st match {
-        case None =>
-          st = Some(SessState(r.tsec, r.tsec, 1L, r.value))
-        case Some(s) if r.tsec - s.lastS > gapS =>
-          out += close(key, s)
-          st = Some(SessState(r.tsec, r.tsec, 1L, r.value))
-        case Some(s) =>
-          st = Some(SessState(s.startS, math.max(s.lastS, r.tsec),
-            s.nEv + 1, s.sumV + r.value))
-      }
-    }
-    st.foreach { s =>
+    val (closed, open) = SessionPipeline.sessionStep(
+      if (sess.exists()) Some(sess.get()) else None, sorted, gapS)
+    val expired = open.flatMap { s =>
       val deadlineMs = (s.lastS + gapS) * 1000L
       dropTimerIfAny()
       if (deadlineMs <= timerValues.getCurrentWatermarkInMs()) {
-        out += close(key, s)
         sess.clear()
+        Some(s)
       } else {
         sess.update(s)
         deadline.update(deadlineMs)
         getHandle.registerTimer(deadlineMs)
+        None
       }
     }
-    out.iterator
+    (closed ++ expired).iterator.map(_.close(key, gapS))
   }
 
   override def handleExpiredTimer(key: Long, timerValues: TimerValues,
@@ -193,7 +179,7 @@ class TwsSessionProcessor(gapS: Long) extends StatefulProcessor[
         deadline.get() == expiredTimerInfo.getExpiryTimeInMs()) {
       val s = sess.get()
       sess.clear(); deadline.clear()
-      Iterator.single(close(key, s))
+      Iterator.single(s.close(key, gapS))
     } else Iterator.empty
 }
 
@@ -201,13 +187,9 @@ object TwsSessions {
   /** Same contract as statefulSessionizeEventTime, on the TWS API. */
   def sessionize(events: Dataset[SessionPipeline.SessEvent],
       gapS: Long, delayS: Long): Dataset[SessionPipeline.SessOut] = {
-    import org.apache.spark.sql.functions.{col, timestamp_seconds}
     implicit val outEnc = Encoders.product[SessionPipeline.SessOut]
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[SessionPipeline.SessEvent](Encoders.product[SessionPipeline.SessEvent])
-      .groupByKey(_.user_id)(Encoders.scalaLong)
+    SessionPipeline.keyedByEventTime(events, delayS)(_.user_id)(
+        Encoders.product[SessionPipeline.SessEvent], Encoders.scalaLong)
       .transformWithState(new TwsSessionProcessor(gapS),
         TimeMode.EventTime(), OutputMode.Append(), outEnc)
   }
