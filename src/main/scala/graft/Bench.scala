@@ -519,7 +519,7 @@ object Bench {
     def cloneDocsOrganic(dir: String, copies: Int): Unit = {
       import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max}
       val manifestPath = Paths.get(s"$dir/_graft_manifest.json")
-      val fresh = {
+      val stale = {
         !Files.exists(manifestPath) || {
           val m = Files.readString(manifestPath)
           !m.contains("\"base\":\"" + sfDir + "\"") ||
@@ -527,7 +527,7 @@ object Bench {
             !m.contains("\"perturb\":\"token-rep-inject-8\"")
         } || !Files.exists(Paths.get(s"$dir/documents.parquet/_SUCCESS"))
       }
-      if (!fresh && reuseClones) return
+      if (!stale && reuseClones) return
       val t = spark.read.parquet(s"$sfDir/documents.parquet")
       val shift = t.agg(max(col("doc_id"))).head()
         .get(0).asInstanceOf[Number].longValue() + 1L

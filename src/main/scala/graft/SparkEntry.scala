@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Multimodal
-import graft.queries.{AnalyticsQueries, ApexQueries, CorpusQueries, DedupQueries, ExtendedQueries, FrontierQueries, HorizonQueries, MeridianQueries, PinnacleQueries, PinnacleQueries2, Q, RelationalQueries, SamplingQueries, SessionQueries, StreamingQueries, SummitQueries, TextQueries, VectorQueries, ZenithQueries}
+import graft.queries.{AnalyticsQueries, ApexQueries, CorpusQueries, DedupQueries, ExtendedQueries, FrontierQueries, GraphQueries, HorizonQueries, MeridianQueries, PinnacleQueries, PinnacleQueries2, Q, RelationalQueries, SamplingQueries, SessionQueries, StreamingQueries, SummitQueries, TextQueries, VectorQueries, ZenithQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,7 @@ object SparkEntry {
       AnalyticsQueries.all ++ FrontierQueries.all ++ HorizonQueries.all ++
       SummitQueries.all ++ ZenithQueries.all ++ ApexQueries.all ++
       PinnacleQueries.all ++ PinnacleQueries2.all ++ MeridianQueries.all ++
-      multimodalQueries
+      GraphQueries.all ++ multimodalQueries
 
   /** Flagship: the reference's trip pipeline re-expressed — keyed
     * inactivity sessionization over the event stream.

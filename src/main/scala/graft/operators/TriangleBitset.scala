@@ -85,10 +85,7 @@ object TriangleBitset {
     * dropped edge contributes k = 0 everywhere.
     */
   def edgesWithWitnesses(o: DataFrame, adj: DataFrame): DataFrame =
-    o.join(broadcast(adj.select(col("n").as("_ku"), col("bs").as("_bsu"))),
-        col("src") === col("_ku"))
-      .join(broadcast(adj.select(col("n").as("_kv"), col("bs").as("_bsv"))),
-        col("dst") === col("_kv"))
+    withBitsets(o, adj)
       .select(col("src"), col("dst"),
         BitsetOps.intersectPositions(col("_bsu"), col("_bsv")).as("pos"))
 
@@ -96,12 +93,16 @@ object TriangleBitset {
     * oriented edges — whole-stage-codegen'd, nothing materialized.
     */
   def triangleCount(o: DataFrame, adj: DataFrame): DataFrame =
+    withBitsets(o, adj)
+      .agg(coalesce(sum(BitsetOps.intersectCount(col("_bsu"), col("_bsv"))),
+        lit(0L)).as("n_triangles"))
+
+  /** Oriented edges with both endpoints' out-bitsets (_bsu, _bsv). */
+  private def withBitsets(o: DataFrame, adj: DataFrame): DataFrame =
     o.join(broadcast(adj.select(col("n").as("_ku"), col("bs").as("_bsu"))),
         col("src") === col("_ku"))
       .join(broadcast(adj.select(col("n").as("_kv"), col("bs").as("_bsv"))),
         col("dst") === col("_kv"))
-      .agg(coalesce(sum(BitsetOps.intersectCount(col("_bsu"), col("_bsv"))),
-        lit(0L)).as("n_triangles"))
 
   /** Per-node triangle participation counts (node, tri): one pass
     * over the witnessed edges; contributions (src, k), (dst, k) and

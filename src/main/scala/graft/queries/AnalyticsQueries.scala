@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Warehouse-analytics surface (SURVEY.md §2 B58-B64): SCD2 history
-  * build, graph triangle counting, A/B experiment statistics, rolling
+  * build, A/B experiment statistics, rolling
   * multi-day distinct counts, hierarchy closure, a data-quality audit
   * pass, and incremental aggregate maintenance.
   *
@@ -17,12 +17,6 @@ import org.apache.spark.sql.functions._
   * renders as float in the driver's pandas hash otherwise).
   */
 object AnalyticsQueries {
-
-  // Degree-ordered triangle counting buckets part keys into this many
-  // graph nodes so the two-hop (wedge) intermediate stays tractable
-  // for the DuckDB oracle at sf0.1; the Spark plan is identical at any
-  // modulus.
-  private val TriNodes = 16381
 
   val all: Seq[Q] = Seq(
 
@@ -55,76 +49,6 @@ object AnalyticsQueries {
         .select(col("key"), col("seq"), col("cents"),
           col("v").as("valid_from"), col("valid_to"),
           when(col("valid_to").isNull, 1L).otherwise(0L).as("is_current"))
-    },
-
-    // B59: triangle counting over the part co-occurrence graph (parts
-    // appearing in the same order are connected) — the graph-analytics
-    // primitive behind clustering coefficients and community signals.
-    // Scale plan is the Schank-Wagner degree-ordered orientation:
-    // every undirected edge points from its lower-(degree, id)
-    // endpoint to the higher, so each node's OUT-degree is bounded by
-    // O(sqrt(E)) and the wedge (two-hop) join does O(E^1.5) work
-    // total instead of Σ deg² — the spelling that survives skewed
-    // degree distributions. Every step is a keyed equi-join: pairs
-    // within orders (per-order groups are tiny), distinct edges,
-    // degree attach, wedge join on the shared source, closing-edge
-    // join on the (a, b) endpoint pair.
-    Q("graph_triangles", {
-      val ord = "du.d < dv.d OR (du.d = dv.d AND e.u < e.v)"
-      s"""WITH it AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey % $TriNodes AS node
-         |  FROM lineitem),
-         |e AS (
-         |  SELECT DISTINCT a.node AS u, b.node AS v
-         |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-         |deg AS (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-         |    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-         |  GROUP BY n),
-         |o AS (
-         |  SELECT CASE WHEN $ord THEN e.u ELSE e.v END AS src,
-         |         CASE WHEN $ord THEN e.v ELSE e.u END AS dst,
-         |         CASE WHEN $ord THEN dv.d ELSE du.d END AS ddeg
-         |  FROM e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-         |w AS (
-         |  SELECT x.dst AS a, y.dst AS b FROM o x JOIN o y
-         |  ON x.src = y.src AND (x.ddeg < y.ddeg
-         |    OR (x.ddeg = y.ddeg AND x.dst < y.dst))),
-         |od AS (SELECT src, CAST(count(*) AS BIGINT) AS od FROM o GROUP BY src),
-         |t AS (SELECT count(*) AS nt FROM w JOIN o ON o.src = w.a AND o.dst = w.b)
-         |SELECT
-         |  (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
-         |  (SELECT CAST(coalesce(sum(od * (od - 1) // 2), 0) AS BIGINT) FROM od)
-         |    AS n_wedges,
-         |  (SELECT CAST(nt AS BIGINT) FROM t) AS n_triangles""".stripMargin
-    }) { (s, dir) =>
-      // Round-13 optimization: the O(Σ od²) wedge self-join +
-      // closing join (46M wedge rows at sf0.1, ~3G at ×10) is
-      // replaced by the TriangleBitset kernel — per oriented edge,
-      // popcount(N⁺(src) ∧ N⁺(dst)) against a ≤16,381-row broadcast
-      // bitset adjacency (≈34 MB at FULL saturation — broadcastable
-      // at any SF by construction). Identical count: each triangle
-      // is witnessed exactly once on its (n1,n2) orientation-order
-      // edge. The DuckDB oracle keeps the wedge-join spelling.
-      import graft.operators.TriangleBitset
-      val e = TriangleBitset.coOrderEdges(table(s, dir, "lineitem"))
-        .localCheckpoint() // edges feed 4 consumers — one materialization
-      val deg = TriangleBitset.degrees(e)
-      val o = TriangleBitset.orient(e, deg)
-        .localCheckpoint() // oriented edges feed adjacency + edge scan
-      val adj = TriangleBitset.outBitsets(o)
-        .localCheckpoint() // one bitset build feeds both broadcasts
-      val tri = TriangleBitset.triangleCount(o, adj)
-      // wedge COUNT from out-degrees (Σ od·(od−1)/2) — identical to
-      // counting the wedge rows, without materializing the O(E^1.5)
-      // wedge set a second time for the count alone
-      val nWedges = o.groupBy(col("src")).agg(count(lit(1)).as("od"))
-        .agg(coalesce(sum(expr("od * (od - 1) div 2")), lit(0L)).as("n_wedges"))
-      deg.agg(count(lit(1)).as("n_nodes"))
-        .crossJoin(e.agg(count(lit(1)).as("n_edges")))
-        .crossJoin(nWedges)
-        .crossJoin(tri)
     },
 
     // B60: A/B experiment analysis — per-variant sufficient statistics

@@ -5,10 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-12 wave: multiple-testing correction (BH-FDR over a KS-test
-  * family), partial autocorrelation (Durbin-Levinson), link
-  * prediction (Adamic-Adar), and TextRank keyword extraction —
-  * closing the remaining gaps in the test, forecasting-diagnostic,
-  * graph, and text-analysis families.
+  * family) and partial autocorrelation (Durbin-Levinson) — closing
+  * the remaining gaps in the test and forecasting-diagnostic
+  * families.
   *
   * Shared conventions: exact integer sufficient statistics down to
   * pinned double divisions, 6dp floor form `floor(x*1e6 + 0.5)/1e6`;
@@ -18,12 +17,6 @@ import org.apache.spark.sql.functions._
   * top-k.
   */
 object ApexQueries {
-
-  private val normSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
-  private val toksSql = s"string_split($normSql, ' ')"
-
-  private def sparkToks = split(
-    regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
 
   val all: Seq[Q] = Seq(
 
@@ -1760,116 +1753,6 @@ object ApexQueries {
           col("last_frame"), col("n_frames"), col("total_energy"))
     },
 
-    // B150: GRAPH MODULARITY (Newman & Girvan 2004) of the B100
-    // label-propagation communities on the part co-order projection
-    // — the quality score that tells you whether the communities the
-    // engine found MEAN anything (Q ≈ 0 = no better than random
-    // wiring; the measurement B100 ships without). Exact spelling:
-    // the B100 two-round deterministic label prop verbatim (max_by
-    // on (cnt·2⁴¹ − lbl) — the documented deterministic tiebreak),
-    // then Q = Σ_c (4m·e_c − d_c²) / (4m²) with m = |E|, e_c =
-    // intra-community edges, d_c = community degree sums — the whole
-    // numerator is ONE exact integer (4m·e_c ≤ 4m² ≈ 7·10¹⁶ at the
-    // LpNodes-capped projection — inside BIGINT at any clone scale
-    // since the projection densifies rather than grows), ONE double
-    // division, 6dp floor. Top-10 communities by size emitted with
-    // the global Q attached. Scale shape: the B100 plan (two keyed
-    // join+agg rounds over the adjacency) + two edge-grain label
-    // joins + model-sized community rollups.
-    Q("graph_modularity", {
-      val pick = "CAST(arg_max(nlbl, CAST(cnt * 2199023255552 - nlbl AS BIGINT)) AS BIGINT)"
-      s"""WITH it AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-         |  FROM lineitem),
-         |e AS (
-         |  SELECT DISTINCT a.node AS u, b.node AS v
-         |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v AS node, u AS nbr FROM e),
-         |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
-         |c1 AS (SELECT a.node, l.lbl AS nlbl, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM adj a JOIN l0 l ON a.nbr = l.node GROUP BY 1, 2),
-         |l1 AS (SELECT node, $pick AS lbl FROM c1 GROUP BY node),
-         |c2 AS (SELECT a.node, l.lbl AS nlbl, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM adj a JOIN l1 l ON a.nbr = l.node GROUP BY 1, 2),
-         |l2 AS (SELECT node, $pick AS lbl FROM c2 GROUP BY node),
-         |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-         |ec AS (
-         |  SELECT lu.lbl, CAST(count(*) AS BIGINT) AS e_c
-         |  FROM e JOIN l2 lu ON e.u = lu.node JOIN l2 lv ON e.v = lv.node
-         |  WHERE lu.lbl = lv.lbl GROUP BY lu.lbl),
-         |deg AS (
-         |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY node),
-         |dc AS (
-         |  SELECT l2.lbl, CAST(sum(deg.d) AS BIGINT) AS d_c,
-         |    CAST(count(*) AS BIGINT) AS n_nodes
-         |  FROM l2 JOIN deg ON deg.node = l2.node GROUP BY l2.lbl),
-         |q AS (
-         |  SELECT floor(CAST(sum(4 * m.m * coalesce(ec.e_c, 0)
-         |      - CAST(dc.d_c AS HUGEINT) * dc.d_c) AS DOUBLE)
-         |    / CAST(4 * CAST(max(m.m) AS HUGEINT) * max(m.m) AS DOUBLE)
-         |    * 1000000 + 0.5) / 1000000 AS q_mod
-         |  FROM dc LEFT JOIN ec USING (lbl), m),
-         |top AS (
-         |  SELECT dc.lbl, dc.n_nodes, coalesce(ec.e_c, 0) AS intra_edges,
-         |    dc.d_c AS degree_sum,
-         |    CAST(row_number() OVER (ORDER BY dc.n_nodes DESC, dc.lbl)
-         |      AS BIGINT) AS rnk
-         |  FROM dc LEFT JOIN ec USING (lbl))
-         |SELECT rnk, lbl AS community, n_nodes, intra_edges, degree_sum,
-         |  q.q_mod AS q_modularity
-         |FROM top, q WHERE rnk <= 10""".stripMargin
-    }) { (s, dir) =>
-      val it = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % 16381).as("node")).distinct()
-      val e = it.select(col("ok"), col("node").as("u"))
-        .join(it.select(col("ok"), col("node").as("v")), Seq("ok"))
-        .filter(col("u") < col("v"))
-        .select(col("u"), col("v")).distinct()
-        .localCheckpoint() // feeds adjacency, m, and both label joins
-      val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-        .unionByName(e.select(col("v").as("node"), col("u").as("nbr")))
-      val l0 = adj.select(col("node")).distinct()
-        .withColumn("lbl", col("node"))
-      def round(lbls: org.apache.spark.sql.DataFrame) = adj
-        .join(lbls.select(col("node").as("nbr"), col("lbl").as("nlbl")),
-          Seq("nbr"))
-        .groupBy(col("node"), col("nlbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("node"))
-        .agg(max_by(col("nlbl"),
-          (col("cnt") * 2199023255552L - col("nlbl")).cast("long")).as("lbl"))
-      val l2 = round(round(l0)).localCheckpoint() // three consumers
-      val m = e.agg(count(lit(1)).as("m"))
-      val ec = e
-        .join(l2.select(col("node").as("u"), col("lbl").as("lu")), Seq("u"))
-        .join(l2.select(col("node").as("v"), col("lbl").as("lv")), Seq("v"))
-        .filter(col("lu") === col("lv"))
-        .groupBy(col("lu").as("lbl")).agg(count(lit(1)).as("e_c"))
-      val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val dc = l2.join(deg, Seq("node"))
-        .groupBy(col("lbl"))
-        .agg(sum(col("d")).as("d_c"), count(lit(1)).as("n_nodes"))
-        .join(ec, Seq("lbl"), "left")
-        .select(col("lbl"), col("d_c"), col("n_nodes"),
-          coalesce(col("e_c"), lit(0L)).as("e_c"))
-        .localCheckpoint() // feeds Q and the top-10
-      val q = dc.crossJoin(broadcast(m))
-        .agg((floor(sum(col("m") * col("e_c") * 4
-            - col("d_c").cast("decimal(38,0)") * col("d_c")).cast("double")
-          / (max(col("m")).cast("decimal(38,0)") * max(col("m")) * 4)
-            .cast("double")
-          * 1000000 + lit(0.5)) / 1000000).as("q_mod"))
-      dc.orderBy(col("n_nodes").desc, col("lbl")).limit(10)
-        .withColumn("rnk", row_number().over(
-          Window.orderBy(col("n_nodes").desc, col("lbl"))).cast("long"))
-        .crossJoin(broadcast(q))
-        .select(col("rnk"), col("lbl").as("community"), col("n_nodes"),
-          col("e_c").as("intra_edges"), col("d_c").as("degree_sum"),
-          col("q_mod").as("q_modularity"))
-    },
-
     // B151: Q-Q DECILE SHIFT TABLE (Wilk & Gnanadesikan Biometrika
     // 1968's Q-Q plot as a table) between purchase and view values —
     // the WHERE-did-the-distribution-move diagnostic the scalar
@@ -1910,202 +1793,6 @@ object ApexQueries {
         .join(melt("view", "q_view"), Seq("decile"))
         .select(col("decile"), col("q_purchase"), col("q_view"),
           (col("q_purchase") - col("q_view")).as("shift"))
-    },
-
-    // B139: ADAMIC-ADAR LINK PREDICTION (Adamic & Adar Soc. Netw.
-    // 2003; Liben-Nowell & Kleinberg CIKM'03) over the part co-order
-    // projection (the B135 edge build) — for NON-adjacent pairs
-    // sharing neighbors, AA(u,w) = Σ_{v ∈ N(u)∩N(w)} 1/ln(d_v): the
-    // standard common-neighbor score that down-weights promiscuous
-    // hubs, the baseline every graph-ML recommender is measured
-    // against. Exactness: each center's 1/ln(d_v) is quantized to
-    // the exact 1e-6 grid (C34/B133 convention — d ≥ 2 so ln ≥ ln 2),
-    // so per-pair AA sums are order-independent BIGINT arithmetic
-    // and the (aa_e6 DESC, u, w) top-20 total order is exact.
-    // Scale shape: wedges enumerate per CENTER with the degree cap
-    // d ≤ 64 (hub suppression — a d-degree center contributes
-    // (d choose 2) wedges but only 1/ln(d) → 0 score each; capping
-    // hubs is the standard production concession, stated in the
-    // contract, and bounds wedge count at 2016/center = O(V)); the
-    // existing-edge exclusion is one anti-join on the (u<w)-oriented
-    // edge set; top-20 via TakeOrderedAndProject, never a global sort.
-    Q("graph_adamic_adar",
-      """WITH it AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT a.node AS u, b.node AS v
-        |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-        |deg AS (
-        |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-        |    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-        |  GROUP BY n),
-        |adj AS (
-        |  SELECT u AS ctr, v AS nbr FROM e
-        |  UNION ALL SELECT v, u FROM e),
-        |ctr AS (
-        |  SELECT adj.ctr, adj.nbr,
-        |    CAST(floor(1000000.0 / ln(CAST(deg.d AS DOUBLE)) + 0.5)
-        |      AS BIGINT) AS term_e6
-        |  FROM adj JOIN deg ON deg.n = adj.ctr
-        |  WHERE deg.d BETWEEN 2 AND 64),
-        |wedge AS (
-        |  SELECT a.nbr AS u, b.nbr AS w, a.term_e6
-        |  FROM ctr a JOIN ctr b ON a.ctr = b.ctr AND a.nbr < b.nbr),
-        |cand AS (
-        |  SELECT u, w, CAST(count(*) AS BIGINT) AS n_common,
-        |    CAST(sum(term_e6) AS BIGINT) AS aa_e6
-        |  FROM wedge GROUP BY u, w),
-        |nonadj AS (
-        |  SELECT c.* FROM cand c
-        |  LEFT JOIN e ON e.u = c.u AND e.v = c.w
-        |  WHERE e.u IS NULL),
-        |top AS (
-        |  SELECT u, w, n_common, aa_e6,
-        |    CAST(row_number() OVER (ORDER BY aa_e6 DESC, u, w) AS BIGINT)
-        |      AS rnk
-        |  FROM nonadj)
-        |SELECT rnk, u, w, n_common,
-        |  CAST(aa_e6 AS DOUBLE) / 1000000 AS adamic_adar
-        |FROM top WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val items = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % 16381).as("node"))
-        .distinct()
-      val e = items.as("a").join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-        .select(col("a.node").as("u"), col("b.node").as("v"))
-        .distinct()
-        .localCheckpoint() // edges feed degrees, adjacency, exclusion
-      val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val adj = e.select(col("u").as("ctr"), col("v").as("nbr"))
-        .unionAll(e.select(col("v").as("ctr"), col("u").as("nbr")))
-      val ctr = adj.join(deg.withColumnRenamed("n", "ctr"), Seq("ctr"))
-        .filter(col("d").between(2, 64))
-        .select(col("ctr"), col("nbr"),
-          floor(lit(1000000.0) / log(col("d").cast("double")) + lit(0.5))
-            .cast("long").as("term_e6"))
-        .localCheckpoint() // both sides of the wedge self-join
-      // Round-13 optimization (guide §2.4): wedges enumerate IN-ROW
-      // from each center's collected (≤64, degree-capped) neighbor
-      // list — one keyed groupBy replaces the r12 center self-join;
-      // term_e6 is a per-CENTER constant, carried via first(). Same
-      // (u < w, term) multiset: pairs of a sorted distinct array.
-      val wedge = ctr.groupBy(col("ctr"))
-        .agg(sort_array(collect_list(col("nbr"))).as("ns"),
-          first(col("term_e6")).as("term_e6"))
-        .select(col("term_e6"), explode(expr(
-          """flatten(transform(ns, (x, i) ->
-            |  transform(slice(ns, i + 2, size(ns)),
-            |    y -> struct(x AS u, y AS w))))""".stripMargin)).as("p"))
-        .select(col("p.u").as("u"), col("p.w").as("w"), col("term_e6"))
-      val cand = wedge.groupBy(col("u"), col("w"))
-        .agg(count(lit(1)).as("n_common"), sum(col("term_e6")).as("aa_e6"))
-      // existing-edge exclusion: composite-key left_anti on the
-      // (u < w)-oriented edge set (wedge pairs carry the same order)
-      val nonadj = cand.join(e.withColumnRenamed("v", "w"), Seq("u", "w"),
-        "left_anti")
-      nonadj
-        .orderBy(col("aa_e6").desc, col("u"), col("w")).limit(20)
-        .withColumn("rnk", row_number().over(
-          Window.orderBy(col("aa_e6").desc, col("u"), col("w"))).cast("long"))
-        .select(col("rnk"), col("u"), col("w"), col("n_common"),
-          (col("aa_e6").cast("double") / 1000000).as("adamic_adar"))
-    },
-
-    // C116: TEXTRANK KEYWORD EXTRACTION (Mihalcea & Tarau EMNLP 2004)
-    // — corpus-level keywords as PageRank over the word co-occurrence
-    // graph (adjacent-token pairs; vocabulary restricted to tokens
-    // with corpus frequency ≥ 5): the unsupervised keyword/labeling
-    // pass of a curation pipeline, and the graph-reuse proof that the
-    // B52 integer PageRank runs on ARBITRARY node domains (words,
-    // not keys). Two fixed iterations in exact PICO units (init
-    // 1e12 div N, damping 85, teleport derived — the B52/B118
-    // spelling), so both engines replay the arithmetic closed-form
-    // with NO floating point; top-20 by (pr DESC, word). Scale
-    // shape: the bigram explode is one token-scan pass; the edge set
-    // collapses to DISTINCT vocab-grain pairs (Heaps-bounded); each
-    // PageRank round is one keyed join + map-side-combined sum,
-    // O(edges); ranks never on the driver; top-20 via
-    // TakeOrderedAndProject.
-    Q("textrank_keywords", {
-      def iterCte(prev: String): String =
-        s"""SELECT nodes.node,
-           |    CAST(150000000000 // (SELECT n FROM params)
-           |      + (85 * coalesce(m.in_mass, 0)) // 100 AS BIGINT) AS pr
-           |  FROM nodes LEFT JOIN (
-           |    SELECT e.dst AS node, sum(p.pr // o.outdeg) AS in_mass
-           |    FROM $prev p
-           |    JOIN edges e ON p.node = e.src
-           |    JOIN outdeg o ON e.src = o.src
-           |    GROUP BY e.dst) m ON nodes.node = m.node""".stripMargin
-      s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
-         |uni AS (
-         |  SELECT unnest(toks) AS w FROM t),
-         |vocab AS (
-         |  SELECT w FROM uni WHERE w <> ''
-         |  GROUP BY w HAVING count(*) >= 5),
-         |big AS (
-         |  SELECT unnest(list_transform(range(1, len(toks)),
-         |    i -> struct_pack(a := toks[CAST(i AS INT)],
-         |                     b := toks[CAST(i + 1 AS INT)]))) AS p
-         |  FROM t WHERE len(toks) >= 2),
-         |pairs AS (
-         |  SELECT DISTINCT least(p.a, p.b) AS wa, greatest(p.a, p.b) AS wb
-         |  FROM big
-         |  WHERE p.a <> p.b AND p.a <> '' AND p.b <> ''
-         |    AND p.a IN (SELECT w FROM vocab)
-         |    AND p.b IN (SELECT w FROM vocab)),
-         |edges AS (
-         |  SELECT wa AS src, wb AS dst FROM pairs
-         |  UNION ALL SELECT wb, wa FROM pairs),
-         |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |params AS (SELECT count(*) AS n FROM nodes),
-         |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-         |pr0 AS (
-         |  SELECT node,
-         |    CAST(1000000000000 // (SELECT n FROM params) AS BIGINT) AS pr
-         |  FROM nodes),
-         |it1 AS (${iterCte("pr0")}),
-         |it2 AS (${iterCte("it1")}),
-         |r AS (
-         |  SELECT node AS keyword, pr AS pr_pico,
-         |    CAST(row_number() OVER (ORDER BY pr DESC, node) AS BIGINT)
-         |      AS rnk
-         |  FROM it2)
-         |SELECT rnk, keyword, pr_pico FROM r WHERE rnk <= 20""".stripMargin
-    }) { (s, dir) =>
-      val t = table(s, dir, "documents").select(sparkToks.as("toks"))
-        .localCheckpoint() // feeds the unigram count and the bigram explode
-      val vocab = t.select(explode(col("toks")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-        .filter(col("freq") >= 5)
-        .select(col("w"))
-      val big = t.filter(size(col("toks")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(toks) - 1),
-            |  i -> struct(element_at(toks, i) AS a,
-            |              element_at(toks, i + 1) AS b))""".stripMargin))
-          .as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .filter(col("a") =!= col("b") && col("a") =!= "" && col("b") =!= "")
-      val pairs = big
-        .join(vocab.withColumnRenamed("w", "a"), Seq("a"), "left_semi")
-        .join(vocab.withColumnRenamed("w", "b"), Seq("b"), "left_semi")
-        .select(least(col("a"), col("b")).as("wa"),
-          greatest(col("a"), col("b")).as("wb"))
-        .distinct()
-      val edges = pairs.select(col("wa").as("src"), col("wb").as("dst"))
-        .unionByName(pairs.select(col("wb").as("src"), col("wa").as("dst")))
-      graft.operators.PageRank.run(edges, "src", "dst", iterations = 2,
-          unit = 1000000000000L)
-        .orderBy(col("pr_unit").desc, col("node")).limit(20)
-        .withColumn("rnk", row_number().over(
-          Window.orderBy(col("pr_unit").desc, col("node"))).cast("long"))
-        .select(col("rnk"), col("node").as("keyword"),
-          col("pr_unit").as("pr_pico"))
     },
 
     // B142: KRUSKAL-WALLIS H TEST (Kruskal & Wallis JASA 1952) of

@@ -208,136 +208,6 @@ object ExtendedQueries {
       }.reduce(_ unionByName _)
     },
 
-    // B52: iterative PageRank over the customer↔supplier trade graph
-    // (who-matters ranking, the companion to dedup_clusters'
-    // connected components). Node ids: custkey*2 / suppkey*2+1 keeps
-    // the two key spaces disjoint in one LONG domain. All rank
-    // arithmetic is exact-integer micro-units (init 1e6 div N,
-    // contribution pr div outdeg, damping (85·Σ) div 100 + teleport
-    // 150000 div N) — order-independent integer sums and identical
-    // floor division in both engines make the two fixed iterations
-    // replayable closed-form, the kmeans_iterations convention
-    // without even needing decimal rounding.
-    // Units are PICO (1e12 = mass 1) as of round 10: the ×100 trade
-    // clone carries 1.6M nodes, where the original micro units floor
-    // BOTH the init share (1e6 div n = 0) and the teleport to 0 and
-    // every rank silently decays — found by the round-10 scale probe.
-    Q("graph_pagerank", {
-      def iterCte(prev: String): String =
-        s"""SELECT nodes.node,
-           |    CAST(150000000000 // (SELECT n FROM params)
-           |      + (85 * coalesce(m.in_mass, 0)) // 100 AS BIGINT) AS pr
-           |  FROM nodes LEFT JOIN (
-           |    SELECT e.dst AS node, sum(p.pr // o.outdeg) AS in_mass
-           |    FROM $prev p
-           |    JOIN edges e ON p.node = e.src
-           |    JOIN outdeg o ON e.src = o.src
-           |    GROUP BY e.dst) m ON nodes.node = m.node""".stripMargin
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT cn AS src, sn AS dst FROM pairs
-         |  UNION ALL SELECT sn, cn FROM pairs),
-         |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         |params AS (SELECT count(*) AS n FROM nodes),
-         |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-         |pr0 AS (
-         |  SELECT node,
-         |    CAST(1000000000000 // (SELECT n FROM params) AS BIGINT) AS pr
-         |  FROM nodes),
-         |it1 AS (${iterCte("pr0")}),
-         |it2 AS (${iterCte("it1")})
-         |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-         |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS entity,
-         |  pr AS pr_pico
-         |FROM it2 ORDER BY pr DESC, entity LIMIT 20""".stripMargin
-    }) { (s, dir) =>
-      val pairs = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(table(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionByName(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-      graft.operators.PageRank.run(edges, "src", "dst", iterations = 2,
-          unit = 1000000000000L)
-        .select(
-          concat(
-            when(col("node") % 2 === 0, lit("c")).otherwise(lit("s")),
-            expr("node DIV 2").cast("string")).as("entity"),
-          col("pr_unit").as("pr_pico"))
-        .orderBy(col("pr_pico").desc, col("entity")).limit(20)
-    },
-
-    // B107: HITS hubs & authorities (Kleinberg 1999) — PageRank's
-    // sibling for BIPARTITE intent: on the customer→supplier trade
-    // graph, hub scores rank customers by how much they buy from
-    // authoritative suppliers and authority scores rank suppliers by
-    // how much authoritative buyers buy from them — the mutual
-    // reinforcement PageRank's single score can't express. Two full
-    // HITS iterations with L1 normalization (not the textbook L2:
-    // an L1 step is sum-then-integer-scale, EXACT in micro units —
-    // (raw · 1e6) DIV Σraw — where an L2 sqrt would need a rounding
-    // contract; the ranking is identical since L1/L2 differ by a
-    // positive global factor). Scale shape: per iteration ONE keyed
-    // join + map-side-combined sum over the edge list (O(edges)),
-    // the global Σ a broadcast single-row crossJoin (the PMI nb
-    // precedent); node state never on the driver; top-20s via
-    // TakeOrderedAndProject. Sums fit BIGINT to ~9e9 trading
-    // customers (HUGEINT in the oracle; ANSI overflow is loud).
-    Q("graph_hits", {
-      def scaleCte(raw: String, key: String, out: String): String =
-        s"""SELECT $key, CAST((r * 1000000) // (SELECT sum(r) FROM $raw) AS BIGINT) AS $out
-           |  FROM $raw""".stripMargin
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |custs AS (SELECT DISTINCT c FROM pairs),
-         |h0 AS (
-         |  SELECT c, CAST(1000000 // (SELECT count(*) FROM custs) AS BIGINT) AS h
-         |  FROM custs),
-         |a1r AS (SELECT p.s, CAST(sum(h.h) AS HUGEINT) AS r
-         |        FROM pairs p JOIN h0 h USING (c) GROUP BY p.s),
-         |a1 AS (${scaleCte("a1r", "s", "a")}),
-         |h1r AS (SELECT p.c, CAST(sum(a.a) AS HUGEINT) AS r
-         |        FROM pairs p JOIN a1 a USING (s) GROUP BY p.c),
-         |h1 AS (${scaleCte("h1r", "c", "h")}),
-         |a2r AS (SELECT p.s, CAST(sum(h.h) AS HUGEINT) AS r
-         |        FROM pairs p JOIN h1 h USING (c) GROUP BY p.s),
-         |a2 AS (${scaleCte("a2r", "s", "a")}),
-         |h2r AS (SELECT p.c, CAST(sum(a.a) AS HUGEINT) AS r
-         |        FROM pairs p JOIN a2 a USING (s) GROUP BY p.c),
-         |h2 AS (${scaleCte("h2r", "c", "h")})
-         |SELECT kind, entity, score_micro FROM (
-         |  SELECT 'hub' AS kind, 'c' || CAST(c AS VARCHAR) AS entity, h AS score_micro,
-         |    row_number() OVER (ORDER BY h DESC, c) AS rn FROM h2
-         |  UNION ALL
-         |  SELECT 'auth', 's' || CAST(s AS VARCHAR), a,
-         |    row_number() OVER (ORDER BY a DESC, s) FROM a2)
-         |WHERE rn <= 20""".stripMargin
-    }) { (s, dir) =>
-      val pairs = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(table(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-        .localCheckpoint() // 4 half-iterations ride one edge build
-      val (h2, a2) = graft.operators.Hits.iterate(pairs, "c", "s", iters = 2)
-      // tie-break on the NUMERIC key (the oracle's ORDER BY ... , c)
-      val hubs = h2.orderBy(col("h").desc, col("c")).limit(20)
-        .select(lit("hub").as("kind"),
-          concat(lit("c"), col("c").cast("string")).as("entity"),
-          col("h").as("score_micro"))
-      val auths = a2.orderBy(col("a").desc, col("s")).limit(20)
-        .select(lit("auth").as("kind"),
-          concat(lit("s"), col("s").cast("string")).as("entity"),
-          col("a").as("score_micro"))
-      hubs.unionByName(auths)
-    },
-
     // B20: exact interpolated percentiles (both engines: linear
     // interpolation over the sorted set).
     Q("exact_percentiles",
@@ -1891,88 +1761,6 @@ object ExtendedQueries {
         .select(col("user_id"), col("n_events"),
           col("st.n_kept").as("n_kept"),
           col("st.idsum").as("kept_id_sum"))
-    },
-
-    // B118: PERSONALIZED PAGERANK (Page et al. 1999 §6 / Jeh & Widom
-    // 2003) — the teleport returns to a SEED set (customers of
-    // nation 0), so ranks measure proximity TO THE SEEDS over the
-    // customer↔supplier trade graph: "which suppliers matter to THIS
-    // cohort", the recommendation / similar-entities primitive B52's
-    // single global score cannot express. Same exact-integer
-    // micro-unit replay as B52 (init 1e6 div |S| on seeds, teleport
-    // 150000 div |S| on seeds else 0, damping (85·Σ) div 100 — all
-    // floor divisions of non-negative integers, closed-form in the
-    // oracle, no rounding contract needed); two iterations. Scale
-    // shape = B52: seed flag folded into the checkpointed node
-    // table, one keyed join + map-side-combined sum per round,
-    // O(edges), node state never on the driver; top-20 via
-    // TakeOrderedAndProject.
-    // Pico units (1e12 = mass 1) as of round 10 — see graph_pagerank.
-    Q("graph_ppr", {
-      def iterCte(prev: String): String =
-        s"""SELECT nodes.node, nodes.is_seed,
-           |    CAST(CASE WHEN nodes.is_seed
-           |           THEN 150000000000 // (SELECT ns FROM params) ELSE 0 END
-           |      + (85 * coalesce(m.in_mass, 0)) // 100 AS BIGINT) AS pr
-           |  FROM nodes LEFT JOIN (
-           |    SELECT e.dst AS node, sum(p.pr // o.outdeg) AS in_mass
-           |    FROM $prev p
-           |    JOIN edges e ON p.node = e.src
-           |    JOIN outdeg o ON e.src = o.src
-           |    GROUP BY e.dst) m ON nodes.node = m.node""".stripMargin
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT cn AS src, sn AS dst FROM pairs
-         |  UNION ALL SELECT sn, cn FROM pairs),
-         |seeds AS (
-         |  SELECT DISTINCT c_custkey * 2 AS node FROM customer
-         |  WHERE c_nationkey = 0),
-         |nodes AS (
-         |  SELECT n.node, s.node IS NOT NULL AS is_seed
-         |  FROM (SELECT src AS node FROM edges
-         |        UNION SELECT dst FROM edges) n
-         |  LEFT JOIN seeds s ON n.node = s.node),
-         |params AS (SELECT count(*) AS ns FROM nodes WHERE is_seed),
-         |outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-         |pr0 AS (
-         |  SELECT node, is_seed,
-         |    CAST(CASE WHEN is_seed
-         |      THEN 1000000000000 // (SELECT ns FROM params) ELSE 0 END
-         |      AS BIGINT) AS pr
-         |  FROM nodes),
-         |it1 AS (${iterCte("pr0")}),
-         |it2 AS (${iterCte("it1")})
-         |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-         |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS entity,
-         |  CAST(is_seed AS INT) AS is_seed, pr AS ppr_pico
-         |FROM it2 WHERE pr > 0 ORDER BY pr DESC, entity LIMIT 20""".stripMargin
-    }) { (s, dir) =>
-      val pairs = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(table(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("cn"),
-          (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionByName(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-      val seeds = table(s, dir, "customer")
-        .filter(col("c_nationkey") === 0)
-        .select((col("c_custkey") * 2).as("node"))
-      graft.operators.PageRank
-        .runPersonalized(edges, "src", "dst", seeds, iterations = 2,
-          unit = 1000000000000L)
-        .filter(col("ppr_unit") > 0)
-        .select(
-          concat(
-            when(col("node") % 2 === 0, lit("c")).otherwise(lit("s")),
-            expr("node DIV 2").cast("string")).as("entity"),
-          col("is_seed").cast("int").as("is_seed"),
-          col("ppr_unit").as("ppr_pico"))
-        .orderBy(col("ppr_pico").desc, col("entity")).limit(20)
     },
 
     // B117: KENDALL TAU-B rank correlation (Kendall 1938) per user —

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** Round-9 additions (SURVEY.md §2 B79-B85, C58-C64): marketing
   * attribution, interval-overlap join, bitmap exact-distinct, HLL
   * sketch-column rollup, corpus token drift, diversity sampling,
-  * perceptual-hash near-dup, k-core peeling, incremental join
+  * perceptual-hash near-dup, incremental join
   * maintenance, Heaps-law curve, ordered-set aggregates, incremental
   * dedup, and quantile length trim.
   *
@@ -805,75 +805,6 @@ object FrontierQueries {
         .filter(col("n_shared") >= 2)
     },
 
-    // B83: K-CORE PEELING (two rounds of the degeneracy peel at
-    // k = 64 over the part co-occurrence graph) — the graph-analytics
-    // density primitive behind community cores and spam-cluster
-    // mining. Each round is keyed relational algebra only: degree agg
-    // → threshold filter → anti-join both edge endpoints; rounds are
-    // a CONSTANT (2 here), so the oracle replays them closed-form —
-    // the kmeans_iterations convention for iterative operators. A
-    // survivor whose neighbors were all peeled has degree 0 next
-    // round (the left-join coalesce, not a dropped row).
-    Q("graph_kcore", {
-      val n = 16381 // same node bucketing as graph_triangles
-      val k = 64
-      s"""WITH it AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey % $n AS node FROM lineitem),
-         |e0 AS (
-         |  SELECT DISTINCT a.node AS u, b.node AS v
-         |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-         |d0 AS (SELECT node, CAST(count(*) AS BIGINT) AS d
-         |       FROM (SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)
-         |       GROUP BY node),
-         |r1 AS (SELECT node FROM d0 WHERE d < $k),
-         |s1 AS (SELECT node FROM d0 WHERE d >= $k),
-         |e1 AS (SELECT u, v FROM e0
-         |       WHERE u IN (SELECT node FROM s1) AND v IN (SELECT node FROM s1)),
-         |d1 AS (SELECT node, CAST(count(*) AS BIGINT) AS d
-         |       FROM (SELECT u AS node FROM e1 UNION ALL SELECT v FROM e1)
-         |       GROUP BY node),
-         |d1c AS (SELECT s1.node, coalesce(d1.d, 0) AS d
-         |        FROM s1 LEFT JOIN d1 USING (node)),
-         |r2 AS (SELECT node FROM d1c WHERE d < $k)
-         |SELECT CAST(1 AS INT) AS round,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM d0) AS n_nodes,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM r1) AS n_removed
-         |UNION ALL SELECT 2,
-         |  (SELECT count(*) FROM s1),
-         |  (SELECT count(*) FROM e1),
-         |  (SELECT count(*) FROM r2)""".stripMargin
-    }) { (s, dir) =>
-      val n = 16381
-      val k = 64
-      val it = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), (col("l_partkey") % n).as("node"))
-        .distinct()
-      val e0 = it.as("a").join(it.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-        .select(col("a.node").as("u"), col("b.node").as("v")).distinct()
-        .localCheckpoint() // the peel reuses the edge set twice
-      def degrees(e: DataFrame): DataFrame =
-        e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      val d0 = degrees(e0).localCheckpoint()
-      val s1 = d0.filter(col("d") >= k).select(col("node"))
-      val e1 = e0
-        .join(s1.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(s1.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint()
-      val d1c = s1.join(degrees(e1), Seq("node"), "left")
-        .select(col("node"), coalesce(col("d"), lit(0L)).as("d"))
-      val row1 = Seq((1, d0.count(), e0.count(),
-        d0.filter(col("d") < k).count()))
-      val row2 = Seq((2, s1.count(), e1.count(),
-        d1c.filter(col("d") < k).count()))
-      import s.implicits._
-      (row1 ++ row2).toDF("round", "n_nodes", "n_edges", "n_removed")
-        .select(col("round").cast("int"), col("n_nodes"), col("n_edges"),
-          col("n_removed"))
-    },
-
     // B84: INCREMENTAL JOIN MAINTENANCE — the delta-join identity
     // (A ∪ ΔA) ⋈ (B ∪ ΔB) = A⋈B ∪ ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB that lets a
     // materialized join view absorb new data by joining ONLY the
@@ -1547,62 +1478,6 @@ object FrontierQueries {
         .agg(count(col("pid")).as("n_overlap"))
         .select(col("query_id"), lit(10).as("k"), col("n_overlap"),
           (col("n_overlap").cast("double") / 10.0).as("recall"))
-    },
-
-    // B89: MIN-PLUS 2-HOP CHEAPEST PATH — shortest paths as keyed
-    // relational algebra over the (min, +) semiring: one self-join on
-    // the shared midpoint IS one min-plus matrix multiply, so k-hop
-    // reachability costs are ⌈log₂ k⌉ squarings (the pointer-doubling
-    // argument hierarchy_rollup already uses for parent chains). Here:
-    // cheapest ≤ 2-hop cost from 5 source nodes over the part
-    // co-occurrence graph, edge weight = the cheapest co-occurrence
-    // (min summed line cents) — every step a keyed join + combinable
-    // min, all-integer costs.
-    Q("graph_minplus_2hop", {
-      val n = 16381
-      s"""WITH li AS (
-         |  SELECT l_orderkey AS ok, l_partkey % $n AS node,
-         |    CAST(floor(l_extendedprice * 100) AS BIGINT) AS cents
-         |  FROM lineitem),
-         |ln AS (SELECT ok, node, min(cents) AS cents FROM li GROUP BY ok, node),
-         |e0 AS (
-         |  SELECT a.node AS u, b.node AS v, min(a.cents + b.cents) AS w
-         |  FROM ln a JOIN ln b ON a.ok = b.ok AND a.node <> b.node
-         |  GROUP BY a.node, b.node),
-         |src AS (SELECT u, v, w FROM e0 WHERE u < 5),
-         |hop2 AS (
-         |  SELECT s.u, e.v, min(s.w + e.w) AS w
-         |  FROM src s JOIN e0 e ON s.v = e.u
-         |  WHERE e.v <> s.u GROUP BY s.u, e.v),
-         |best AS (
-         |  SELECT u, v, min(w) AS best_cents FROM (
-         |    SELECT u, v, w FROM src UNION ALL SELECT u, v, w FROM hop2)
-         |  GROUP BY u, v)
-         |SELECT u AS src, v AS dst, best_cents FROM best""".stripMargin
-    }) { (s, dir) =>
-      val n = 16381
-      val ln = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), (col("l_partkey") % n).as("node"),
-          floor(col("l_extendedprice") * 100).cast("long").as("cents"))
-        .groupBy(col("ok"), col("node")).agg(min(col("cents")).as("cents"))
-      val e0 = ln.as("a").join(ln.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") =!= col("b.node"))
-        .groupBy(col("a.node").as("u"), col("b.node").as("v"))
-        .agg(min(col("a.cents") + col("b.cents")).as("w"))
-        .localCheckpoint() // reused by the source slice and the hop join
-      val src = e0.filter(col("u") < 5)
-      // Round-13 optimization (guide §3.1): the source slice is ≤ 5
-      // nodes' out-edges (≤ ~5·16,381 rows by construction) —
-      // broadcast it so the full edge table never shuffles.
-      val hop2 = e0.select(col("u").as("mid"), col("v"), col("w").as("w2"))
-        .join(broadcast(src.select(col("u"), col("v").as("mid"),
-          col("w").as("w1"))), Seq("mid"))
-        .filter(col("v") =!= col("u"))
-        .groupBy(col("u"), col("v")).agg(min(col("w1") + col("w2")).as("w"))
-      src.select(col("u"), col("v"), col("w"))
-        .unionAll(hop2.select(col("u"), col("v"), col("w")))
-        .groupBy(col("u"), col("v")).agg(min(col("w")).as("best_cents"))
-        .select(col("u").as("src"), col("v").as("dst"), col("best_cents"))
     },
 
     // B90: CONVERSION SURVIVAL CURVE — per signup-week cohort, how

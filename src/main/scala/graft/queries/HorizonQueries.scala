@@ -43,10 +43,6 @@ object HorizonQueries {
   // attribution lookback (seconds) for the multi-touch credit split
   private val LookbackS = 3600L
 
-  // label-propagation node-space fold (the graph_triangles modulus —
-  // keeps the co-purchase graph connected enough to propagate)
-  private val LpNodes = 16381
-
   // Shared Cramer solve for the 2-feature OLS: ONE formula string,
   // parsed by both Spark and DuckDB, so the double arithmetic runs in
   // the identical IEEE operation order over identical BIGINT sums —
@@ -434,55 +430,6 @@ object HorizonQueries {
           code("mon").cast("int").as("m_code"), col("mon"))
         .groupBy(col("r_code"), col("f_code"), col("m_code"))
         .agg(count(lit(1)).as("n_cust"), sum(col("mon")).as("cents_sum"))
-    },
-
-    // B100: LABEL PROPAGATION (community detection) — two SYNCHRONOUS
-    // rounds over the co-purchase part graph (the graph_triangles
-    // node/edge construction): every node starts as its own label,
-    // each round adopts the most frequent neighbor label (ties → the
-    // smallest label), argmax spelled as ONE map-side-combinable
-    // max_by over the packed (count·2⁴¹ − label) key — never a
-    // per-node sort. Fixed round count makes the oracle a closed-form
-    // two-round replay (the kmeans_iterations / graph_kcore
-    // convention); per round the work is one keyed join + two keyed
-    // aggs — the 100 TB shape for bounded-round graph algorithms.
-    Q("graph_label_prop", {
-      val pick = "CAST(arg_max(nlbl, CAST(cnt * 2199023255552 - nlbl AS BIGINT)) AS BIGINT)"
-      s"""WITH it AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey % $LpNodes AS node
-         |  FROM lineitem),
-         |e AS (
-         |  SELECT DISTINCT a.node AS u, b.node AS v
-         |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v AS node, u AS nbr FROM e),
-         |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
-         |c1 AS (SELECT a.node, l.lbl AS nlbl, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM adj a JOIN l0 l ON a.nbr = l.node GROUP BY 1, 2),
-         |l1 AS (SELECT node, $pick AS lbl FROM c1 GROUP BY node),
-         |c2 AS (SELECT a.node, l.lbl AS nlbl, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM adj a JOIN l1 l ON a.nbr = l.node GROUP BY 1, 2),
-         |l2 AS (SELECT node, $pick AS lbl FROM c2 GROUP BY node)
-         |SELECT node, lbl FROM l2""".stripMargin
-    }) { (s, dir) =>
-      val it = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % LpNodes).as("node")).distinct()
-      val e = it.select(col("ok"), col("node").as("u"))
-        .join(it.select(col("ok"), col("node").as("v")), Seq("ok"))
-        .filter(col("u") < col("v"))
-        .select(col("u"), col("v")).distinct()
-      val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-        .unionByName(e.select(col("v").as("node"), col("u").as("nbr")))
-      val l0 = adj.select(col("node")).distinct().withColumn("lbl", col("node"))
-      def round(lbls: DataFrame): DataFrame = adj
-        .join(lbls.select(col("node").as("nbr"), col("lbl").as("nlbl")), Seq("nbr"))
-        .groupBy(col("node"), col("nlbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("node"))
-        .agg(max_by(col("nlbl"),
-          (col("cnt") * 2199023255552L - col("nlbl")).cast("long")).as("lbl"))
-      round(round(l0)).select(col("node"), col("lbl"))
     },
 
     // C74: END-TO-END ENTITY RESOLUTION — the record-linkage families

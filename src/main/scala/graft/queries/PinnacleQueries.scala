@@ -997,178 +997,6 @@ object PinnacleQueries {
             * lit(1000000) + lit(0.5)) / lit(1000000)).as("p2"))
     },
 
-    // B158: NEIGHBORHOOD JACCARD similarity (Salton 1989; Liben-
-    // Nowell & Kleinberg 2003 rank it beside Adamic-Adar B118's
-    // wedge family) over the co-purchase part graph — "which part
-    // pairs share buyers" as |N(u)∩N(w)| / |N(u)∪N(w)|. Contract:
-    // computed ON THE HUB-CAPPED SUBGRAPH (centers with degree
-    // 2..64, the B118 concession — a d-degree hub contributes
-    // (d choose 2) wedges; capping bounds the wedge join at
-    // 2016/center) with degrees counted in the SAME capped universe,
-    // so the ratio is a true Jaccard of that graph, never > 1.
-    // Exactness: intersection/union are BIGINT counts; ranking key
-    // j_e6 = n_common·10⁶ DIV union is an exact integer (floor
-    // grid); top-20 via TakeOrderedAndProject, no global sort.
-    // Unlike B118 (link prediction) existing edges are KEPT —
-    // similarity, not completion.
-    Q("graph_jaccard_neighbors",
-      """WITH it AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT a.node AS u, b.node AS v
-        |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-        |deg AS (
-        |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-        |    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-        |  GROUP BY n),
-        |adj AS (
-        |  SELECT u AS ctr, v AS nbr FROM e
-        |  UNION ALL SELECT v, u FROM e),
-        |ctr AS (
-        |  SELECT adj.ctr, adj.nbr FROM adj
-        |  JOIN deg ON deg.n = adj.ctr WHERE deg.d BETWEEN 2 AND 64),
-        |cdeg AS (
-        |  SELECT nbr AS n, CAST(count(*) AS BIGINT) AS cd
-        |  FROM ctr GROUP BY 1),
-        |wedge AS (
-        |  SELECT a.nbr AS u, b.nbr AS w
-        |  FROM ctr a JOIN ctr b ON a.ctr = b.ctr AND a.nbr < b.nbr),
-        |cand AS (
-        |  SELECT u, w, CAST(count(*) AS BIGINT) AS n_common
-        |  FROM wedge GROUP BY u, w),
-        |j AS (
-        |  SELECT c.u, c.w, c.n_common,
-        |    du.cd + dw.cd - c.n_common AS n_union,
-        |    (c.n_common * 1000000) // (du.cd + dw.cd - c.n_common)
-        |      AS j_e6
-        |  FROM cand c
-        |  JOIN cdeg du ON du.n = c.u JOIN cdeg dw ON dw.n = c.w),
-        |top AS (
-        |  SELECT u, w, n_common, n_union, j_e6,
-        |    CAST(row_number() OVER (ORDER BY j_e6 DESC, u, w) AS BIGINT)
-        |      AS rnk
-        |  FROM j)
-        |SELECT rnk, u, w, n_common, n_union,
-        |  CAST(j_e6 AS DOUBLE) / 1000000 AS jaccard
-        |FROM top WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val items = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % 16381).as("node"))
-        .distinct()
-      val e = items.as("a").join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-        .select(col("a.node").as("u"), col("b.node").as("v"))
-        .distinct()
-        .localCheckpoint() // feeds degrees and adjacency
-      val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val adj = e.select(col("u").as("ctr"), col("v").as("nbr"))
-        .unionAll(e.select(col("v").as("ctr"), col("u").as("nbr")))
-      val ctr = adj.join(deg.withColumnRenamed("n", "ctr"), Seq("ctr"))
-        .filter(col("d").between(2, 64))
-        .select(col("ctr"), col("nbr"))
-        .localCheckpoint() // capped degrees + both wedge sides
-      val cdeg = ctr.groupBy(col("nbr").as("n")).agg(count(lit(1)).as("cd"))
-      // Round-13 optimization (guide §2.4): wedges enumerate IN-ROW
-      // from each center's collected (≤64, degree-capped) neighbor
-      // list — one keyed groupBy replaces the r12 center self-join
-      // (two shuffled join sides + merge). Same (u < w) pair
-      // multiset: pairs of a sorted distinct array.
-      val wedge = ctr.groupBy(col("ctr"))
-        .agg(sort_array(collect_list(col("nbr"))).as("ns"))
-        .select(explode(expr(
-          """flatten(transform(ns, (x, i) ->
-            |  transform(slice(ns, i + 2, size(ns)),
-            |    y -> struct(x AS u, y AS w))))""".stripMargin)).as("p"))
-        .select(col("p.u").as("u"), col("p.w").as("w"))
-      val cand = wedge.groupBy(col("u"), col("w"))
-        .agg(count(lit(1)).as("n_common"))
-      val j = cand
-        .join(cdeg.select(col("n").as("u"), col("cd").as("du")), Seq("u"))
-        .join(cdeg.select(col("n").as("w"), col("cd").as("dw")), Seq("w"))
-        .select(col("u"), col("w"), col("n_common"),
-          (col("du") + col("dw") - col("n_common")).as("n_union"))
-        .withColumn("j_e6",
-          expr("n_common * 1000000 div n_union"))
-      j.orderBy(col("j_e6").desc, col("u"), col("w")).limit(20)
-        .withColumn("rnk", row_number().over(
-          Window.orderBy(col("j_e6").desc, col("u"), col("w"))).cast("long"))
-        .select(col("rnk"), col("u"), col("w"), col("n_common"),
-          col("n_union"),
-          (col("j_e6").cast("double") / 1000000).as("jaccard"))
-    },
-
-    // B159: MULTI-SOURCE BFS to fixpoint (hop-capped) — the
-    // reachability/radius primitive under every graph ETL ("how far
-    // does influence spread from these seeds"); the ITERATIVE-
-    // FRONTIER member of the graph family: B51 minplus_2hop is
-    // fixed-2-hop, B52 PageRank fixed-round — BFS runs UNTIL THE
-    // FRONTIER EMPTIES (early exit), bounded by a pinned 10-hop cap
-    // so the oracle is a recursive-CTE replay (the entity_resolution
-    // convention). Seeds = graph nodes < 100. Per round: one keyed
-    // join frontier⋈adj + one anti-join against settled distances,
-    // localCheckpoint per frontier (lineage cut — the iterative-
-    // convergence discipline); the driver-side loop carries only a
-    // per-round COUNT (model-bounded, ≤ 10 jobs). Output is the
-    // distance histogram — integer counts, no floats at all.
-    Q("graph_bfs_layers",
-      """WITH RECURSIVE it AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT a.node AS u, b.node AS v
-        |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-        |adj AS (SELECT u AS node, v AS nbr FROM e
-        |        UNION ALL SELECT v, u FROM e),
-        |seeds AS (SELECT DISTINCT node FROM adj WHERE node < 100),
-        |reach(node, dist) AS (
-        |  SELECT node, 0 FROM seeds
-        |  UNION
-        |  SELECT a.nbr, r.dist + 1
-        |  FROM reach r JOIN adj a ON a.node = r.node
-        |  WHERE r.dist < 10),
-        |md AS (SELECT node, CAST(min(dist) AS INT) AS dist
-        |       FROM reach GROUP BY node)
-        |SELECT dist, CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM md GROUP BY dist""".stripMargin) { (s, dir) =>
-      val items = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % 16381).as("node"))
-        .distinct()
-      val e = items.as("a").join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-        .select(col("a.node").as("u"), col("b.node").as("v"))
-        .distinct()
-      val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-        .unionByName(e.select(col("v").as("node"), col("u").as("nbr")))
-        .localCheckpoint() // scanned every round
-      var settled = adj.select(col("node")).distinct()
-        .filter(col("node") < 100)
-        .withColumn("dist", lit(0)).localCheckpoint()
-      var frontier = settled
-      var hop = 0
-      var frontierSize = frontier.count() // model-bounded driver loop
-      while (hop < 10 && frontierSize > 0) {
-        hop += 1
-        // Round-13 optimization (guide §3.1): frontier and settled
-        // are node-scale (≤16,381 rows by construction) — broadcast
-        // both so the edge-scale adjacency never shuffles per round.
-        val next = adj
-          .join(broadcast(frontier.select(col("node"))), Seq("node"))
-          .select(col("nbr").as("node")).distinct()
-          .join(broadcast(settled.select(col("node"))), Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop))
-          .localCheckpoint() // cut the per-round lineage
-        frontierSize = next.count()
-        if (frontierSize > 0) settled = settled.unionByName(next)
-          .localCheckpoint()
-        frontier = next
-      }
-      settled.groupBy(col("dist"))
-        .agg(count(lit(1)).as("n_nodes"))
-    },
-
     // C129: LEAVE-ONE-OUT TARGET ENCODING (Micci-Barreca 2001; the
     // leakage-free categorical encoder every tabular-ML pipeline
     // ships — plain mean-encoding leaks each row's own label into its

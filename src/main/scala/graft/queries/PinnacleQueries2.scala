@@ -1028,68 +1028,6 @@ object PinnacleQueries2 {
           * lit(1000000) + lit(0.5)) / lit(1000000)).as("z"))
     },
 
-    // B168: KATZ CENTRALITY, 2-hop truncation (Katz Psychometrika
-    // 1953) over the co-purchase part graph — the walk-counting
-    // centrality that credits a node for REACH, not just degree
-    // (B52's PageRank normalizes by out-degree; Katz counts raw
-    // attenuated walks — the "how much of the graph can this part
-    // pull" ranking). Truncated at 2 hops with α = 1/8 so the score
-    // is the EXACT integer katz64 = 64 + 8·deg(u) + Σ_v deg(v) over
-    // neighbors v (×64 clears both α powers); the truncation is the
-    // documented contract (the B51 fixed-k convention — closed-form
-    // replayable, no convergence question). Top-20 by (katz64 DESC,
-    // node). Scale: the B118 edge build + ONE degree join + one
-    // keyed sum — no iteration state.
-    Q("graph_katz2",
-      """WITH it AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT a.node AS u, b.node AS v
-        |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-        |adj AS (SELECT u AS node, v AS nbr FROM e
-        |        UNION ALL SELECT v, u FROM e),
-        |deg AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
-        |k AS (
-        |  SELECT a.node,
-        |    CAST(64 + 8 * max(du.d) + sum(dv.d) AS BIGINT) AS katz64
-        |  FROM adj a
-        |  JOIN deg du ON du.node = a.node
-        |  JOIN deg dv ON dv.node = a.nbr
-        |  GROUP BY a.node),
-        |top AS (
-        |  SELECT node, katz64,
-        |    CAST(row_number() OVER (ORDER BY katz64 DESC, node) AS BIGINT)
-        |      AS rnk
-        |  FROM k)
-        |SELECT rnk, node, katz64 FROM top WHERE rnk <= 20""".stripMargin) {
-      (s, dir) =>
-        val items = table(s, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"),
-            (col("l_partkey") % 16381).as("node"))
-          .distinct()
-        val e = items.as("a").join(items.as("b"),
-            col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-          .select(col("a.node").as("u"), col("b.node").as("v"))
-          .distinct()
-        val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-          .unionByName(e.select(col("v").as("node"), col("u").as("nbr")))
-          .localCheckpoint() // feeds degrees and the 2-hop sum
-        val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("d"))
-        val k = adj
-          .join(deg.select(col("node"), col("d").as("du")), Seq("node"))
-          .join(deg.select(col("node").as("nbr"), col("d").as("dv")),
-            Seq("nbr"))
-          .groupBy(col("node"))
-          .agg((lit(64) + lit(8) * max(col("du")) + sum(col("dv")))
-            .cast("long").as("katz64"))
-        k.orderBy(col("katz64").desc, col("node")).limit(20)
-          .withColumn("rnk", row_number().over(
-            Window.orderBy(col("katz64").desc, col("node"))).cast("long"))
-          .select(col("rnk"), col("node"), col("katz64"))
-    },
-
     // C136: JSON KEY PROFILE — schema inference over a semi-
     // structured column (the "what's actually in this JSON blob"
     // audit that precedes every A1-style typed-schema commitment;
@@ -2203,72 +2141,6 @@ object PinnacleQueries2 {
             * (abs(col("b") - col("c")) - 1)).cast("double")
             / (col("b") + col("c")) * lit(1000000) + lit(0.5))
             / lit(1000000)).as("chi2"))
-    },
-
-    // B176: DEGREE ASSORTATIVITY (Newman PRL 2002) of the co-purchase
-    // part graph — do high-degree parts co-occur with high-degree
-    // parts (r > 0, hub-clubbing) or with leaves (r < 0, hub-and-
-    // spoke; most co-purchase graphs): the Pearson correlation of
-    // endpoint degrees over edges, in the ×4M² integer form r =
-    // (4M·Σjk − S²)/(2M·Σ(j²+k²) − S²) with S = Σ(j+k) — every term
-    // an exact DECIMAL(38,0)/HUGEINT, ONE division, 6dp. Scale
-    // shape: the B118 edge build + one degree join + three edge-
-    // grain sums (map-side combined).
-    Q("graph_assortativity",
-      """WITH it AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-        |  FROM lineitem),
-        |e AS (
-        |  SELECT DISTINCT a.node AS u, b.node AS v
-        |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-        |deg AS (
-        |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-        |    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-        |  GROUP BY n),
-        |ed AS (
-        |  SELECT du.d AS j, dv.d AS k
-        |  FROM e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS m,
-        |    CAST(sum(CAST(j AS HUGEINT) * k) AS HUGEINT) AS sjk,
-        |    CAST(sum(j + k) AS BIGINT) AS s,
-        |    CAST(sum(CAST(j AS HUGEINT) * j + CAST(k AS HUGEINT) * k)
-        |      AS HUGEINT) AS sq
-        |  FROM ed)
-        |SELECT m AS n_edges,
-        |  CASE WHEN 2 * m * sq > CAST(s AS HUGEINT) * s THEN
-        |    floor(CAST(4 * m * sjk - CAST(s AS HUGEINT) * s AS DOUBLE)
-        |      / CAST(2 * m * sq - CAST(s AS HUGEINT) * s AS DOUBLE)
-        |      * 1000000 + 0.5) / 1000000 END AS assortativity
-        |FROM m""".stripMargin) { (s, dir) =>
-      val items = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"),
-          (col("l_partkey") % 16381).as("node"))
-        .distinct()
-      val e = items.as("a").join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.node") < col("b.node"))
-        .select(col("a.node").as("u"), col("b.node").as("v"))
-        .distinct()
-        .localCheckpoint() // degrees + the endpoint join
-      val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      val ed = e
-        .join(deg.select(col("n").as("u"), col("d").as("j")), Seq("u"))
-        .join(deg.select(col("n").as("v"), col("d").as("k")), Seq("v"))
-        .select(col("j"), col("k"))
-      val m = ed.agg(count(lit(1)).as("m"),
-        sum(col("j").cast("decimal(38,0)") * col("k")).as("sjk"),
-        sum(col("j") + col("k")).as("s"),
-        sum(col("j").cast("decimal(38,0)") * col("j")
-          + col("k").cast("decimal(38,0)") * col("k")).as("sq"))
-      m.select(col("m").as("n_edges"),
-        when(lit(2) * col("m") * col("sq")
-          > col("s").cast("decimal(38,0)") * col("s"),
-          floor((lit(4) * col("m") * col("sjk")
-            - col("s").cast("decimal(38,0)") * col("s")).cast("double")
-            / (lit(2) * col("m") * col("sq")
-              - col("s").cast("decimal(38,0)") * col("s")).cast("double")
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("assortativity"))
     },
 
     // C138: EMBEDDING HEALTH AUDIT — the index-ingest screen every

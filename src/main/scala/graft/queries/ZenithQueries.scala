@@ -26,9 +26,9 @@ object ZenithQueries {
 
   // DuckDB fragments — the TextQueries normalization contract
   private val normSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
-  private val toksSql = s"string_split($normSql, ' ')"
+  private[queries] val toksSql = s"string_split($normSql, ' ')"
 
-  private def sparkToks = split(
+  private[queries] def sparkToks = split(
     regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
 
   val all: Seq[Q] = Seq(
@@ -694,7 +694,11 @@ object ZenithQueries {
       // checkpoint carries array<long> instead of array<string>, and
       // the explode emits longs. Identical up to 64-bit collisions —
       // the same declared contract as r13 (the oracle keeps counting
-      // strings); n=1 identities are bit-identical to r13's.
+      // strings); n=1 identities are bit-identical to r13's. A
+      // collision between two TOKEN hashes is not confined to one
+      // gram: it merges every n-gram that contains those tokens at
+      // the same position, since gram identity is built from the
+      // member-token hashes.
       val t = table(s, dir, "documents")
         .select(col("source"),
           transform(sparkToks, tk => xxhash64(tk)).as("hs"))
@@ -720,196 +724,6 @@ object ZenithQueries {
           (floor(col("distinct_ngrams").cast("double")
             / col("total_ngrams").cast("double") * 1000000 + lit(0.5))
             / 1000000).as("diversity"))
-    },
-
-    // B134: DEGREE-DISTRIBUTION POWER-LAW FIT over the
-    // customer↔supplier trade graph (the B52 node encoding) — the
-    // discrete maximum-likelihood exponent of Clauset, Shalizi &
-    // Newman SIAM Rev. 2009 §3.1 with x_min = 1: α = 1 + n /
-    // Σᵢ ln(dᵢ / (x_min − ½)) = 1 + n / Σᵢ ln(2dᵢ). The scale-free
-    // check is THE structural diagnostic for a graph before choosing
-    // iterative algorithms (hub-dominated degree tails are where
-    // PageRank/label-prop skew lives — B52's salting rationale).
-    // Exactness: the Σ collapses to the DEGREE grain (distinct degree
-    // values — power-law tails make this ~√n-sized); each grain row's
-    // ln(2d) is quantized to the exact 1e-4 integer grid (C34/B133
-    // convention), multiplied by its exact node count, and the
-    // cross-grain sum is order-independent BIGINT arithmetic; α is
-    // ONE double division of exact integers, +1, 6dp floor. Top-20
-    // degrees emitted with the fit constants attached. Scale shape:
-    // one distinct-pair join (the B52 edge build), one degree count,
-    // one degree-grain rollup.
-    Q("graph_degree_powerlaw",
-      """WITH pairs AS (
-        |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |deg AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM (
-        |    SELECT cn AS node FROM pairs
-        |    UNION ALL SELECT sn AS node FROM pairs)
-        |  GROUP BY node),
-        |dg AS (
-        |  SELECT d, CAST(count(*) AS BIGINT) AS m FROM deg GROUP BY d),
-        |s AS (
-        |  SELECT CAST(sum(m) AS BIGINT) AS n,
-        |    CAST(sum(m * CAST(floor(ln(CAST(2 * d AS DOUBLE)) * 10000 + 0.5)
-        |      AS BIGINT)) AS BIGINT) AS sum_e4,
-        |    CAST(max(d) AS BIGINT) AS d_max
-        |  FROM dg),
-        |fit AS (
-        |  SELECT n AS n_nodes, d_max,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM pairs) AS n_edges,
-        |    CASE WHEN sum_e4 > 0 THEN
-        |      floor((1 + CAST(n * 10000 AS DOUBLE) / CAST(sum_e4 AS DOUBLE))
-        |        * 1000000 + 0.5) / 1000000 END AS alpha
-        |  FROM s),
-        |top AS (
-        |  SELECT d AS degree, m AS n_with_degree,
-        |    CAST(row_number() OVER (ORDER BY d DESC) AS BIGINT) AS rnk
-        |  FROM dg)
-        |SELECT rnk, degree, n_with_degree, n_nodes, n_edges, d_max, alpha
-        |FROM top, fit WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val pairs = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(table(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("cn"),
-          (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-        .localCheckpoint() // feeds the degree count and the edge count
-      val deg = pairs.select(col("cn").as("node"))
-        .unionAll(pairs.select(col("sn").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-      // degree grain from here on (power-law tail bounded)
-      val dg = deg.groupBy(col("d")).agg(count(lit(1)).as("m"))
-        .localCheckpoint() // feeds the fit and the top-20 output
-      val nEdges = pairs.agg(count(lit(1)).as("n_edges"))
-      val fit = dg.agg(sum(col("m")).as("n"),
-          sum(col("m") * floor(log((col("d") * 2).cast("double"))
-            * 10000 + lit(0.5)).cast("long")).as("sum_e4"),
-          max(col("d")).as("d_max"))
-        .crossJoin(broadcast(nEdges))
-        .select(col("n").as("n_nodes"), col("d_max"), col("n_edges"),
-          when(col("sum_e4") > 0,
-            floor((lit(1) + (col("n") * 10000).cast("double")
-              / col("sum_e4").cast("double")) * 1000000 + lit(0.5))
-              / 1000000).as("alpha"))
-      dg.select(col("d").as("degree"), col("m").as("n_with_degree"),
-          row_number().over(Window.orderBy(col("d").desc)).cast("long")
-            .as("rnk"))
-        .filter(col("rnk") <= 20)
-        .crossJoin(broadcast(fit))
-        .select(col("rnk"), col("degree"), col("n_with_degree"),
-          col("n_nodes"), col("n_edges"), col("d_max"), col("alpha"))
-    },
-
-    // B135: LOCAL CLUSTERING COEFFICIENT (Watts & Strogatz 1998) per
-    // node of the part co-order projection — B59's triangle machinery
-    // extended from the global count to the per-node statistic
-    // cc_v = triangles(v) / (d_v·(d_v−1)/2), the community-structure
-    // signal triangle counts alone don't localize. FULLY exact, no
-    // libm anywhere: each node's cc quantizes by exact INTEGER floor
-    // division cc_e6 = (2·10⁶·tri_v) // (d_v·(d_v−1)), so the global
-    // mean over qualifying nodes is order-independent BIGINT
-    // arithmetic into ONE double division. Scale shape: B59's
-    // Schank-Wagner degree orientation bounds the wedge join
-    // (O(E^1.5) wedges); the closing join broadcasts the oriented
-    // edges (16 B/row) ONLY while |E| sits under the broadcast
-    // budget — the counted edge list (free: localCheckpoint'd)
-    // gates the hint, and past the bound the join runs as a keyed
-    // shuffle join, same asymptotics; each triangle is found ONCE
-    // and credits its three corners via one 3-way explode.
-    Q("graph_clustering_coeff", {
-      val ord = "du.d < dv.d OR (du.d = dv.d AND e.u < e.v)"
-      s"""WITH it AS (
-         |  SELECT DISTINCT l_orderkey AS ok, l_partkey % 16381 AS node
-         |  FROM lineitem),
-         |e AS (
-         |  SELECT DISTINCT a.node AS u, b.node AS v
-         |  FROM it a JOIN it b ON a.ok = b.ok AND a.node < b.node),
-         |deg AS (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-         |    SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-         |  GROUP BY n),
-         |o AS (
-         |  SELECT CASE WHEN $ord THEN e.u ELSE e.v END AS src,
-         |         CASE WHEN $ord THEN e.v ELSE e.u END AS dst,
-         |         CASE WHEN $ord THEN dv.d ELSE du.d END AS ddeg
-         |  FROM e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v),
-         |w AS (
-         |  SELECT x.src AS s, x.dst AS a, y.dst AS b FROM o x JOIN o y
-         |  ON x.src = y.src AND (x.ddeg < y.ddeg
-         |    OR (x.ddeg = y.ddeg AND x.dst < y.dst))),
-         |t AS (
-         |  SELECT s, a, b FROM w JOIN o ON o.src = w.a AND o.dst = w.b),
-         |tn AS (
-         |  SELECT node, CAST(count(*) AS BIGINT) AS tri FROM (
-         |    SELECT s AS node FROM t UNION ALL SELECT a FROM t
-         |    UNION ALL SELECT b FROM t)
-         |  GROUP BY node),
-         |cc AS (
-         |  SELECT deg.n AS node, deg.d,
-         |    coalesce(tn.tri, 0) AS tri,
-         |    CAST(2000000 * coalesce(tn.tri, 0) // (deg.d * (deg.d - 1))
-         |      AS BIGINT) AS cc_e6
-         |  FROM deg LEFT JOIN tn ON deg.n = tn.node WHERE deg.d >= 2),
-         |g AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-         |    floor(CAST(sum(cc_e6) AS DOUBLE)
-         |      / CAST(count(*) * 1000000 AS DOUBLE) * 1000000 + 0.5)
-         |      / 1000000 AS avg_cc
-         |  FROM cc),
-         |r AS (
-         |  SELECT node, d, tri, cc_e6,
-         |    CAST(row_number() OVER (ORDER BY cc_e6 DESC, node) AS BIGINT)
-         |      AS rnk
-         |  FROM cc)
-         |SELECT rnk, node, d AS degree, tri AS triangles,
-         |  CAST(cc_e6 AS DOUBLE) / 1000000 AS cc, n_nodes, avg_cc
-         |FROM r, g WHERE rnk <= 20""".stripMargin
-    }) { (s, dir) =>
-      // Round-13 optimization: the O(Σ od²) wedge self-join +
-      // closing join (46M wedge rows at sf0.1) is replaced by the
-      // TriangleBitset kernel — per oriented edge, the witness set
-      // N⁺(src) ∩ N⁺(dst) against a ≤16,381-row broadcast bitset
-      // adjacency (≈34 MB at FULL saturation — broadcastable at any
-      // SF by construction, so the r12 conditional-broadcast bound
-      // is obsolete). Per-node counts are the same decomposition the
-      // wedge spelling produced: edge (u,v) with k witnesses adds k
-      // to u, k to v, 1 to each witness — every node of every
-      // triangle gets exactly +1 per triangle. The DuckDB oracle
-      // keeps the wedge-join spelling.
-      import graft.operators.TriangleBitset
-      val e = TriangleBitset.coOrderEdges(table(s, dir, "lineitem"))
-        .localCheckpoint() // edges feed degrees + orientation
-      val deg = TriangleBitset.degrees(e)
-        .localCheckpoint() // degrees feed orientation + the cc join
-      val o = TriangleBitset.orient(e, deg)
-        .localCheckpoint() // oriented edges feed adjacency + edge scan
-      val adj = TriangleBitset.outBitsets(o)
-        .localCheckpoint() // one bitset build feeds both broadcasts
-      val tn = TriangleBitset.perNodeTriangles(
-        TriangleBitset.edgesWithWitnesses(o, adj))
-      val cc = deg.filter(col("d") >= 2)
-        .join(tn.withColumnRenamed("node", "n"), Seq("n"), "left")
-        .select(col("n").as("node"), col("d"),
-          coalesce(col("tri"), lit(0L)).as("tri"),
-          expr("2000000 * coalesce(tri, 0) div (d * (d - 1))").as("cc_e6"))
-        .localCheckpoint() // feeds the global mean and the top-20
-      val g = cc.agg(count(lit(1)).as("n_nodes"),
-          (floor(sum(col("cc_e6")).cast("double")
-            / (count(lit(1)) * 1000000).cast("double")
-            * 1000000 + lit(0.5)) / 1000000).as("avg_cc"))
-      cc.select(col("node"), col("d"), col("tri"), col("cc_e6"),
-          row_number().over(Window.orderBy(col("cc_e6").desc, col("node")))
-            .cast("long").as("rnk"))
-        .filter(col("rnk") <= 20)
-        .crossJoin(broadcast(g))
-        .select(col("rnk"), col("node"), col("d").as("degree"),
-          col("tri").as("triangles"),
-          (col("cc_e6").cast("double") / 1000000).as("cc"),
-          col("n_nodes"), col("avg_cc"))
     },
 
     // B136: HOLT-WINTERS additive triple exponential smoothing

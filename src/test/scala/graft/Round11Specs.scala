@@ -283,94 +283,6 @@ class DistinctNgramSpec extends SparkTestBase {
   }
 }
 
-/** B134 graph_degree_powerlaw — a planted star graph has a closed-form
-  * degree distribution; the MLE exponent is recomputed independently
-  * on the same grid.
-  */
-class PowerlawSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("star graph: hub degree k, k leaves, alpha matches recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("plaw").toString
-    val k = 6
-    // one customer (hub), k suppliers via k single-line orders
-    (1 to k).map(i => (i.toLong, 77L))
-      .toDF("o_orderkey", "o_custkey")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    (1 to k).map(i => (i.toLong, i.toLong))
-      .toDF("l_orderkey", "l_suppkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.queries("graph_degree_powerlaw")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    val r = out.head
-    assert(r.getAs[Long]("n_nodes") == k + 1L)
-    assert(r.getAs[Long]("n_edges") == k.toLong)
-    assert(r.getAs[Long]("d_max") == k.toLong)
-    // top degrees: k (the hub, 1 node) then 1 (k leaves)
-    assert(r.getAs[Long]("degree") == k.toLong &&
-      r.getAs[Long]("n_with_degree") == 1L)
-    assert(out(1).getAs[Long]("degree") == 1L &&
-      out(1).getAs[Long]("n_with_degree") == k.toLong)
-    val sumE4 = math.floor(math.log(2.0 * k) * 1e4 + 0.5).toLong +
-      k * math.floor(math.log(2.0) * 1e4 + 0.5).toLong
-    val alpha = math.floor(
-      (1.0 + (k + 1L) * 10000.0 / sumE4) * 1e6 + 0.5) / 1e6
-    assert(r.getAs[Double]("alpha") == alpha, s"want $alpha")
-  }
-
-  test("corpus trade graph: alpha defined, histogram populated") {
-    val out = SparkEntry.queries("graph_degree_powerlaw")(spark, sfDir)
-      .collect()
-    // the distinct-degree grain at sf0.001 is ~a dozen values — the
-    // top-20 cap only binds at larger SFs
-    assert(out.length >= 10 && out.length <= 20)
-    val a = out.head.getAs[Double]("alpha")
-    assert(a > 1.0, s"MLE alpha must exceed 1: $a")
-  }
-}
-
-/** B135 graph_clustering_coeff — planted triangle + path: the
-  * triangle corners score exactly 1, the path center exactly 0, and
-  * the mean averages only the degree-≥2 nodes.
-  */
-class ClusteringCoeffSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("triangle corners cc=1, path center cc=0, avg=0.75") {
-    val dir = java.nio.file.Files.createTempDirectory("ccoef").toString
-    // order 1 buys parts {1,2,3} → triangle; orders 2,3 build the
-    // path 4-5-6 (node 5 has degree 2, no triangle)
-    val li = Seq((1L, 1L), (1L, 2L), (1L, 3L),
-      (2L, 4L), (2L, 5L), (3L, 5L), (3L, 6L))
-    li.toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = SparkEntry.queries("graph_clustering_coeff")(spark, dir)
-      .collect()
-    val byNode = out.map(r => r.getAs[Long]("node") ->
-      (r.getAs[Long]("degree"), r.getAs[Long]("triangles"),
-        r.getAs[Double]("cc"))).toMap
-    assert(byNode(1L) == ((2L, 1L, 1.0)))
-    assert(byNode(2L) == ((2L, 1L, 1.0)))
-    assert(byNode(3L) == ((2L, 1L, 1.0)))
-    assert(byNode(5L) == ((2L, 0L, 0.0)))
-    assert(byNode.size == 4) // degree-1 nodes 4,6 excluded
-    assert(out.head.getAs[Long]("n_nodes") == 4L)
-    assert(out.head.getAs[Double]("avg_cc") == 0.75)
-  }
-
-  test("corpus projection: coefficients in [0,1], mean consistent") {
-    val out = SparkEntry.queries("graph_clustering_coeff")(spark, sfDir)
-      .collect()
-    assert(out.length == 20)
-    out.foreach { r =>
-      val c = r.getAs[Double]("cc")
-      assert(c >= 0.0 && c <= 1.0)
-    }
-    val avg = out.head.getAs[Double]("avg_cc")
-    assert(avg > 0.0 && avg < 1.0, s"degenerate projection: $avg")
-  }
-}
-
 /** B136 holt_winters — a constant series is a fixed point (level =
   * the constant, zero trend/season), and a pure period-7 signal is
   * recovered EXACTLY by the seasonal forecasts.

@@ -30,20 +30,6 @@ class Round12PlanSpec extends SparkTestBase {
       s"scan reads columns the recursion never touches:\n$plan")
   }
 
-  test("adamic-adar prunes lineitem to two columns; top-20 is a TakeOrdered") {
-    val plan = planOf("graph_adamic_adar")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"global candidate sort instead of TakeOrdered:\n$plan")
-    assert(!plan.contains("l_quantity") && !plan.contains("l_shipdate"),
-      s"scan reads columns the projection never touches:\n$plan")
-  }
-
-  test("textrank ranks through TakeOrdered, never a global rank sort") {
-    val plan = planOf("textrank_keywords")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"global vocab sort instead of TakeOrdered:\n$plan")
-  }
-
   test("cluster profile rolls cluster sizes up map-side") {
     val plan = planOf("dedup_cluster_profile")
     assert(plan.contains("partial_"),

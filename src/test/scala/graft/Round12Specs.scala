@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-12 wave specs — hand-computed planted cases for the BH-FDR
-  * family, the Durbin-Levinson PACF, Adamic-Adar link prediction,
-  * TextRank keywords, the dedup cluster profile, and the streaming
-  * chi-square monitor.
+  * family, the Durbin-Levinson PACF, the dedup cluster profile, and
+  * the streaming chi-square monitor.
   */
 
 /** B137 bh_fdr_ks — a disjoint-range segment must reach D = 1 and be
@@ -97,75 +96,6 @@ class PacfSpec extends SparkTestBase {
     assert(out.size == 7)
     assert(out(1L).getAs[Double]("pacf") == out(1L).getAs[Double]("acf"))
     (1L to 7L).foreach(l => assert(!out(l).isNullAt(out(l).fieldIndex("pacf"))))
-  }
-}
-
-/** B139 graph_adamic_adar — a 4-cycle's two diagonals each score
-  * exactly 2·floor(1e6/ln 2 + 0.5)/1e6 through their two degree-2
-  * centers; adjacent pairs are excluded.
-  */
-class AdamicAdarSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("4-cycle: both diagonals score 2/ln2, edges excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("aa").toString
-    // orders (1: p1,p2) (2: p2,p3) (3: p3,p4) (4: p4,p1) → cycle
-    val li = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L),
-      (3L, 3L), (3L, 4L), (4L, 4L), (4L, 1L))
-    li.toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val rows = SparkEntry.queries("graph_adamic_adar")(spark, dir).collect()
-    assert(rows.length == 2)
-    val expect = 2.0 * 1442695 / 1000000 // floor(1e6/ln2 + 0.5) per center
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_common") == 2L)
-      assert(r.getAs[Double]("adamic_adar") == expect)
-    }
-    val pairs = rows.map(r => (r.getAs[Long]("u"), r.getAs[Long]("w"))).toSet
-    assert(pairs == Set((1L, 3L), (2L, 4L)))
-  }
-
-  test("corpus: top-20 populated, scores positive and non-increasing") {
-    val rows = SparkEntry.queries("graph_adamic_adar")(spark, sfDir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(rows.length == 20)
-    val scores = rows.map(_.getAs[Double]("adamic_adar"))
-    assert(scores.forall(_ > 0.0))
-    assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
-  }
-}
-
-/** C116 textrank_keywords — a star co-occurrence graph ranks its hub
-  * first; leaves tie.
-  */
-class TextRankSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("star graph: hub outranks the tied leaves") {
-    val dir = java.nio.file.Files.createTempDirectory("trank").toString
-    // 5 docs each of "hub x" / "hub y" / "hub z" → freq(hub)=15,
-    // freq(x|y|z)=5; edges hub—x, hub—y, hub—z
-    val docs = (for (w <- Seq("x", "y", "z"); i <- 1 to 5)
-      yield s"hub $w").zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }
-    docs.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SparkEntry.queries("textrank_keywords")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(rows.length == 4)
-    assert(rows.head.getAs[String]("keyword") == "hub")
-    val leaves = rows.tail.map(_.getAs[Long]("pr_pico"))
-    assert(leaves.distinct.length == 1) // leaves tie exactly
-    assert(rows.head.getAs[Long]("pr_pico") > leaves.head)
-  }
-
-  test("corpus: 20 distinct keywords, ranks ordered by (pr desc, word)") {
-    val rows = SparkEntry.queries("textrank_keywords")(spark, sfDir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(rows.length == 20)
-    assert(rows.map(_.getAs[String]("keyword")).distinct.length == 20)
-    val prs = rows.map(_.getAs[Long]("pr_pico"))
-    assert(prs.zip(prs.tail).forall { case (a, b) => a >= b })
   }
 }
 

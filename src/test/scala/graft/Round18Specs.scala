@@ -2,55 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-12 seventh-batch specs — modularity and packing audit. */
-
-/** B150 graph_modularity — two planted cliques joined by one bridge
-  * edge: label prop finds them, and Q is hand-solved exactly.
-  */
-class ModularitySpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("two 4-cliques + one bridge: hand-solved Q") {
-    val dir = java.nio.file.Files.createTempDirectory("mod").toString
-    // orders 1-2: clique on parts {1..4} (two orders make it a
-    // clique via co-order); orders 3-4: clique on {11..14};
-    // order 5 bridges 4-11
-    val li = (Seq.tabulate(4)(i => (1L, (i + 1).toLong))
-      ++ Seq.tabulate(4)(i => (2L, (i + 1).toLong))
-      ++ Seq.tabulate(4)(i => (3L, (i + 11).toLong))
-      ++ Seq.tabulate(4)(i => (4L, (i + 11).toLong))
-      ++ Seq((5L, 4L), (5L, 11L)))
-    li.toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val rows = SparkEntry.queries("graph_modularity")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    // graph: two K4s (6 edges each) + 1 bridge = 13 edges
-    assert(rows.map(_.getAs[Long]("n_nodes")).sum == 8L)
-    val q = rows.head.getAs[Double]("q_modularity")
-    // if label prop lands on the two cliques: e_c = 6 each,
-    // d_c = 13 each (12 + bridge endpoint): Q = Σ(4·13·6 − 169)/(4·169)
-    val expect = math.floor(2.0 * (4 * 13 * 6 - 169) / (4.0 * 169)
-      * 1000000 + 0.5) / 1000000
-    assert(rows.length == 2)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_nodes") == 4L)
-      assert(r.getAs[Long]("intra_edges") == 6L)
-      assert(r.getAs[Long]("degree_sum") == 13L)
-    }
-    assert(q == expect)
-  }
-
-  test("corpus: Q in [-0.5, 1], top-10 populated, intra <= degree/2") {
-    val rows = SparkEntry.queries("graph_modularity")(spark, sfDir)
-      .collect()
-    assert(rows.nonEmpty && rows.length <= 10)
-    val q = rows.head.getAs[Double]("q_modularity")
-    assert(q >= -0.5 && q <= 1.0)
-    rows.foreach { r =>
-      assert(2 * r.getAs[Long]("intra_edges") <= r.getAs[Long]("degree_sum"))
-    }
-  }
-}
+/** Round-12 seventh-batch specs — packing audit. */
 
 /** C122 packing_efficiency — a hand-built doc set pins bins, fill
   * rate, and the straddler rule against the C16 packer.

@@ -56,22 +56,6 @@ class Round20PlanSpec extends SparkTestBase {
       s"bucket counts reach the exchange un-combined:\n$plan")
   }
 
-  test("graph_jaccard top-20 is a TakeOrdered, never a global candidate sort") {
-    val plan = planOf("graph_jaccard_neighbors")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"global sort instead of TakeOrdered:\n$plan")
-    assert(!plan.contains("l_quantity") && !plan.contains("l_shipdate"),
-      s"scan reads columns the graph never touches:\n$plan")
-  }
-
-  test("katz2 prunes lineitem to two columns and ranks through TakeOrdered") {
-    val plan = planOf("graph_katz2")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"global sort instead of TakeOrdered:\n$plan")
-    assert(!plan.contains("l_quantity"),
-      s"scan reads columns the walk counts never touch:\n$plan")
-  }
-
   test("time-decay attribution joins clicks through the keyed interval bucketing") {
     val plan = planOf("attribution_time_decay")
     // the B94 RangeJoin discipline: a (user, bucket) equi-join, not a

@@ -314,71 +314,6 @@ class TextCurationSpec extends SparkTestBase {
   }
 }
 
-/** B158 graph_jaccard_neighbors / B159 graph_bfs_layers — planted
-  * graphs with hand-computable neighborhoods and layers.
-  */
-class GraphSimilaritySpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def graphDir(orders: Seq[(Long, Seq[Long])]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("gph").toString
-    orders.flatMap { case (ok, parts) => parts.map(p => (ok, p)) }
-      .toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    dir
-  }
-
-  test("jaccard: two triangles sharing an edge → (1,4) identical twins at 1.0") {
-    // orders {1,2,3} and {2,3,4}: N1=N4={2,3} → jaccard 1.0
-    val dir = graphDir(Seq((100L, Seq(1L, 2L, 3L)), (200L, Seq(2L, 3L, 4L))))
-    val rows = SparkEntry.queries("graph_jaccard_neighbors")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(rows.length == 6)
-    val r1 = rows.head
-    assert(r1.getAs[Long]("u") == 1L && r1.getAs[Long]("w") == 4L)
-    assert(r1.getAs[Long]("n_common") == 2L)
-    assert(r1.getAs[Long]("n_union") == 2L)
-    assert(r1.getAs[Double]("jaccard") == 1.0)
-    val r2 = rows(1)
-    assert(r2.getAs[Long]("u") == 2L && r2.getAs[Long]("w") == 3L)
-    assert(r2.getAs[Double]("jaccard") == 0.5)
-    // the four 0.25 pairs follow in (u, w) order
-    assert(rows.drop(2).map(r => (r.getAs[Long]("u"), r.getAs[Long]("w")))
-      .toSeq == Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L)))
-    rows.drop(2).foreach(r => assert(r.getAs[Double]("jaccard") == 0.25))
-  }
-
-  test("bfs: 12-hop chain from one seed stops at the 10-hop cap") {
-    // chain 50-101-102-...-112; only node 50 is a seed (< 100)
-    val edges = (50L, 101L) +: (101L to 111L).map(i => (i, i + 1))
-    val dir = graphDir(edges.zipWithIndex.map { case ((a, b), i) =>
-      (i.toLong, Seq(a, b))
-    })
-    val rows = SparkEntry.queries("graph_bfs_layers")(spark, dir)
-      .collect().map(r => r.getAs[Int]("dist") -> r.getAs[Long]("n_nodes"))
-      .toMap
-    assert(rows.size == 11) // dists 0..10; hops 11 and 12 cut by the cap
-    (0 to 10).foreach(d => assert(rows(d) == 1L, s"dist $d"))
-  }
-
-  test("corpus: bfs layers partition the reachable set; jaccard ranked and bounded") {
-    val j = SparkEntry.queries("graph_jaccard_neighbors")(spark, sfDir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(j.length == 20)
-    j.foreach { r =>
-      val v = r.getAs[Double]("jaccard")
-      assert(v >= 0.0 && v <= 1.0)
-      assert(r.getAs[Long]("n_common") <= r.getAs[Long]("n_union"))
-    }
-    assert(j.map(_.getAs[Double]("jaccard")).toSeq.reverse.sorted.reverse
-      == j.map(_.getAs[Double]("jaccard")).toSeq) // non-increasing
-    val b = SparkEntry.queries("graph_bfs_layers")(spark, sfDir).collect()
-    assert(b.nonEmpty)
-    assert(b.map(_.getAs[Int]("dist")).min == 0)
-    b.foreach(r => assert(r.getAs[Long]("n_nodes") > 0L))
-  }
-}
-
 /** C129 target_encode_loo / C130 feature_hash_vectors — plants pin
   * the leave-one-out algebra and the hashing-trick invariants.
   */

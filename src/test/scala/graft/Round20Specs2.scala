@@ -244,20 +244,6 @@ class HurstDwKeyframeSpec extends SparkTestBase {
     assert(r.getAs[Double]("z") == 0.730297)
   }
 
-  test("katz2: triangle + pendant → hand-computed attenuated walks") {
-    val dir = java.nio.file.Files.createTempDirectory("katz").toString
-    import spark.implicits._
-    Seq((100L, 1L), (100L, 2L), (100L, 3L), (200L, 3L), (200L, 4L))
-      .toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val rows = SparkEntry.queries("graph_katz2")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    // katz64 = 64 + 8·deg + Σ neighbor degs
-    val expect = Seq((3L, 93L), (1L, 85L), (2L, 85L), (4L, 75L))
-    assert(rows.map(r => (r.getAs[Long]("node"), r.getAs[Long]("katz64")))
-      .toSeq == expect)
-  }
-
   test("streaming prop-z snapshot equals the batch z on the same plant") {
     val dir = java.nio.file.Files.createTempDirectory("spz").toString
     import spark.implicits._
@@ -485,18 +471,6 @@ class HurstDwKeyframeSpec extends SparkTestBase {
     assert(r.getAs[Long]("b") == 3L && r.getAs[Long]("c") == 1L)
     assert(r.getAs[Long]("n_users") == 6L)
     assert(r.getAs[Double]("chi2") == 0.25)
-  }
-
-  test("assortativity: a 3-leaf star is perfectly disassortative (−1)") {
-    val dir = java.nio.file.Files.createTempDirectory("ast").toString
-    import spark.implicits._
-    Seq((100L, 1L), (100L, 2L), (200L, 1L), (200L, 3L), (300L, 1L),
-      (300L, 4L)).toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = SparkEntry.queries("graph_assortativity")(spark, dir)
-      .collect().head
-    assert(r.getAs[Long]("n_edges") == 3L)
-    assert(r.getAs[Double]("assortativity") == -1.0)
   }
 
   test("embedding audit: [3,4] and zero vector → mean norm 2.5, one zero") {

@@ -506,45 +506,6 @@ class StreamingBenfordSpec extends SparkTestBase {
   }
 }
 
-/** B118 graph_ppr — personalized ranks on a hand-built two-community
-  * graph: teleport mass must stay in the seed community; a node with
-  * no path from the seeds must end at exactly 0.
-  */
-class PprSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("seed community outranks the far community; unreachable is 0") {
-    // community A: 1↔2, 1↔3 (seed 1); community B: 10↔11 (no bridge)
-    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L),
-      (10L, 11L), (11L, 10L)).toDF("src", "dst")
-    val seeds = Seq(Tuple1(1L)).toDF("node")
-    val got = graft.operators.PageRank
-      .runPersonalized(edges, "src", "dst", seeds, iterations = 2)
-      .select($"node", $"ppr_unit").as[(Long, Long)].collect().toMap
-    // sequential replay of the integer recurrence: |S|=1 →
-    // pr0 = (1e6, 0, 0, 0, 0); outdeg(1)=2, others 1
-    // it1: in(2) = pr(1) DIV 2 = 500000, in(3) = 500000,
-    //      in(1) = 0; seed teleport 150000
-    //      pr1 = 1: 150000, 2: 425000, 3: 425000, 10/11: 0
-    // it2: in(1) = 425000 + 425000 = 850000 → 150000 + 722500
-    //      in(2) = 150000 DIV 2 = 75000 → 63750; same 3
-    assert(got(1L) == 872500L, s"seed ${got(1L)}")
-    assert(got(2L) == 63750L && got(3L) == 63750L)
-    assert(got(10L) == 0L && got(11L) == 0L, "unreachable leaked mass")
-  }
-
-  test("corpus run: top-20 non-empty, seeds present, ranks positive") {
-    val rows = SparkEntry.queries("graph_ppr")(spark, sfDir)
-      .select($"entity", $"is_seed", $"ppr_pico")
-      .as[(String, Int, Long)].collect()
-    assert(rows.length == 20)
-    assert(rows.forall(_._3 > 0))
-    assert(rows.exists(_._2 == 1), "no seed in the top-20")
-    assert(rows.exists(_._1.startsWith("s")),
-      "no supplier reached by seed mass")
-  }
-}
-
 /** D40 streaming_heartbeat — last-seen is a lattice max (snapshot ≡
   * batch under any split); silence and staleness recompute exactly.
   */
