@@ -16,9 +16,12 @@ import org.apache.spark.sql.types._
   * filtered (TripAggregatorApplication.kt:194).
   *
   * Spark-first: ONE wide nullable schema instead of a sealed class
-  * hierarchy — columnar pruning then makes "queries touching only
-  * speed" read only speed; `from_json` in PERMISSIVE mode nulls
-  * malformed rows, and `.filter($"trip_id".isNotNull)` is the
+  * hierarchy. [[messageSchema]] is the full wire contract, and
+  * [[parse]] decodes all of it. [[parseRaw]] decodes each message
+  * once, against a read schema cut from messageSchema to the fields
+  * its columns emit; the pids and event payloads it does not emit
+  * are skipped like unknown keys. `from_json` in PERMISSIVE mode
+  * nulls malformed rows, and the `trip_id IS NOT NULL` filter is the
   * reference's tolerant-parse-then-filter, codegen'd.
   */
 object TripModel {
@@ -116,8 +119,8 @@ object TripModel {
     * their CLASS NAMES as keys (the natural Gson convention; a
     * producer emitting them picks the key, the reference never
     * did). Payload member names are the Kotlin property names,
-    * which ARE Gson's wire names. All nullable; columnar pruning
-    * keeps untouched kinds free.
+    * which ARE Gson's wire names. All nullable; parseRaw's read
+    * schema leaves the kinds it does not emit undecoded.
     */
   val pidSchema: StructType = StructType(Seq(
     // --- the 16 kinds on the reference's live wire path ---
@@ -256,9 +259,9 @@ object TripModel {
   val messageSchema: StructType = StructType(Seq(
     StructField("body", bodySchema)))
 
-  /** Tolerant parse of a raw JSON string column into flat, pruned
-    * columns. Malformed rows surface as null trip_id (reference:
-    * map-to-null + filter).
+  /** Tolerant parse of a raw JSON string column against the full
+    * wire contract. Malformed rows surface with a null
+    * `body.tripNumber` (reference: map-to-null + filter).
     */
   def parse(raw: Column): Column = from_json(raw, messageSchema)
 
@@ -287,51 +290,93 @@ object TripModel {
     * primitive-boolean default of false).
     */
   def parseDeposits(df: DataFrame, rawCol: String): DataFrame =
-    df.withColumn("_d", from_json(col(rawCol), depositSchema))
-      .select(
-        col("_d.id").as("account_id"),
-        col("_d.amount").as("amount"),
-        col("_d.timestamp").as("ts"),
-        coalesce(col("_d.is_terminator"), lit(false)).as("is_terminator"))
-      .filter(col("account_id").isNotNull)
+    decodeOnce(df, rawCol, depositSchema, "account_id",
+      col("_msg.id").as("account_id"),
+      col("_msg.amount").as("amount"),
+      col("_msg.timestamp").as("ts"),
+      coalesce(col("_msg.is_terminator"), lit(false)).as("is_terminator"))
+
+  /** `rawCol` decoded with `schema` into `_msg` exactly once per row,
+    * projected to `cols`, keeping the rows whose `key` is non-null.
+    *
+    * The decode is a generator's output, not a projection alias:
+    * predicate pushdown (PushPredicateThroughNonJoin) moves a filter
+    * below a Project by copying the aliased expression into it, so
+    * with `_msg` as an alias the key filter would run its own
+    * `from_json` under the Project's — two decodes of every line. A
+    * predicate on a Generate's output stays above the Generate, so
+    * the one decode feeds both the filter and `cols`.
+    */
+  private def decodeOnce(df: DataFrame, rawCol: String, schema: StructType,
+      key: String, cols: Column*): DataFrame =
+    df.select(explode(array(from_json(col(rawCol), schema))).as("_msg"))
+      .select(cols: _*)
+      .filter(col(key).isNotNull)
+
+  private def oneOf(valid: Seq[String])(c: Column): Column =
+    when(c.isin(valid: _*), c)
+
+  /** parseRaw's output columns: name, field path under the message
+    * root, and how the value is read. The paths are all parseRaw
+    * decodes (see [[readSchema]]).
+    */
+  private val rawColumns: Seq[(String, String, Column => Column)] = Seq(
+    ("trip_id", "body.tripNumber", identity),
+    ("ts", "body.timestamp", c => to_timestamp(c)),
+    ("event_type", "body.type", identity),
+    ("odometer", "body.odometer", identity),
+    ("vehicle_protocol", "body.vehicleProtocol", oneOf(vehicleProtocols)),
+    ("vin", "body.vin", identity),
+    ("fuel_consumed", "body.fuelConsumed", identity),
+    ("speed_kmh", "body.pidData.VehicleSpeed", identity),
+    ("rpm", "body.pidData.EngineRpm", identity),
+    ("lat", "body.pidData.GpsReading.latitude", identity),
+    ("lon", "body.pidData.GpsReading.longitude", identity),
+    ("gps_fix_quality", "body.pidData.GpsReading.fixQuality", oneOf(gpsFixQualities)),
+    ("mil_on", "body.pidData.MilStatus.commandedOn", identity),
+    ("fuel_o2_fault", "body.pidData.FuelStatus.closedLoopO2SensorFault", identity),
+    ("sec_air_upstream",
+      "body.pidData.CommandedSecondaryAirStatus.upstreamOfFirstCatalyticConverter", identity),
+    ("n_accel_samples", "body.pidData.RawAccelerometer", size),
+    // TripEvent payloads (EventData.kt) — enum-validated like
+    // vehicleProtocol: out-of-range values null out, mirroring the
+    // reference's valueOf-throw → tolerant-null path.
+    ("accel_axis", "body.eventData.accelerometer.triggeredAxis", oneOf(triggeredAxes)),
+    ("accel_offset_s", "body.eventData.accelerometer.secondsRelativeToTrigger", identity),
+    ("n_accel_points", "body.eventData.accelerometer.samples", size),
+    ("time_fence_type", "body.eventData.timeFence.type", oneOf(timeFenceTypes)),
+    ("time_fence_distance", "body.eventData.timeFence.distanceTraveled", identity),
+    ("geo_fence_type", "body.eventData.geoFence.type", oneOf(geoFenceTypes)),
+    ("geo_fence_id", "body.eventData.geoFence.geoFenceId", _.cast("int")))
+
+  /** `schema` cut down to the fields on `paths` (each a field-name
+    * path from the root, through structs only). A path that ends at a
+    * field keeps that field's whole type, so an array read only
+    * through `size` still decodes — and nulls out — exactly as under
+    * the full schema.
+    */
+  private def prunedTo(schema: StructType, paths: Seq[List[String]]): StructType =
+    StructType(schema.fields.toSeq.flatMap { f =>
+      val under = paths.collect { case name :: rest if name == f.name => rest }
+      if (under.isEmpty) None
+      else if (under.contains(Nil)) Some(f)
+      else Some(f.copy(dataType = prunedTo(f.dataType.asInstanceOf[StructType], under)))
+    })
+
+  /** [[messageSchema]] cut to the fields parseRaw emits (44 of its 177
+    * nested fields). `from_json` itself is pruned only at its top
+    * level (`body`), and a read struct over 100 fields
+    * (`spark.sql.codegen.maxFields`) drops the projection out of
+    * whole-stage codegen. Unread keys are skipped like unknown keys,
+    * and a mistyped value nulls only its own field under either
+    * schema (partial results), so every emitted column is the one the
+    * full schema gives.
+    */
+  private val readSchema: StructType =
+    prunedTo(messageSchema, rawColumns.map(_._2.split('.').toList))
 
   /** Full pipeline stage: raw-string df → flat typed trip events. */
   def parseRaw(df: DataFrame, rawCol: String): DataFrame =
-    df.withColumn("_msg", parse(col(rawCol)))
-      .select(
-        col("_msg.body.tripNumber").as("trip_id"),
-        to_timestamp(col("_msg.body.timestamp")).as("ts"),
-        col("_msg.body.type").as("event_type"),
-        col("_msg.body.odometer").as("odometer"),
-        when(col("_msg.body.vehicleProtocol").isin(vehicleProtocols: _*),
-          col("_msg.body.vehicleProtocol")).as("vehicle_protocol"),
-        col("_msg.body.vin").as("vin"),
-        col("_msg.body.fuelConsumed").as("fuel_consumed"),
-        col("_msg.body.pidData.VehicleSpeed").as("speed_kmh"),
-        col("_msg.body.pidData.EngineRpm").as("rpm"),
-        col("_msg.body.pidData.GpsReading.latitude").as("lat"),
-        col("_msg.body.pidData.GpsReading.longitude").as("lon"),
-        when(col("_msg.body.pidData.GpsReading.fixQuality").isin(gpsFixQualities: _*),
-          col("_msg.body.pidData.GpsReading.fixQuality")).as("gps_fix_quality"),
-        col("_msg.body.pidData.MilStatus.commandedOn").as("mil_on"),
-        col("_msg.body.pidData.FuelStatus.closedLoopO2SensorFault")
-          .as("fuel_o2_fault"),
-        col("_msg.body.pidData.CommandedSecondaryAirStatus.upstreamOfFirstCatalyticConverter")
-          .as("sec_air_upstream"),
-        size(col("_msg.body.pidData.RawAccelerometer")).as("n_accel_samples"),
-        // TripEvent payloads (EventData.kt) — enum-validated like
-        // vehicleProtocol: out-of-range values null out, mirroring the
-        // reference's valueOf-throw → tolerant-null path.
-        when(col("_msg.body.eventData.accelerometer.triggeredAxis").isin(triggeredAxes: _*),
-          col("_msg.body.eventData.accelerometer.triggeredAxis")).as("accel_axis"),
-        col("_msg.body.eventData.accelerometer.secondsRelativeToTrigger")
-          .as("accel_offset_s"),
-        size(col("_msg.body.eventData.accelerometer.samples")).as("n_accel_points"),
-        when(col("_msg.body.eventData.timeFence.type").isin(timeFenceTypes: _*),
-          col("_msg.body.eventData.timeFence.type")).as("time_fence_type"),
-        col("_msg.body.eventData.timeFence.distanceTraveled").as("time_fence_distance"),
-        when(col("_msg.body.eventData.geoFence.type").isin(geoFenceTypes: _*),
-          col("_msg.body.eventData.geoFence.type")).as("geo_fence_type"),
-        col("_msg.body.eventData.geoFence.geoFenceId").cast("int").as("geo_fence_id"))
-      .filter(col("trip_id").isNotNull)
+    decodeOnce(df, rawCol, readSchema, "trip_id",
+      rawColumns.map { case (name, path, read) => read(col(s"_msg.$path")).as(name) }: _*)
 }

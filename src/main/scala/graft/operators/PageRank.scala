@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   * grouped by destination, map-side combined) over an edge table
   * partitioned by source — O(edges) per round, no windows, node
   * state never leaves the cluster. Iterations materialize via
-  * cache+count exactly like [[KMeans]]'s Lloyd loop.
+  * cache+count exactly like [[KMeans]]'s Lloyd loop; the last one is
+  * a local checkpoint, and nothing PageRank persisted stays cached
+  * once it returns.
   */
 object PageRank {
 
@@ -93,7 +95,8 @@ object PageRank {
         .as("is_seed"),
         coalesce(col("outdeg"), lit(0L)).as("outdeg"))
       .persist()
-    val ns = nodes.filter(col("is_seed")).count()
+    val counts = nodes.agg(count(lit(1)), count_if(col("is_seed"))).head()
+    val (n, ns) = (counts.getLong(0), counts.getLong(1))
     require(ns > 0, "PageRank.runPersonalized: no seed appears in the graph")
     // the seed-count ceiling keeps the per-seed floor share nonzero
     // (|S| > mass ⇒ every rank decays to 0)
@@ -105,7 +108,7 @@ object PageRank {
         "floor to 0 — raise `unit` (e.g. 1e12)")
     def onSeeds(v: Long): Column =
       when(col("is_seed"), lit(v)).otherwise(lit(0L))
-    rounds(e, nodes, nodes.count(), onSeeds(unit / ns),
+    rounds(e, nodes, n, onSeeds(unit / ns),
       onSeeds(teleportMass / ns), iterations, dampingPct)
       .select(col("node"), col("is_seed"), col("pr").as("ppr_unit"))
   }
@@ -192,25 +195,33 @@ object PageRank {
     // so the per-round edge join attaches BOTH pr and outdeg in one
     // broadcast — the edge rows stay (src, dst).
     val keep = nodes.columns.toSeq.map(col)
-    var pr = nodes.select(keep :+ init.as("pr"): _*)
-    var i = 0
-    while (i < iterations) {
+    def round(pr: DataFrame): DataFrame = {
       val contrib = e.join(maybeBroadcast(pr.drop("is_seed")),
           col("src") === col("node"))
         // DIV, not `/`: Spark's / on longs is DOUBLE division — the
         // whole point here is exact integer floor arithmetic
         .select(col("dst").as("node"), expr("pr DIV outdeg").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("in_mass"))
-      val next = nodes.join(maybeBroadcast(contrib), Seq("node"), "left")
+      nodes.join(maybeBroadcast(contrib), Seq("node"), "left")
         .select(keep :+ (teleport +
           expr(s"($dampingPct * coalesce(in_mass, CAST(0 AS BIGINT))) DIV 100"))
           .as("pr"): _*)
-        .cache()
-      next.count()
-      if (i > 0) pr.unpersist(blocking = true)
-      pr = next
-      i += 1
     }
-    pr
+    var pr = nodes.select(keep :+ init.as("pr"): _*)
+    var cached: Option[DataFrame] = None
+    for (_ <- 1 until iterations) {
+      val next = round(pr).cache()
+      next.count()
+      cached.foreach(_.unpersist(blocking = true))
+      cached = Some(next)
+      pr = next
+    }
+    // The last round is a local checkpoint: no CacheManager entry,
+    // and it lives as long as the caller holds the result. With its
+    // lineage cut, everything persisted above is released, dependents
+    // first so that no cached plan above them is rebuilt.
+    val ranks = (if (iterations > 0) round(pr) else pr).localCheckpoint()
+    (cached.toSeq ++ Seq(nodes, e)).foreach(_.unpersist(blocking = true))
+    ranks
   }
 }

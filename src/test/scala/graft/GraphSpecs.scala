@@ -609,3 +609,19 @@ class GraphHandSolvedSpec extends SparkTestBase {
     assert(r.getAs[Double]("assortativity") == -1.0)
   }
 }
+
+/** PageRank releases what it persists: a ranking query leaves the
+  * session's CacheManager holding what it held before the query.
+  */
+class PageRankCacheSpec extends SparkTestBase {
+
+  test("graph_pagerank, graph_ppr and textrank_keywords leave no cached table") {
+    import org.apache.spark.sql.graftbridge.CachedEntries
+    for (name <- Seq("graph_pagerank", "graph_ppr", "textrank_keywords")) {
+      val before = CachedEntries(spark)
+      assert(SparkEntry.queries(name)(spark, sfDir).collect().nonEmpty)
+      assert(CachedEntries(spark) == before,
+        s"$name left ${CachedEntries(spark) - before} more cached tables")
+    }
+  }
+}

@@ -123,6 +123,143 @@ class TripModelSpec extends SparkTestBase {
   }
 }
 
+/** `parseRaw`/`parseDeposits` decode each message once, and `parseRaw`
+  * decodes only the fields it emits yet keeps the tolerant-null
+  * contract of a full-schema parse.
+  */
+class TripParseSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import spark.implicits._
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+  import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+
+  // an RDD-backed frame: a local Seq would be folded into a
+  // LocalRelation at optimization, leaving no decode in the plan
+  private def rawDf(ls: Seq[String]): DataFrame =
+    spark.sparkContext.parallelize(ls, 2).toDF("raw")
+
+  private def decodes(df: DataFrame): Seq[JsonToStructs] =
+    collect(df.queryExecution.executedPlan) { case p =>
+      p.expressions.flatMap(_.collect { case j: JsonToStructs => j })
+    }.flatten
+
+  /** Nested field count of a type (struct members at every depth,
+    * through array elements).
+    */
+  private def fieldCount(t: DataType): Int = t match {
+    case s: StructType => s.fields.map(f => 1 + fieldCount(f.dataType)).sum
+    case a: ArrayType => fieldCount(a.elementType)
+    case _ => 0
+  }
+
+  private def ts(s: Int) = f"2020-01-01T00:00:$s%02dZ"
+  private def msg(trip: String, s: Int, rest: String = "") =
+    s"""{"body":{"tripNumber":$trip,"timestamp":"${ts(s)}","type":"TripData"$rest}}"""
+
+  private val lines: Seq[String] = Seq(
+    msg("1", 1, ""","vehicleProtocol":"CAN11Bit","odometer":10,"vin":"V1","fuelConsumed":0.5"""),
+    msg("1", 2, ""","pidData":{"VehicleSpeed":10,"EngineRpm":900,"GpsReading":{"latitude":1.5,""" +
+      """"longitude":2.5,"fixQuality":"Standard"},"MilStatus":{"commandedOn":true},""" +
+      """"FuelStatus":{"closedLoopO2SensorFault":false},""" +
+      """"CommandedSecondaryAirStatus":{"upstreamOfFirstCatalyticConverter":true},""" +
+      """"RawAccelerometer":[{"offsets":[{"x":1,"y":2,"z":3}],"base":{"x":0,"y":0,"z":0}},{}]}"""),
+    // a mistyped value in a pid parseRaw never reads, and in one it reads
+    msg("2", 3, ""","pidData":{"VehicleSpeed":11,"FuelPressure":"high","EngineRpm":950}"""),
+    msg("2", 4, ""","pidData":{"VehicleSpeed":"fast","EngineRpm":951}"""),
+    msg("2", 5, ""","pidData":{"MonitorStatusInThisDriveCycle":{"isMisfireTestAvailable":"yes"},"VehicleSpeed":12}"""),
+    // an object where an array is expected (read through size, and unread)
+    msg("3", 6, ""","pidData":{"RawAccelerometer":{"base":{"x":1}},"VehicleSpeed":13}"""),
+    msg("3", 7, ""","pidData":{"OxygenSensorsData":{"sensors":[]},"VehicleSpeed":14}"""),
+    // an array where an object is expected (read, and unread)
+    msg("3", 8, ""","pidData":{"GpsReading":[1,2],"VehicleSpeed":15}"""),
+    msg("3", 9, ""","pidData":{"AcceleratorPedalPosition":[true],"VehicleSpeed":16}"""),
+    msg("3", 10, ""","eventData":[{"gps":{}}]"""),
+    // unknown keys at every level and duplicate keys
+    """{"hdr":{"v":[1,2]},"body":{"tripNumber":4,"timestamp":"2020-01-01T00:00:11Z",""" +
+      """"extra":"x","pidData":{"UnknownPid":{"x":1},"VehicleSpeed":17}}}""",
+    """{"body":{"tripNumber":4,"tripNumber":5,"timestamp":"2020-01-01T00:00:12Z",""" +
+      """"pidData":{"VehicleSpeed":1,"VehicleSpeed":2}}}""",
+    // truncated and non-JSON lines, empty objects
+    """{"body":{"tripNumber":6,"timestamp":"2020-01-01T00:00:13Z","pidData":{"VehicleSpeed":3""",
+    """{"body":{"tripNumber":6,"timestamp":"2020-01-01T00:00:14Z","pidData":{"FuelType":"Diesel"""",
+    "not json", "{}", """{"body":{}}""", "",
+    // a string and a null tripNumber
+    msg("\"7\"", 15), msg("null", 16),
+    // the four event payloads, then invalid enums
+    msg("8", 17, ""","eventData":{"accelerometer":{"secondsRelativeToTrigger":2,""" +
+      """"accelerometerType":"Triggered","triggeredAxis":"NegativeZAxis","samples":[{"x":1},{"y":2}]}}"""),
+    msg("8", 18, ""","eventData":{"timeFence":{"type":"End","tripId":8,"distanceTraveled":12.5,""" +
+      """"durationInMinutes":30}}"""),
+    msg("8", 19, ""","eventData":{"geoFence":{"type":"Entry","geoFenceId":77}}"""),
+    msg("8", 20, ""","eventData":{"gps":{"latitude":"north","fixQuality":"Standard"}}"""),
+    msg("9", 21, ""","vehicleProtocol":"CAN64Bit","pidData":{"GpsReading":{"fixQuality":"Perfect"}},""" +
+      """"eventData":{"accelerometer":{"triggeredAxis":"SidewaysAxis"},"timeFence":{"type":"Middle"},""" +
+      """"geoFence":{"type":"Teleport","geoFenceId":1.9}}"""))
+
+  /** parseRaw as a full-contract parse: `TripModel.parse` (the whole
+    * messageSchema), the 23 output columns and the trip_id filter.
+    */
+  private def reference(raw: DataFrame): DataFrame = {
+    import TripModel._
+    def oneOf(c: String, valid: Seq[String]) = when(col(c).isin(valid: _*), col(c))
+    raw.select(parse(col("raw")).as("m")).select(
+      col("m.body.tripNumber").as("trip_id"),
+      to_timestamp(col("m.body.timestamp")).as("ts"),
+      col("m.body.type").as("event_type"),
+      col("m.body.odometer").as("odometer"),
+      oneOf("m.body.vehicleProtocol", vehicleProtocols).as("vehicle_protocol"),
+      col("m.body.vin").as("vin"),
+      col("m.body.fuelConsumed").as("fuel_consumed"),
+      col("m.body.pidData.VehicleSpeed").as("speed_kmh"),
+      col("m.body.pidData.EngineRpm").as("rpm"),
+      col("m.body.pidData.GpsReading.latitude").as("lat"),
+      col("m.body.pidData.GpsReading.longitude").as("lon"),
+      oneOf("m.body.pidData.GpsReading.fixQuality", gpsFixQualities).as("gps_fix_quality"),
+      col("m.body.pidData.MilStatus.commandedOn").as("mil_on"),
+      col("m.body.pidData.FuelStatus.closedLoopO2SensorFault").as("fuel_o2_fault"),
+      col("m.body.pidData.CommandedSecondaryAirStatus.upstreamOfFirstCatalyticConverter")
+        .as("sec_air_upstream"),
+      size(col("m.body.pidData.RawAccelerometer")).as("n_accel_samples"),
+      oneOf("m.body.eventData.accelerometer.triggeredAxis", triggeredAxes).as("accel_axis"),
+      col("m.body.eventData.accelerometer.secondsRelativeToTrigger").as("accel_offset_s"),
+      size(col("m.body.eventData.accelerometer.samples")).as("n_accel_points"),
+      oneOf("m.body.eventData.timeFence.type", timeFenceTypes).as("time_fence_type"),
+      col("m.body.eventData.timeFence.distanceTraveled").as("time_fence_distance"),
+      oneOf("m.body.eventData.geoFence.type", geoFenceTypes).as("geo_fence_type"),
+      col("m.body.eventData.geoFence.geoFenceId").cast("int").as("geo_fence_id"))
+      .filter(col("trip_id").isNotNull)
+  }
+
+  test("parseRaw decodes once, with a schema cut to the fields it emits") {
+    val parsed = TripModel.parseRaw(rawDf(lines), "raw")
+    for (df <- Seq(parsed, parsed.select("trip_id", "ts", "lat", "lon", "speed_kmh"))) {
+      val js = decodes(df)
+      assert(js.length == 1, s"${js.length} JSON decodes:\n${df.queryExecution.executedPlan}")
+    }
+    assert(fieldCount(TripModel.messageSchema) == 177)
+    assert(fieldCount(decodes(parsed).head.dataType) == 44)
+  }
+
+  test("parseDeposits decodes once") {
+    val raw = rawDf(Seq("""{"id":1,"amount":2.5,"timestamp":3}""", "bad"))
+    val df = TripModel.parseDeposits(raw, "raw")
+    assert(decodes(df).length == 1, s"${df.queryExecution.executedPlan}")
+    assert(df.as[(Int, Double, Long, Boolean)].collect().toSeq == Seq((1, 2.5, 3L, false)))
+  }
+
+  test("parseRaw equals the full-schema parse on malformed and edge-case lines") {
+    val raw = rawDf(lines)
+    val got = TripModel.parseRaw(raw, "raw")
+    val want = reference(raw)
+    assert(got.schema == want.schema)
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(w.length == 17, w.mkString("\n")) // non-vacuous: most lines survive
+    assert(g.sortBy(_.toString) == w.sortBy(_.toString),
+      s"\ngot:\n${g.mkString("\n")}\nwant:\n${w.mkString("\n")}")
+  }
+}
+
 /** Streaming sessionization + watermark + stateful aggregation (D1-D4). */
 class StreamingSessionSpec extends SparkTestBase {
   import spark.implicits._
