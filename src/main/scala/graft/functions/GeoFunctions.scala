@@ -38,6 +38,24 @@ object GeoFunctions {
     lit(2.0 * EarthRadiusKm) * asin(sqrt(h))
   }
 
+  /** Same formula on doubles, for row-at-a-time code (the trip fold,
+    * the stateful trip aggregate). It spells the Column version's
+    * operations in the order Spark's generated code runs them — degrees
+    * to radians as `(x * π) / 180`, `java.lang.StrictMath.pow` for
+    * `pow`, `java.lang.Math` for sin, cos, sqrt and asin — so the two
+    * give bit-identical distances.
+    */
+  def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
+    val phi1 = lat1 * math.Pi / 180.0
+    val phi2 = lat2 * math.Pi / 180.0
+    val dPhi = (lat2 - lat1) * math.Pi / 180.0
+    val dLambda = (lon2 - lon1) * math.Pi / 180.0
+    val h =
+      StrictMath.pow(Math.sin(dPhi / 2.0), 2.0) +
+        Math.cos(phi1) * Math.cos(phi2) * StrictMath.pow(Math.sin(dLambda / 2.0), 2.0)
+    2.0 * EarthRadiusKm * Math.asin(Math.sqrt(h))
+  }
+
   /** Same formula as a SQL string fragment, used to keep the DuckDB
     * oracle bit-for-bit aligned with the Spark plan (same operation
     * order). Arguments are SQL expressions in degrees.

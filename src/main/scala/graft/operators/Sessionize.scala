@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   * session until a gap larger than `gapSeconds` appears; the trigger's
   * FIRE_AND_PURGE on timeout == closing the session.
   *
-  * Plan shape (scale posture): ONE shuffle on the key; the lag +
-  * running-sum windows and the downstream per-(key, session) groupBy
-  * all reuse that partitioning (HashPartitioning(key) satisfies
-  * ClusteredDistribution(key, session)), so a 100 TB event log
-  * sessionizes with a single exchange. No driver-side state, no
+  * Plan shape (scale posture): ONE shuffle on the key, and the lag
+  * and running-sum windows both reuse it. A downstream groupBy reuses
+  * it too when it groups by the key columns themselves, e.g. (key,
+  * session): HashPartitioning(key) satisfies
+  * ClusteredDistribution(key, session). A downstream grouped by a key
+  * DERIVED from them (the trip path's `trip_id * 100 + session_seq`)
+  * does not, and reshuffles once more. No driver-side state, no
   * per-key collect.
   */
 object Sessionize {
@@ -35,8 +37,12 @@ object Sessionize {
       orderCols: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(key).orderBy(orderCols: _*)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val prev = lag(tsecCol, 1).over(w)
+    // lag(tsec) as a column of its own: used twice inline, it is
+    // planned as two window functions (_we0, _we1) computing one value
+    val prev = col("_prev_tsec")
     val isNew = when(prev.isNull || (tsecCol - prev) > gapSeconds, 1).otherwise(0)
-    df.withColumn("session_seq", sum(isNew).over(run))
+    df.withColumn("_prev_tsec", lag(tsecCol, 1).over(w))
+      .withColumn("session_seq", sum(isNew).over(run))
+      .drop("_prev_tsec")
   }
 }

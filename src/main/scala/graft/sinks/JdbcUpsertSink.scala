@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * reference's running `balance = balance + excluded.balance`
   * accumulation (TripAggregatorApplication.kt:228-233).
   *
-  * Failure semantics: the postgres path commits ONE transaction per
+  * Failure semantics: every dialect commits ONE transaction per
   * partition, so a failed or speculatively-retried task re-applies
   * against a database that saw none of its rows. Note that
   * accumulating `updateExprs` (`balance = balance + excluded.balance`)
@@ -59,7 +59,8 @@ class JdbcUpsertSink(
   }
 
   /** Derby (no usable MERGE-from-VALUES): classic two-statement
-    * upsert emulation — UPDATE first, INSERT when no row matched.
+    * upsert emulation — UPDATE first, INSERT when no row matched,
+    * both batched (see [[PartitionUpserter]]).
     * Derby requires typed parameters inside expressions, so every
     * `?` is wrapped in CAST(? AS <type>). Parameters: one per value
     * expression `?` occurrence, then keys.
@@ -133,6 +134,13 @@ class JdbcUpsertSink(
     * drains any pending statement batch without committing.
     * Rows must already be projected to (keyCols ++ valCols) order
     * with `schema` describing that projection.
+    *
+    * Derby batches its upsert emulation: pending rows queue as one
+    * UPDATE batch; a flush runs it, then one INSERT batch of the rows
+    * whose update count is 0. A row whose key is already pending
+    * flushes first, so two rows of one key never share a batch — the
+    * second updates the row the first inserted, and accumulating
+    * `updateExprs` apply in row order.
     */
   private[graft] final class PartitionUpserter(conn: Connection, schema: StructType) {
     private val types = schema.fields.map(_.dataType)
@@ -147,9 +155,14 @@ class JdbcUpsertSink(
         .count(_ == '?')
     }.toArray
     private var pending = 0
+    // Derby: the rows in the pending UPDATE batch, and their keys
+    private val pendingRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    private val pendingKeys = scala.collection.mutable.HashSet.empty[Seq[Any]]
 
     def write(row: Row): Unit =
       if (derby) {
+        val key = (0 until nKeys).map(row.get)
+        if (pendingKeys.contains(key)) flush()
         var idx = 1
         var v = 0
         while (v < slotCounts.length) {
@@ -162,30 +175,53 @@ class JdbcUpsertSink(
         }
         var k = 0
         while (k < nKeys) { bind(upd, idx, types(k), row, k); idx += 1; k += 1 }
-        if (upd.executeUpdate() == 0) {
-          var i = 0
-          while (i < types.length) { bind(ins, i + 1, types(i), row, i); i += 1 }
-          ins.executeUpdate()
-        }
+        upd.addBatch()
+        pendingRows += row
+        pendingKeys += key
+        if (pendingRows.length >= batchSize) flush()
       } else {
-        var i = 0
-        while (i < types.length) { bind(ps, i + 1, types(i), row, i); i += 1 }
+        bindRow(ps, row)
         ps.addBatch()
         pending += 1
         if (pending % batchSize == 0) ps.executeBatch()
       }
 
-    def flush(): Unit = if (!derby && pending > 0) { ps.executeBatch(); pending = 0 }
+    /** Binds every column of `row` to `st`'s parameters, in order. */
+    private def bindRow(st: PreparedStatement, row: Row): Unit = {
+      var i = 0
+      while (i < types.length) { bind(st, i + 1, types(i), row, i); i += 1 }
+    }
+
+    def flush(): Unit =
+      if (derby) {
+        if (pendingRows.nonEmpty) {
+          val counts = upd.executeBatch()
+          var inserts = 0
+          var r = 0
+          while (r < counts.length) {
+            if (counts(r) == 0) {
+              bindRow(ins, pendingRows(r))
+              ins.addBatch()
+              inserts += 1
+            }
+            r += 1
+          }
+          if (inserts > 0) ins.executeBatch()
+          pendingRows.clear()
+          pendingKeys.clear()
+        }
+      } else if (pending > 0) { ps.executeBatch(); pending = 0 }
 
     def close(): Unit = {
       if (derby) { upd.close(); ins.close() } else ps.close()
     }
   }
 
-  /** Batch (or foreachBatch) write: one connection per partition.
-    * Postgres path: single batched ON CONFLICT statement flushed
-    * every `batchSize` rows (the production shape). Derby path:
-    * UPDATE-then-INSERT emulation per row (test DB only).
+  /** Batch (or foreachBatch) write: one connection and ONE
+    * transaction per partition. Postgres path: single batched ON
+    * CONFLICT statement flushed every `batchSize` rows (the
+    * production shape). Derby path: batched UPDATE-then-INSERT
+    * emulation (see [[PartitionUpserter]]), the same transaction.
     *
     * EPOCH FENCING (`fenceTable`): with accumulating `updateExprs`
     * (balance = balance + excluded.balance) an upsert is NOT
@@ -237,7 +273,6 @@ class JdbcUpsertSink(
       if (fenceTable.isEmpty) raw
       else raw.repartition(fenceBuckets, keyCols.map(raw.col): _*)
     val outSchema = projected.schema
-    val pg = dialect != "derby"
     val fence = fenceTable
     val sinkTable = table
     projected.foreachPartition { (rows: Iterator[Row]) =>
@@ -246,11 +281,8 @@ class JdbcUpsertSink(
         // Statement batches flush for memory mid-partition, but one
         // transaction commits per partition: a failed or
         // speculatively-retried task re-runs against a database that
-        // saw none of its rows. (Unfenced Derby — the embedded test
-        // DB — autocommits per statement; fenced mode is
-        // transactional on both dialects, the fence requires it.)
-        val txn = pg || fence.nonEmpty
-        if (txn) conn.setAutoCommit(false)
+        // saw none of its rows.
+        conn.setAutoCommit(false)
         try {
           val alreadyApplied = fence.exists { ft =>
             val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -274,7 +306,7 @@ class JdbcUpsertSink(
               ins.executeUpdate() // PK violation here = a racing
               ins.close()         // duplicate won — this txn rolls back
             }
-            if (txn) conn.commit()
+            conn.commit()
             up.close()
           } else {
             // Loud, not silent: a fence skip is correct under replay
@@ -283,15 +315,13 @@ class JdbcUpsertSink(
               s"[JdbcUpsertSink] fence hit: table=$sinkTable batch=$batchId " +
                 s"partition=${org.apache.spark.TaskContext.getPartitionId()} " +
                 "already applied — skipping (replay/speculative retry)")
-            if (txn) {
-              // the fence check itself opened a read transaction —
-              // end it (nothing to persist) or close() throws
-              conn.rollback()
-            }
+            // the fence check itself opened a read transaction —
+            // end it (nothing to persist) or close() throws
+            conn.rollback()
           }
         } catch {
           case t: Throwable =>
-            if (txn) try conn.rollback() catch { case _: Throwable => }
+            try conn.rollback() catch { case _: Throwable => }
             throw t
         } finally conn.close()
       }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - task `commit()` commits the transaction and reports a
   *    row-count `WriterCommitMessage`; task `abort()` ROLLS BACK, so
   *    a failed or speculatively-retried task leaves no partial rows
-  *    (for Derby too — the v2 path runs it transactionally, unlike
-  *    the autocommit foreachPartition path);
+  *    (as the foreachPartition path's transaction per partition
+  *    does);
   *  - the driver-side job `commit(messages)` observes the per-task
   *    row counts (`JdbcUpsertProvider.lastCommittedRows`).
   *

@@ -76,16 +76,6 @@ object SessionPipeline extends Serializable {
         unix_timestamp(col("session_window.end")).as("end_s"),
         col("n_events"), col("sum_value"))
 
-  private def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val phi1 = math.toRadians(lat1)
-    val phi2 = math.toRadians(lat2)
-    val dPhi = math.toRadians(lat2 - lat1)
-    val dLambda = math.toRadians(lon2 - lon1)
-    val h = math.pow(math.sin(dPhi / 2), 2) +
-      math.cos(phi1) * math.cos(phi2) * math.pow(math.sin(dLambda / 2), 2)
-    2.0 * 6371.0 * math.asin(math.sqrt(h))
-  }
-
   /** The reference's incremental AggregateFunction + inactivity
     * trigger as a stateful streaming operator. Emits a TripSession
     * when a key sees no events for the processing-time timeout
@@ -122,7 +112,7 @@ object SessionPipeline extends Serializable {
               r.tsec - s.lastS
             else 0L
           val legKm =
-            if (s.nEvents > 0) haversineKm(s.lastLat, s.lastLon, r.lat, r.lon)
+            if (s.nEvents > 0) GeoFunctions.haversineKm(s.lastLat, s.lastLon, r.lat, r.lon)
             else 0.0
           s = s.copy(
             nEvents = s.nEvents + 1,

@@ -63,6 +63,29 @@ class SessionizeSpec extends SparkTestBase {
   }
 }
 
+/** Sessionize evaluates `lag(tsec)` once per row. */
+class SessionizePlanSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import spark.implicits._
+  import org.apache.spark.sql.catalyst.expressions.{Lag, WindowExpression}
+  import org.apache.spark.sql.execution.window.WindowExec
+
+  test("the executed plan computes lag(tsec) in one window function") {
+    val df = spark.sparkContext.parallelize(Seq((1L, 100L, 1L), (1L, 200L, 2L), (2L, 50L, 3L)), 2)
+      .toDF("user_id", "tsec", "event_id")
+    val out = Sessionize.withSessionId(df, col("user_id"), col("tsec"), 1800L,
+      Seq(col("tsec"), col("event_id")))
+    assert(out.columns.toSeq == Seq("user_id", "tsec", "event_id", "session_seq"))
+    out.collect()
+    val windows = collect(out.queryExecution.executedPlan) { case w: WindowExec => w }
+    val lags = windows.flatMap(_.windowExpression.flatMap(_.collect {
+      case WindowExpression(l: Lag, _) => l
+    }))
+    assert(lags.length == 1, s"${lags.length} lag window functions:\n${out.queryExecution.executedPlan}")
+    assert(windows.length == 2, out.queryExecution.executedPlan.toString)
+  }
+}
+
 /** Trip aggregation semantics vs the reference definition (A6-A8). */
 class TripAggregatorSpec extends SparkTestBase {
   import spark.implicits._
@@ -90,6 +113,130 @@ class TripAggregatorSpec extends SparkTestBase {
     val out = TripAggregator.aggregate(rows, col("user_id"), col("tsec"),
       col("lat"), col("lon"), col("speed"), 5.0, Seq(col("tsec"))).head()
     assert(math.abs(out.getAs[Double]("distance_km") - 222.39) < 0.1)
+  }
+}
+
+/** The sorted-run trip fold against the lag-window + groupBy spelling
+  * it replaced, and its plan.
+  */
+class TripFoldSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import spark.implicits._
+  import org.apache.spark.sql.{Column, DataFrame, Row}
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+  import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  import org.apache.spark.sql.execution.window.WindowExec
+
+  /** TripAggregator.aggregate as it was: lag windows, then groupBy. */
+  private def windowSpelling(df: DataFrame, key: Column, tsec: Column, lat: Column,
+      lon: Column, speedKmh: Column, lowSpeedThreshold: Double, orderCols: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(orderCols: _*)
+    val prevTs = lag(tsec, 1).over(w)
+    val prevLat = lag(lat, 1).over(w)
+    val prevLon = lag(lon, 1).over(w)
+    val prevSpeed = lag(speedKmh, 1).over(w)
+    val legKm = when(prevLat.isNotNull,
+      GeoFunctions.haversineKm(prevLat, prevLon, lat, lon)).otherwise(lit(0.0))
+    val stoppedDelta = when(
+      prevSpeed.isNotNull && speedKmh < lowSpeedThreshold && prevSpeed < lowSpeedThreshold,
+      tsec - prevTs).otherwise(lit(0L))
+    df.withColumn("leg_km", legKm)
+      .withColumn("stopped_delta_s", stoppedDelta)
+      .groupBy(key.as("trip_key"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        (max(tsec) - min(tsec)).as("total_s"),
+        sum(col("stopped_delta_s")).as("stopped_s"),
+        sum(col("leg_km")).as("distance_km"))
+      .withColumn("moving_s", col("total_s") - col("stopped_s"))
+  }
+
+  private type In = (Option[Long], Option[Long], Long, Option[Double], Option[Double], Option[Double])
+
+  /** Random trips: nulls in every input column (the key too), tsec
+    * drawn from a narrow range so the first order column ties often
+    * (`seq` breaks the ties), speeds around the threshold.
+    */
+  private def trips(seed: Long, n: Int): Seq[In] = {
+    val r = new scala.util.Random(seed)
+    def maybe[T](p: Double)(v: => T): Option[T] = if (r.nextDouble() < p) None else Some(v)
+    (0 until n).map { i =>
+      (maybe(0.02)(r.nextInt(12).toLong), maybe(0.08)(r.nextInt(40).toLong), i.toLong,
+        maybe(0.15)(50 + r.nextDouble()), maybe(0.1)(4 + r.nextDouble()),
+        maybe(0.1)(r.nextInt(12) * 0.75))
+    }
+  }
+
+  private def input(seed: Long, n: Int): DataFrame =
+    spark.sparkContext.parallelize(trips(seed, n), 3).toDF("k", "tsec", "seq", "lat", "lon", "speed")
+
+  private def run(f: (DataFrame, Column, Column, Column, Column, Column, Double, Seq[Column]) => DataFrame,
+      df: DataFrame): Map[Option[Long], Row] =
+    f(df, col("k"), col("tsec"), col("lat"), col("lon"), col("speed"), 5.0, Seq(col("tsec"), col("seq")))
+      .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r).toMap
+
+  test("the fold equals the window spelling on random trips, distances bit-identical") {
+    for (seed <- 1L to 4L) {
+      val df = input(seed, 600)
+      val got = run(TripAggregator.aggregate(_, _, _, _, _, _, _, _), df)
+      val want = run(windowSpelling _, df)
+      assert(got.keySet == want.keySet && got.size >= 12, s"seed $seed: ${got.keySet} vs ${want.keySet}")
+      for ((k, w) <- want) {
+        val g = got(k)
+        assert(g.toSeq.dropRight(2) == w.toSeq.dropRight(2) && g.get(5) == w.get(5),
+          s"seed $seed key $k:\n got $g\nwant $w")
+        assert(java.lang.Double.doubleToRawLongBits(g.getDouble(4)) ==
+          java.lang.Double.doubleToRawLongBits(w.getDouble(4)), s"seed $seed key $k: $g vs $w")
+      }
+    }
+  }
+
+  test("output columns and types are the window spelling's") {
+    val df = input(9L, 50)
+    val got = TripAggregator.aggregate(df, col("k"), col("tsec"), col("lat"), col("lon"),
+      col("speed"), 5.0, Seq(col("tsec"), col("seq")))
+    val want = windowSpelling(df, col("k"), col("tsec"), col("lat"), col("lon"),
+      col("speed"), 5.0, Seq(col("tsec"), col("seq")))
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+  }
+
+  test("a key whose tsec are all null has null total and moving time") {
+    val df = Seq((1L, Option.empty[Long], 0L, 1.0, 1.0, 1.0), (1L, None, 1L, 1.0, 2.0, 1.0))
+      .toDF("k", "tsec", "seq", "lat", "lon", "speed")
+    val r = TripAggregator.aggregate(df, col("k"), col("tsec"), col("lat"), col("lon"),
+      col("speed"), 5.0, Seq(col("tsec"), col("seq"))).head()
+    assert(r.getLong(1) == 2L && r.isNullAt(2) && r.getLong(3) == 0L && r.isNullAt(5))
+    assert(r.getDouble(4) == GeoFunctions.haversineKm(1.0, 1.0, 1.0, 2.0))
+  }
+
+  private def nodes(p: SparkPlan)(f: PartialFunction[SparkPlan, Unit]): Int =
+    collect(p) { case n if f.isDefinedAt(n) => n }.length
+
+  test("plan: one exchange and one sort, no window and no hash aggregate") {
+    val out = TripAggregator.aggregate(input(3L, 200), col("k"), col("tsec"), col("lat"),
+      col("lon"), col("speed"), 5.0, Seq(col("tsec"), col("seq")))
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    assert(nodes(plan) { case _: ShuffleExchangeExec => } == 1, plan.toString)
+    assert(nodes(plan) { case _: SortExec => } == 1, plan.toString)
+    assert(nodes(plan) { case _: WindowExec => } == 0, plan.toString)
+    assert(nodes(plan) { case _: BaseAggregateExec => } == 0, plan.toString)
+  }
+
+  test("plan: the sessionized trip path keeps two exchanges and two windows") {
+    val events = input(5L, 300).withColumn("ts", timestamp_seconds(col("tsec")))
+    val sessions = Sessionize.withSessionId(events, col("k"), col("tsec"), 10L, Seq(col("ts")))
+    val gps = sessions.filter(col("lat").isNotNull)
+      .withColumn("trip_key", col("k") * 100 + col("session_seq"))
+    val out = TripAggregator.aggregate(gps, col("trip_key"), col("tsec"), col("lat"),
+      col("lon"), col("speed"), 5.0, Seq(col("ts")))
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    assert(nodes(plan) { case _: ShuffleExchangeExec => } == 2, plan.toString)
+    assert(nodes(plan) { case _: WindowExec => } == 2, plan.toString)
+    assert(nodes(plan) { case _: BaseAggregateExec => } == 0, plan.toString)
   }
 }
 

@@ -16,6 +16,11 @@ case class DedupEv(event_id: Long, ts: java.sql.Timestamp)
 class TripModelSpec extends SparkTestBase {
   import spark.implicits._
 
+  // RDD-backed, so the executed plan (filter, generate, decode kernel)
+  // runs: a local Seq would be folded into a LocalRelation and
+  // evaluated at optimization
+  private def rawDf(ls: Seq[String]) = spark.sparkContext.parallelize(ls, 2).toDF("raw")
+
   private val start =
     """{"body":{"tripNumber":7,"timestamp":"2020-01-01T00:00:00Z","type":"TripStartRelativeTime",
       |"odometer":1200,"vehicleProtocol":"CAN11Bit","vin":"VIN123"}}""".stripMargin.replace("\n", "")
@@ -38,7 +43,7 @@ class TripModelSpec extends SparkTestBase {
       |"odometer":1212,"fuelConsumed":1.5}}""".stripMargin.replace("\n", "")
 
   test("parses the reference message shapes; malformed rows dropped") {
-    val raw = Seq(start, data, end, "not json at all", """{"body":{}}""").toDF("raw")
+    val raw = rawDf(Seq(start, data, end, "not json at all", """{"body":{}}"""))
     val out = TripModel.parseRaw(raw, "raw").orderBy("ts")
     val rows = out.collect()
     assert(rows.length == 3) // malformed + missing tripNumber filtered
@@ -68,7 +73,7 @@ class TripModelSpec extends SparkTestBase {
       """{"body":{"tripNumber":9,"timestamp":"2020-01-01T01:00:10Z","type":"TripEvent",
         |"eventData":{"accelerometer":{"triggeredAxis":"SidewaysAxis"},
         |"geoFence":{"type":"Teleport","geoFenceId":1}}}}""".stripMargin.replace("\n", "")
-    val out = TripModel.parseRaw(Seq(accel, fence, badEnum).toDF("raw"), "raw")
+    val out = TripModel.parseRaw(rawDf(Seq(accel, fence, badEnum)), "raw")
       .orderBy("ts").collect()
     assert(out.length == 3)
     assert(out(0).getAs[String]("accel_axis") == "NegativeZAxis")
@@ -99,7 +104,7 @@ class TripModelSpec extends SparkTestBase {
         |"OnBoardDiagnosticsStandardConformation":["OBDII","EOBD"],
         |"AcceleratorPedalPosition":{"positionPercentD":10,"positionPercentE":11,
         |"positionPercentF":12}}}}""".stripMargin.replace("\n", "")
-    val row = Seq(msg).toDF("raw")
+    val row = rawDf(Seq(msg))
       .select(TripModel.parse(col("raw")).as("m"))
       .select(
         col("m.body.pidData.EngineOilTemperature").as("oil"),
@@ -131,7 +136,8 @@ class TripParseSpec extends SparkTestBase
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
   import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+  import graft.functions.{JsonDecode, JsonExpressions}
+  import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
   import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
   // an RDD-backed frame: a local Seq would be folded into a
@@ -139,9 +145,15 @@ class TripParseSpec extends SparkTestBase
   private def rawDf(ls: Seq[String]): DataFrame =
     spark.sparkContext.parallelize(ls, 2).toDF("raw")
 
-  private def decodes(df: DataFrame): Seq[JsonToStructs] =
+  /** The JSON decodes in the executed plan: `from_json`'s
+    * JsonToStructs and the decode kernel alike.
+    */
+  private def decodes(df: DataFrame): Seq[Expression] =
     collect(df.queryExecution.executedPlan) { case p =>
-      p.expressions.flatMap(_.collect { case j: JsonToStructs => j })
+      p.expressions.flatMap(_.collect {
+        case j: JsonToStructs => j
+        case k: JsonDecode => k
+      })
     }.flatten
 
   /** Nested field count of a type (struct members at every depth,
@@ -236,6 +248,7 @@ class TripParseSpec extends SparkTestBase
     for (df <- Seq(parsed, parsed.select("trip_id", "ts", "lat", "lon", "speed_kmh"))) {
       val js = decodes(df)
       assert(js.length == 1, s"${js.length} JSON decodes:\n${df.queryExecution.executedPlan}")
+      assert(js.head.isInstanceOf[JsonDecode], s"not the decode kernel: ${js.head}")
     }
     assert(fieldCount(TripModel.messageSchema) == 177)
     assert(fieldCount(decodes(parsed).head.dataType) == 44)
@@ -245,6 +258,7 @@ class TripParseSpec extends SparkTestBase
     val raw = rawDf(Seq("""{"id":1,"amount":2.5,"timestamp":3}""", "bad"))
     val df = TripModel.parseDeposits(raw, "raw")
     assert(decodes(df).length == 1, s"${df.queryExecution.executedPlan}")
+    assert(decodes(df).head.isInstanceOf[JsonDecode], s"${df.queryExecution.executedPlan}")
     assert(df.as[(Int, Double, Long, Boolean)].collect().toSeq == Seq((1, 2.5, 3L, false)))
   }
 
@@ -257,6 +271,218 @@ class TripParseSpec extends SparkTestBase
     assert(w.length == 17, w.mkString("\n")) // non-vacuous: most lines survive
     assert(g.sortBy(_.toString) == w.sortBy(_.toString),
       s"\ngot:\n${g.mkString("\n")}\nwant:\n${w.mkString("\n")}")
+  }
+
+  private def utf8(t: String): Array[Byte] = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private def bytes(parts: Any*): Array[Byte] = parts.flatMap {
+    case t: String => utf8(t).toSeq
+    case b: Int => Seq(b.toByte)
+  }.toArray
+
+  /** Lines at the decode kernel's plain/fallback boundary, as raw
+    * bytes (some are not UTF-8). Deposit-shaped lines sit among the
+    * trip-shaped ones, so each schema sees the other's as unread keys.
+    */
+  private val edgeLines: Seq[Array[Byte]] = Seq(
+    // a number written as a string in a long, double and boolean field
+    msg("\"12\"", 22), msg("12", 23, ""","odometer":"1.5""""),
+    msg("12", 24, ""","pidData":{"MilStatus":{"commandedOn":"true"}}"""),
+    """{"id":"1","amount":2.5}""",
+    """{"id":1,"amount":"2.5","timestamp":"3","is_terminator":"true"}""",
+    // NaN and Infinity as tokens and as strings
+    msg("13", 25, ""","odometer":NaN,"fuelConsumed":-Infinity"""),
+    msg("13", 26, ""","odometer":"NaN","fuelConsumed":"Infinity""""),
+    msg("NaN", 27), """{"id":2,"amount":NaN}""", """{"id":3,"amount":"-Infinity"}""",
+    """{"id":4,"amount":Infinity,"timestamp":"NaN"}""",
+    // int overflow in id, long overflow in tripNumber, big-integer literals
+    """{"id":2147483648,"amount":1}""", """{"id":-2147483649,"amount":1}""",
+    """{"id":9,"timestamp":9223372036854775807}""",
+    msg("9223372036854775808", 28), msg("-9223372036854775809", 29),
+    msg("14", 30, ""","odometer":123456789012345678901234567890"""),
+    msg("123456789012345678901234567890", 31), """{"id":5,"amount":1e400}""",
+    msg("1e3", 32), msg("-0", 33, ""","odometer":-0.0"""),
+    // a read key repeated: first mistyped, then valid (and both valid)
+    """{"body":{"tripNumber":"x","tripNumber":15,"timestamp":"2020-01-01T00:00:32Z"}}""",
+    """{"id":"x","id":6,"amount":1.0}""", """{"id":6,"id":7,"amount":1.0}""",
+    msg("15", 34, ""","pidData":{"GpsReading":{"latitude":"n","latitude":1.5}}"""),
+    // trailing garbage, a stray brace, a second root value
+    msg("16", 35) + " garbage", msg("16", 36) + "}", msg("16", 37) + " " + msg("17", 38),
+    """{"id":7} trailing""",
+    // top-level arrays
+    "[" + msg("18", 39) + "]", "[" + msg("18", 40) + "," + msg("19", 41) + "]", "[]",
+    """[{"id":8,"amount":1.0}]""",
+    // null nested structs
+    """{"body":null}""",
+    msg("20", 42, ""","pidData":null,"eventData":{"accelerometer":null,"timeFence":null}"""),
+    msg("20", 43, ""","pidData":{"GpsReading":null,"MilStatus":null}"""),
+    // arrays with null and with mistyped elements
+    msg("21", 44, ""","pidData":{"RawAccelerometer":[null,{"base":null,"offsets":[null]}]}"""),
+    msg("21", 45, ""","pidData":{"RawAccelerometer":[1,"x",{}]}"""),
+    msg("21", 46, ""","eventData":{"accelerometer":{"samples":[null,{"x":"1"}]}}"""),
+    msg("21", 47, ""","pidData":{"RawAccelerometer":[{"offsets":[{"x":true}]}]}"""),
+    msg("21", 48, ""","pidData":{"RawAccelerometer":null}"""),
+    // escapes, non-ASCII text, single quotes, surrounding whitespace
+    msg("24", 49, ",\"vin\":\"a\\\"bé\\ud800\\/\""),
+    msg("24", 50, ""","vin":"München €","type":"𝄞""""),
+    """{'body':{'tripNumber':24,'vin':'single'}}""", "  " + msg("25", 51) + "  ",
+    "\t" + """{"id":10,"amount":0.5}""" + "\r"
+  ).map(utf8) ++ Seq(
+    // invalid UTF-8 inside a read string and inside an unread one
+    bytes("""{"body":{"tripNumber":22,"vin":"ab""", 0xFF, """cd"}}"""),
+    bytes("""{"body":{"tripNumber":22,"extra":"ab""", 0xFF, """cd"}}"""),
+    bytes("""{"body":{"tripNumber":22,"vin":"over""", 0xC0, 0xAF, """long"}}"""),
+    bytes("""{"body":{"tripNumber":22,"vin":"sur""", 0xED, 0xA0, 0x80, """rogate"}}"""),
+    bytes("""{"body":{"tripNumber":22,"extra":"cut""", 0xE2, 0x82, """"}}"""),
+    bytes("""{"id":11,"note":"x""", 0xF8, 0x88, 0x80, 0x80, 0x80, """"}"""),
+    // a BOM, a NUL byte
+    bytes(0xEF, 0xBB, 0xBF, """{"body":{"tripNumber":23}}"""),
+    bytes("""{"body":{"tripNumber":23,"vin":"a""", 0, """b"}}"""))
+
+  private def bytesDf(ls: Seq[Array[Byte]]): DataFrame =
+    spark.sparkContext.parallelize(ls.zipWithIndex, 3).toDF("bin", "i")
+      .select(col("i"), col("bin").cast("string").as("raw"))
+
+  /** The lines on which the kernel's row differs from `from_json`'s,
+    * both decoded in one projection.
+    */
+  private def mismatches(raw: DataFrame, schema: StructType): Seq[String] =
+    raw.select(col("i"), col("raw"),
+        JsonExpressions.decodeJson(col("raw"), schema).as("k"),
+        from_json(col("raw"), schema).as("j"))
+      .collect().toSeq
+      .filter(r => r.get(2) != r.get(3) || String.valueOf(r.get(2)) != String.valueOf(r.get(3)))
+      .map(r => s"line ${r.getInt(0)}: ${r.getString(1)}\n  kernel:    ${r.get(2)}\n  from_json: ${r.get(3)}")
+
+  private val schemas = Seq("read" -> TripModel.readSchema, "deposit" -> TripModel.depositSchema)
+
+  test("the decode kernel equals from_json row for row on every edge line") {
+    val raw = bytesDf(lines.map(utf8) ++ edgeLines)
+    for ((name, schema) <- schemas) {
+      val bad = mismatches(raw, schema)
+      assert(bad.isEmpty, s"$name schema:\n${bad.mkString("\n")}")
+    }
+    val got = TripModel.parseRaw(raw, "raw")
+    val want = reference(raw)
+    assert(got.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
+  }
+
+  /** The resolved kernel that decodes `base`'s `raw` with `schema`. */
+  private def kernel(schema: StructType, base: DataFrame = rawDf(Seq("{}"))): JsonDecode =
+    base.select(JsonExpressions.decodeJson(col("raw"), schema)).queryExecution.analyzed
+      .expressions.flatMap(_.collect { case k: JsonDecode => k }).head
+
+  test("the kernel's fallback is the expression from_json resolves to") {
+    for ((_, schema) <- schemas) {
+      val base = rawDf(Seq("{}"))
+      val k = kernel(schema, base)
+      val j = base.select(from_json(col("raw"), schema)).queryExecution.analyzed
+        .expressions.flatMap(_.collect { case j: JsonToStructs => j }).head
+      assert(k.fallback == j, s"${k.fallback} vs $j")
+      assert(k.dataType == j.dataType)
+    }
+  }
+
+  test("plain lines take the fast path, the rest the fallback") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val read = kernel(TripModel.readSchema)
+    def plain(b: Array[Byte]) = read.isPlain(UTF8String.fromBytes(b))
+    // the first two edge-case lines are well-typed; so are these
+    for (l <- lines.take(2) ++ Seq(msg("1", 1, ""","odometer":NaN"""), """{"body":null}""",
+        msg("1", 2, ""","vin":"München""""), "  {}  "))
+      assert(plain(utf8(l)), l)
+    for (l <- Seq(msg("\"12\"", 1), msg("9223372036854775808", 1), msg("1e3", 1),
+        msg("1", 1) + " x", """{"body":{"tripNumber":1,"tripNumber":2}}""", "[{}]", "", "1"))
+      assert(!plain(utf8(l)), l)
+    for (b <- edgeLines.takeRight(8)) assert(!plain(b), new String(b, "UTF-8"))
+    val deposit = kernel(TripModel.depositSchema)
+    assert(deposit.isPlain(UTF8String.fromString("""{"id":2147483647,"amount":1}""")))
+    assert(!deposit.isPlain(UTF8String.fromString("""{"id":2147483648,"amount":1}""")))
+  }
+
+  // -- a property: mutated generated messages decode alike ----------
+
+  private sealed trait J { def render: String }
+  private case class JObj(kv: Vector[(String, J)]) extends J {
+    def render: String = kv.map { case (k, v) => "\"" + k + "\":" + v.render }.mkString("{", ",", "}")
+  }
+  private case class JArr(vs: Vector[J]) extends J {
+    def render: String = vs.map(_.render).mkString("[", ",", "]")
+  }
+  private case class JLit(render: String) extends J
+
+  import org.scalacheck.Gen
+  import org.apache.spark.sql.types._
+
+  /** A value of type `t` that the kernel reads plainly (or null). */
+  private def typed(t: DataType): Gen[J] = Gen.frequency(12 -> (t match {
+    case LongType => Gen.frequency(8 -> Gen.choose(-5000L, 5000L),
+      1 -> Gen.oneOf(Long.MaxValue, Long.MinValue, 1L << 40)).map(v => JLit(v.toString))
+    case IntegerType => Gen.frequency(8 -> Gen.choose(-5000, 5000),
+      1 -> Gen.oneOf(Int.MaxValue, Int.MinValue)).map(v => JLit(v.toString))
+    case DoubleType => Gen.frequency(6 -> Gen.choose(-1e4, 1e4).map(_.toString),
+      2 -> Gen.choose(-100, 100).map(_.toString),
+      1 -> Gen.oneOf("NaN", "-Infinity", "1.5e300", "-0.0", "4.9E-324")).map(JLit)
+    case StringType => Gen.frequency(8 -> Gen.alphaNumStr.map(_.take(8)),
+      1 -> Gen.oneOf("é€", "a\\\"b", "\\u00e9", "Standard", "CAN11Bit")).map(v => JLit("\"" + v + "\""))
+    case BooleanType => Gen.oneOf(JLit("true"), JLit("false"))
+    case s: StructType =>
+      Gen.sequence[List[Option[(String, J)]], Option[(String, J)]](s.fields.toList.map { f =>
+        Gen.frequency(1 -> Gen.const(None), 2 -> typed(f.dataType).map(v => Some(f.name -> v)))
+      }).flatMap { kv =>
+        Gen.frequency(4 -> Gen.const(Nil), 1 -> anyValue.map(v => List("extra" -> v)))
+          .map(extra => JObj((kv.flatten ++ extra).toVector))
+      }
+    case a: ArrayType => Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, typed(a.elementType)))
+      .map(vs => JArr(vs.toVector))
+    case _ => Gen.const(JLit("null"))
+  }), 1 -> Gen.const(JLit("null")))
+
+  /** Any JSON value, mostly of the wrong type for a field. */
+  private val anyValue: Gen[J] = Gen.oneOf("null", "0", "-7", "2.5", "1e3", "\"s\"", "\"12\"",
+    "\"NaN\"", "true", "false", "{}", "[]", "[1,\"x\",null]", "{\"x\":1}", "NaN", "2147483648",
+    "9223372036854775808", "123456789012345678901234567890").map(JLit)
+
+  /** One mutation at a random depth: drop, retype or duplicate a
+    * field (the duplicate mistyped or not), or retype an element.
+    */
+  private def mutate(j: J): Gen[J] = j match {
+    case JObj(kv) if kv.nonEmpty => Gen.choose(0, kv.length - 1).flatMap { i =>
+      val (k, v) = kv(i)
+      Gen.frequency(
+        3 -> mutate(v).map(m => JObj(kv.updated(i, k -> m))),
+        1 -> Gen.const(JObj(kv.patch(i, Nil, 1))),
+        1 -> anyValue.map(a => JObj(kv.updated(i, k -> a))),
+        1 -> anyValue.map(a => JObj(kv.patch(i, Seq(k -> a), 0))),
+        1 -> Gen.const(JObj(kv :+ (k -> v))))
+    }
+    case JArr(vs) if vs.nonEmpty => Gen.choose(0, vs.length - 1).flatMap { i =>
+      Gen.oneOf(mutate(vs(i)), anyValue).map(m => JArr(vs.updated(i, m)))
+    }
+    case _ => anyValue
+  }
+
+  /** A generated message for `schema`, mutated 0–3 times, then
+    * truncated at a random byte one time in six.
+    */
+  private def mutatedLine(schema: StructType): Gen[String] = for {
+    msg <- typed(schema).map { case JLit(_) => JObj(Vector.empty); case m => m }
+    n <- Gen.choose(0, 3)
+    m <- (1 to n).foldLeft(Gen.const(msg: J))((g, _) => g.flatMap(mutate))
+    text = m.render
+    cut <- Gen.frequency(5 -> Gen.const(text.length), 1 -> Gen.choose(0, text.length))
+  } yield text.take(cut)
+
+  test("property: the kernel equals from_json on mutated generated messages") {
+    import org.scalacheck.{Prop, Test}
+    for ((name, schema) <- schemas) {
+      val prop = Prop.forAllNoShrink(Gen.listOfN(300, mutatedLine(schema))) { ls =>
+        val bad = mismatches(bytesDf(ls.map(utf8)), schema)
+        Prop(bad.isEmpty) :| bad.take(3).mkString("\n")
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(6)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+      assert(res.passed, s"$name schema: ${org.scalacheck.util.Pretty.pretty(res)}")
+    }
   }
 }
 
@@ -370,6 +596,33 @@ class JdbcSinkSpec extends SparkTestBase {
       .takeWhile(_.next()).map(r => (r.getLong(1), r.getDouble(2), r.getBoolean(3))).toList
     c2.close()
     assert(got == List((1L, 12.5, true), (2L, 5.0, false), (3L, 1.0, false)))
+  }
+
+  test("derby batches: a repeated key flushes first, a later batch updates an earlier flush's insert") {
+    Class.forName(driver)
+    val conn = java.sql.DriverManager.getConnection(url)
+    conn.createStatement().execute(
+      "CREATE TABLE ledger (id BIGINT PRIMARY KEY, balance DOUBLE, n INTEGER)")
+    conn.close()
+    val sink = new JdbcUpsertSink(
+      url = url, driver = driver, table = "ledger",
+      keyCols = Seq("id"), valCols = Seq("balance", "n"),
+      updateExprs = Map(
+        "balance" -> "ledger.balance + excluded.balance",
+        "n" -> "ledger.n + excluded.n"),
+      batchSize = 3, dialect = "derby")
+    // one partition, in this order: key 1 twice in the first batch
+    // (accumulating), keys 2, 3, 4 fill the next batch, and the last
+    // batch updates keys 1 and 3, which earlier flushes inserted
+    val rows = Seq((1L, 10.0, 1), (1L, 5.0, 1), (2L, 1.0, 1), (3L, 2.0, 1), (4L, 4.0, 1),
+      (1L, 0.5, 1), (3L, 0.25, 1))
+    sink.writeBatch(spark.sparkContext.parallelize(rows, 1).toDF("id", "balance", "n"))
+    val c2 = java.sql.DriverManager.getConnection(url)
+    val rs = c2.createStatement().executeQuery("SELECT id, balance, n FROM ledger ORDER BY id")
+    val got = Iterator.continually(rs)
+      .takeWhile(_.next()).map(r => (r.getLong(1), r.getDouble(2), r.getInt(3))).toList
+    c2.close()
+    assert(got == List((1L, 15.5, 3), (2L, 1.0, 1), (3L, 2.25, 2), (4L, 4.0, 1)))
   }
 
   test("postgres dialect renders the reference ON CONFLICT statement") {
