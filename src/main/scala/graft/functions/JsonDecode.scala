@@ -20,7 +20,7 @@ object JsonExpressions {
 
   /** `from_json(raw, schema)`'s result, decoded by [[JsonDecode]]. */
   def decodeJson(raw: Column, schema: StructType): Column =
-    GraftBridge.column(JsonDecode(schema, Map.empty, GraftBridge.expression(raw)))
+    GraftBridge.column(JsonDecode(schema, GraftBridge.expression(raw)))
 }
 
 /** `from_json(child, schema)` with a byte-level fast path for plain
@@ -45,13 +45,12 @@ object JsonExpressions {
   * Every other line (a mistyped or repeated key, an exotic token,
   * trailing content, a parse error, invalid UTF-8) goes to
   * [[fallback]], the very `JsonToStructs` that `from_json(child,
-  * schema)` resolves to — same options, time zone and corrupt-record
-  * name — so the result is `from_json`'s on every line, and the
-  * choice is made per line from the input alone.
+  * schema)` resolves to — default options, same time zone and
+  * corrupt-record name — so the result is `from_json`'s on every
+  * line, and the choice is made per line from the input alone.
   */
 case class JsonDecode(
     schema: StructType,
-    options: Map[String, String],
     child: Expression,
     timeZoneId: Option[String] = None)
   extends UnaryExpression with TimeZoneAwareExpression with GraftExpectsTypes {
@@ -63,11 +62,11 @@ case class JsonDecode(
 
   override def withTimeZone(tz: String): JsonDecode = copy(timeZoneId = Option(tz))
 
-  /** The expression `from_json(child, schema, options)` resolves to. */
-  @transient lazy val fallback: JsonToStructs = JsonToStructs(schema, options, child, timeZoneId)
+  /** The expression `from_json(child, schema)` resolves to. */
+  @transient lazy val fallback: JsonToStructs = JsonToStructs(schema, Map.empty, child, timeZoneId)
 
   @transient private lazy val factory: JsonFactory =
-    new JSONOptions(options, timeZoneId.get, SQLConf.get.columnNameOfCorruptRecord)
+    new JSONOptions(Map.empty[String, String], timeZoneId.get, SQLConf.get.columnNameOfCorruptRecord)
       .buildJsonFactory()
       .setRecyclerPool(JsonRecyclerPools.newConcurrentDequePool())
 

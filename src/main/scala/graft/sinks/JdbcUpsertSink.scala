@@ -17,8 +17,9 @@ import org.apache.spark.sql.types._
   * no data funnels through the driver.
   *
   * Dialects: `postgres` emits ON CONFLICT upserts (the reference's
-  * target), `derby` emits standard MERGE (used by the embedded test
-  * DB here). `updateExprs` customizes the conflict action — e.g. the
+  * target), `derby` (the embedded test DB here) emulates the upsert
+  * with batched UPDATE-then-INSERT (see `PartitionUpserter`).
+  * `updateExprs` customizes the conflict action — e.g. the
   * reference's running `balance = balance + excluded.balance`
   * accumulation (TripAggregatorApplication.kt:228-233).
   *
