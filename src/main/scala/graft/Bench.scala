@@ -73,13 +73,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build("graft-bench", cpus, "ERROR")
 
     // ---- global wall budget (r10 verdict #1). Measured from bench
     // main entry: sbt launch/compile land outside it, so the default

@@ -4,25 +4,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + test-table loaders.
   *
-  * Scale posture: AQE on (runtime re-plan, skew-join splitting,
-  * partition coalescing), shuffle partitions sized by env (32 on the
-  * local[32] harness; on a real cluster this scales with executor
-  * count). All loaders are plain parquet scans so Catalyst pushes
+  * Scale posture: AQE on (Spark's default: runtime re-plan, skew-join
+  * splitting, partition coalescing), one shuffle partition per local
+  * core (on a real cluster this scales with executor count). All
+  * loaders are plain parquet scans so Catalyst pushes
   * filters/projections into the reader.
   */
 object GraftSession {
 
-  def build(appName: String = "graft", master: String = "local[*]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession
-      .builder()
-      .master(master)
+  /** The one session recipe of Bench, Verify, Probe and the specs:
+    * `local[cpus]` with `cpus` shuffle partitions, UTC session time,
+    * no UI. `conf` entries are set before the session starts.
+    */
+  def build(appName: String, cpus: String, logLevel: String,
+      conf: Seq[(String, String)] = Nil): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
   }
 
   /** All driver-generated test tables (TESTDATA.md). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Local optimization-iteration aid (round 13): time named queries
@@ -17,19 +16,11 @@ object Probe {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val samples = if (args.length > 3) args(3).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // extra confs for A/B experiments: SPARK_GRAFT_PROBE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val extra = sys.env.get("SPARK_GRAFT_PROBE_CONF").toSeq
+      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession.build("graft-probe", cpus, "ERROR", extra)
     new java.io.File(outDir).mkdirs()
     def release(): Unit = {
       spark.sqlContext.clearCache()

@@ -11,7 +11,23 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** lower + trim + collapse runs of whitespace to one space. */
+  /** The whitespace tokenizer contract, the one rule every text query
+    * and its DuckDB oracle share: lower + trim (spaces only) +
+    * collapse each run of whitespace to one space, then split on
+    * that space. Each engine spells it once, here: `normalizeText`/
+    * `wsTokens`/`tokenCount` for Spark and the `*Sql` mirrors for
+    * the oracle SQL; TextFunctionsSpec pins both spellings.
+    *
+    * Empty and space-only text gives one empty token `[""]`, which
+    * the closed forms over `len(tokens)` in TextQueries count; and
+    * whitespace that trim keeps gives empty edge tokens (tab, "a",
+    * tab → `["", "a", ""]`).
+    *
+    * Known divergence, not handled: Java's `\s` matches U+000B
+    * (vertical tab) but RE2's does not, so DuckDB keeps "a", VT, "b"
+    * as one token where Spark splits it in two. No generated
+    * document contains U+000B.
+    */
   def normalizeText(c: Column): Column =
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
@@ -19,6 +35,16 @@ object TextFunctions {
   def wsTokens(c: Column): Column = split(normalizeText(c), " ")
 
   def tokenCount(c: Column): Column = size(wsTokens(c))
+
+  /** DuckDB mirror of `normalizeText` over the SQL expression `e`. */
+  def normalizeTextSql(e: String): String =
+    s"regexp_replace(lower(trim($e)), '\\s+', ' ', 'g')"
+
+  /** DuckDB mirror of `wsTokens`. */
+  def wsTokensSql(e: String): String = s"string_split(${normalizeTextSql(e)}, ' ')"
+
+  /** DuckDB mirror of `tokenCount`. */
+  def tokenCountSql(e: String): String = s"len(${wsTokensSql(e)})"
 
   /** BPE-ish subword count: alphabetic runs, digit runs, and single
     * non-alphanumeric marks each count as one token (a cheap stand-in

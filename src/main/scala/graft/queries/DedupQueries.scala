@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.functions.{TextFunctions => TF}
 import graft.operators.{MinHashLSH, SimHash, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -259,12 +260,12 @@ object DedupQueries {
     // 128-bit collision rather than silently merging distinct docs;
     // silent wrongness would need a simultaneous 192-bit collision).
     Q("dedup_exact_docs",
-      """SELECT min(doc_id) AS kept_doc_id, count(*) AS n_copies
+      s"""SELECT min(doc_id) AS kept_doc_id, count(*) AS n_copies
         |FROM documents
-        |GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')""".stripMargin) { (s, dir) =>
+        |GROUP BY ${TF.normalizeTextSql("text")}""".stripMargin) { (s, dir) =>
       table(s, dir, "documents")
         .select(col("doc_id"),
-          regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("norm"))
+          TF.normalizeText(col("text")).as("norm"))
         .groupBy(xxhash64(col("norm")), xxhash64(lit(42L), col("norm")),
           length(col("norm")))
         .agg(min(col("doc_id")).as("kept_doc_id"), count(lit(1)).as("n_copies"),
@@ -344,9 +345,8 @@ object DedupQueries {
     // SetSimJoinSpec proves completeness against the O(n²) brute
     // force at sf0.001.
     Q("setsim_prefix_join",
-      """WITH t0 AS (
-        |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+      s"""WITH t0 AS (
+        |  SELECT doc_id, ${TF.wsTokensSql("text")} AS toks
         |  FROM documents),
         |t AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
@@ -396,9 +396,9 @@ object DedupQueries {
       // a cross pair (u, v) replicates to every member pair with the
       // SAME (inter, uni): output provably identical to the direct
       // form (which the unchanged DuckDB oracle still states).
-      val norm = graft.functions.TextFunctions.normalizeText(col("text"))
+      val norm = TF.normalizeText(col("text"))
       val docs = table(s, dir, "documents")
-        .filter(size(graft.functions.TextFunctions.wsTokens(col("text")))
+        .filter(size(TF.wsTokens(col("text")))
           >= 3)
         .select(col("doc_id"), col("text"),
           struct(xxhash64(norm), xxhash64(lit(42L), norm), length(norm))
@@ -416,7 +416,7 @@ object DedupQueries {
           Seq("fp"))
         .filter(col("doc_id") === col("rep"))
         .select(col("doc_id"), col("text"))
-      val toks = graft.functions.TextFunctions.wsTokens(col("text"))
+      val toks = TF.wsTokens(col("text"))
       val t = reps
         .select(col("doc_id"),
           explode(array_distinct(graft.functions.VectorExpressions

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.functions.{TextFunctions => TF}
 import graft.model.TripModel
 import graft.operators.{AsOfJoin, DistributedPrefixSum, DistributedQuantile, RangeJoin, SkewJoin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -633,43 +634,6 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n_items"), round(sum(col("l_quantity")), 2).as("qty"))
     },
 
-    // C-extra: corpus n-gram statistics — top-5 word bigrams per
-    // language. Explode is the fused TokenPairs kernel (no
-    // interpreted HOF lambda); the top-5-per-lang step is the
-    // TopKPerKey whole-operator, NOT a row_number window — lang has
-    // ~5 values, so the window spelling would shuffle the ENTIRE
-    // bigram-count table into 5 tasks and fully sort each, while
-    // TopKPerKey keeps 5-row bounded heaps with a map-side combine.
-    Q("text_top_bigrams",
-      """WITH t AS (
-        |  SELECT lang,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents),
-        |b AS (
-        |  SELECT lang, unnest(list_transform(range(1, len(toks)),
-        |    i -> concat(toks[CAST(i AS INT)], ' ', toks[CAST(i + 1 AS INT)]))) AS bigram
-        |  FROM t),
-        |c AS (SELECT lang, bigram, count(*) AS n FROM b GROUP BY lang, bigram),
-        |r AS (SELECT lang, bigram, n,
-        |        row_number() OVER (PARTITION BY lang ORDER BY n DESC, bigram) AS rn
-        |      FROM c)
-        |SELECT lang, bigram, n, rn FROM r WHERE rn <= 5""".stripMargin) { (s, dir) =>
-      val counts = table(s, dir, "documents")
-        .select(col("lang"),
-          split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ").as("toks"))
-        .filter(size(col("toks")) >= 2) // mirror DuckDB's empty range()
-        .select(col("lang"),
-          explode(graft.functions.VectorExpressions.tokenPairs(col("toks"))).as("bg"))
-        .select(col("lang"), concat_ws(" ", col("bg.w1"), col("bg.w2")).as("bigram"))
-        .groupBy(col("lang"), col("bigram"))
-        .agg(count(lit(1)).as("n"))
-      // (n desc, bigram) is total per lang — bigram is unique after
-      // the groupBy — so ranks equal the row_number spelling exactly.
-      graft.plans.TopK.perKey(counts, Seq("lang"),
-          Seq(("n", false), ("bigram", true)), 5)
-        .withColumnRenamed("rnk", "rn")
-    },
-
     // SQL-string entry point: same engine, spark.sql over registered
     // views (the query text IS the oracle text).
     Q("sql_api_nation_revenue",
@@ -834,8 +798,8 @@ object ExtendedQueries {
     //    gated as exact-integer booleans, the cms/hll bound style.
     // Adversarial eviction/merge cases pinned in MisraGriesSpec.
     Q("mg_heavy_hitters",
-      """WITH t AS (
-        |  SELECT string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+      s"""WITH t AS (
+        |  SELECT ${TF.wsTokensSql("text")} AS toks
         |  FROM documents),
         |c AS (
         |  SELECT tok, CAST(count(*) AS BIGINT) AS cnt
@@ -850,7 +814,7 @@ object ExtendedQueries {
         |FROM r WHERE rnk <= 20""".stripMargin) { (s, dir) =>
       import graft.functions.MisraGries
       val toks = table(s, dir, "documents").select(
-        explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("tok"))
+        explode(TF.wsTokens(col("text"))).as("tok"))
       // ONE corpus pass builds both sketches + the exact stream size;
       // everything after runs on the single summary row
       val sk = toks.agg(

@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
 
 /** Round-9 additions (SURVEY.md §2 B79-B85, C58-C64): marketing
   * attribution, interval-overlap join, bitmap exact-distinct, HLL
-  * sketch-column rollup, corpus token drift, diversity sampling,
-  * perceptual-hash near-dup, incremental join
-  * maintenance, Heaps-law curve, ordered-set aggregates, incremental
-  * dedup, and quantile length trim.
+  * sketch-column rollup, diversity sampling, perceptual-hash
+  * near-dup, incremental join maintenance, ordered-set aggregates
+  * and incremental dedup.
   *
   * Conventions as elsewhere: epoch seconds / cents / counts as exact
   * integers so oracle rows compare bit-for-bit; events normalized to
@@ -265,246 +264,6 @@ object FrontierQueries {
           when(abs(col("est_merged") - col("n_exact")) <=
             greatest(lit(2.0), col("n_exact") * 0.05), 1L).otherwise(0L)
             .as("within_bound"))
-    },
-
-    // C58: CORPUS TOKEN DRIFT — add-one-smoothed KL divergence
-    // KL(en || L) between the English token distribution and each
-    // other language's, the data-drift / domain-shift monitor a
-    // training pipeline runs between corpus snapshots or sources.
-    // Scale shape: ONE corpus scan → one keyed (lang, token) count
-    // exchange; everything after is MODEL-sized (vocab tables), the
-    // C24/C42 discipline. Determinism: per-token contributions are
-    // quantized to INTEGER micro-units (the C42 DSIR convention) —
-    // floor(1e6·(cP+1)·ln(ratio)) where ratio is a quotient of exact
-    // integer products — so the per-lang sum is an order-independent
-    // BIGINT and the final `kl` is a single division of exact
-    // integers, bit-equal across engines.
-    Q("corpus_token_drift", {
-      val toksSql = """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH t AS (SELECT lang, $toksSql AS toks FROM documents),
-         |tok AS (SELECT lang, unnest(toks) AS w FROM t),
-         |tc AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY lang, w),
-         |en AS (SELECT w, c AS c_p FROM tc WHERE lang = 'en'),
-         |oth AS (SELECT lang, w, c AS c_q FROM tc WHERE lang <> 'en'),
-         |np AS (SELECT CAST(sum(c_p) AS BIGINT) AS n_p FROM en),
-         |langs AS (SELECT DISTINCT lang FROM oth),
-         |enx AS (SELECT l.lang, e.w, e.c_p FROM en e CROSS JOIN langs l),
-         |u AS (SELECT coalesce(a.lang, b.lang) AS lang, coalesce(a.w, b.w) AS w,
-         |        coalesce(a.c_p, 0) AS c_p, coalesce(b.c_q, 0) AS c_q
-         |      FROM enx a FULL OUTER JOIN oth b ON a.lang = b.lang AND a.w = b.w),
-         |tot AS (SELECT lang, CAST(sum(c_q) AS BIGINT) AS n_q,
-         |          CAST(count(*) AS BIGINT) AS v FROM u GROUP BY lang),
-         |contrib AS (
-         |  SELECT u.lang,
-         |    CAST(floor((u.c_p + 1) * ln(
-         |      CAST((u.c_p + 1) * (t.n_q + t.v) AS DOUBLE) /
-         |      CAST((u.c_q + 1) * (p.n_p + t.v) AS DOUBLE)) * 1000000.0) AS BIGINT)
-         |      AS k_micro
-         |  FROM u JOIN tot t ON u.lang = t.lang CROSS JOIN np p)
-         |SELECT c.lang, p.n_p, t.n_q, t.v,
-         |  CAST(sum(c.k_micro) AS BIGINT) AS kl_micro,
-         |  CAST(sum(c.k_micro) AS DOUBLE) / 1000000.0 / (p.n_p + t.v) AS kl
-         |FROM contrib c JOIN tot t ON c.lang = t.lang CROSS JOIN np p
-         |GROUP BY c.lang, p.n_p, t.n_q, t.v""".stripMargin
-    }) { (s, dir) =>
-      val tc = table(s, dir, "documents")
-        .select(col("lang"), explode(split(TF.normalizeText(col("text")), " ")).as("w"))
-        .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c"))
-        .localCheckpoint() // model-sized; cut the explode off replays
-      val en = tc.filter(col("lang") === "en").select(col("w"), col("c").as("c_p"))
-      val oth = tc.filter(col("lang") =!= "en")
-        .select(col("lang"), col("w"), col("c").as("c_q"))
-      val nP = en.agg(sum(col("c_p")).as("n_p"))
-      val langs = oth.select(col("lang")).distinct()
-      val enx = en.crossJoin(broadcast(langs))
-      val u = enx.join(oth, Seq("lang", "w"), "full_outer")
-        .select(col("lang"), col("w"),
-          coalesce(col("c_p"), lit(0L)).as("c_p"),
-          coalesce(col("c_q"), lit(0L)).as("c_q"))
-      val tot = u.groupBy(col("lang"))
-        .agg(sum(col("c_q")).as("n_q"), count(lit(1)).as("v"))
-      u.join(tot, Seq("lang")).crossJoin(broadcast(nP))
-        .withColumn("k_micro", expr(
-          """CAST(floor((c_p + 1) * ln(
-            |  CAST((c_p + 1) * (n_q + v) AS DOUBLE) /
-            |  CAST((c_q + 1) * (n_p + v) AS DOUBLE)) * 1000000.0) AS BIGINT)""".stripMargin))
-        .groupBy(col("lang"), col("n_p"), col("n_q"), col("v"))
-        .agg(sum(col("k_micro")).as("kl_micro"))
-        .withColumn("kl",
-          col("kl_micro").cast("double") / 1000000.0 / (col("n_p") + col("v")))
-    },
-
-    // C161: KRIPPENDORFF'S ALPHA over three corpus quality filters
-    // (round 13; Krippendorff 1970/2004) — the MULTI-coder
-    // chance-corrected agreement C67's pairwise Cohen's κ can't
-    // give: three deterministic binary "coders" rate every doc
-    // (length ≥ 50 tokens; mean token length in [3, 10] via the
-    // integer cross-compare 3·ntok ≤ chars ≤ 10·ntok; digit mass
-    // ≤ 10% via 10·digits ≤ chars), and nominal-binary alpha with
-    // constant m = 3 reduces EXACTLY to
-    // α = 1 − (N−1)·Σ_u n1_u·n0_u / (2·N₁·N₀), N = 3·docs — pure
-    // integer products (≤ ~2e8, exact doubles) and ONE division,
-    // 6dp floor. The filter-ensemble health check: α near 0 means
-    // the filters disagree at chance and a majority vote is noise.
-    // Scale shape: one map-only text pass → 3 flags/doc → one
-    // map-side-combinable agg to 3 scalars.
-    Q("filter_agreement_alpha", {
-      val toksSql = """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS ntok,
-         |    CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT)
-         |      AS chars,
-         |    CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT)
-         |      AS digits
-         |  FROM documents),
-         |u AS (
-         |  SELECT doc_id,
-         |    CAST((CASE WHEN ntok >= 50 THEN 1 ELSE 0 END)
-         |      + (CASE WHEN chars >= 3 * ntok AND chars <= 10 * ntok
-         |          THEN 1 ELSE 0 END)
-         |      + (CASE WHEN 10 * digits <= chars THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n1
-         |  FROM d),
-         |s AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |        CAST(sum(n1) AS BIGINT) AS n1_tot,
-         |        CAST(sum(n1 * (3 - n1)) AS BIGINT) AS d_obs FROM u)
-         |SELECT n_docs, 3 * n_docs AS n_ratings, n1_tot, d_obs,
-         |  CASE WHEN n1_tot > 0 AND n1_tot < 3 * n_docs THEN
-         |    floor((1.0 - CAST((3 * n_docs - 1) * d_obs AS DOUBLE)
-         |      / CAST(2 * n1_tot * (3 * n_docs - n1_tot) AS DOUBLE))
-         |      * 1000000 + 0.5) / 1000000 END AS alpha
-         |FROM s""".stripMargin
-    }) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"),
-        size(split(TF.normalizeText(col("text")), " ")).cast("long")
-          .as("ntok"),
-        length(regexp_replace(col("text"), "\\s", "")).cast("long")
-          .as("chars"),
-        length(regexp_replace(col("text"), "[^0-9]", "")).cast("long")
-          .as("digits"))
-      val u = d.select(
-        ((col("ntok") >= 50).cast("long")
-          + (col("chars") >= col("ntok") * 3
-            && col("chars") <= col("ntok") * 10).cast("long")
-          + (lit(10) * col("digits") <= col("chars")).cast("long"))
-          .as("n1"))
-      u.agg(count(lit(1)).as("n_docs"), sum(col("n1")).as("n1_tot"),
-          sum(col("n1") * (lit(3) - col("n1"))).as("d_obs"))
-        .select(col("n_docs"), (lit(3) * col("n_docs")).as("n_ratings"),
-          col("n1_tot"), col("d_obs"),
-          when(col("n1_tot") > 0 && col("n1_tot") < lit(3) * col("n_docs"),
-            floor((lit(1.0)
-              - ((lit(3) * col("n_docs") - 1) * col("d_obs")).cast("double")
-                / (lit(2) * col("n1_tot")
-                  * (lit(3) * col("n_docs") - col("n1_tot"))).cast("double"))
-              * 1000000 + lit(0.5)) / 1000000).as("alpha"))
-    },
-
-    // C160: JENSEN-SHANNON DIVERGENCE between per-SOURCE token
-    // distributions (round 13; Lin IEEE-IT 1991) — the SYMMETRIC,
-    // bounded companion to C58's directional KL drift (KL explodes
-    // when q misses a word; JS(P,Q) = ½KL(P‖M)+½KL(Q‖M), M the
-    // mixture, is finite and symmetric — the standard corpus-
-    // similarity number in data-mixing reports). Exact spelling on
-    // the C58 recipe: add-one smoothing over each pair's union
-    // vocab; every ln argument is ONE division of exact BIGINT
-    // products — ln(2p/(p+q)) = ln(2(a+1)(B+V) / ((a+1)(B+V) +
-    // (b+1)(A+V))), products ≤ ~2e12 ≪ 2^53 so the double casts are
-    // exact; per-term micro floors, one mirrored double chain for
-    // the read-out. Scale shape: ONE tokenize pass → per-source
-    // counts (model-sized), pair expansion on the source dimension
-    // only (k(k−1)/2 pairs × vocab), keyed joins throughout.
-    Q("corpus_js_divergence", {
-      val toksSql = """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH t AS (SELECT source, $toksSql AS toks FROM documents),
-         |tc AS (SELECT source, unnest(toks) AS w FROM t),
-         |cnt AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
-         |        FROM tc GROUP BY 1, 2),
-         |stot AS (SELECT source, CAST(sum(c) AS BIGINT) AS n
-         |         FROM cnt GROUP BY 1),
-         |pairs AS (
-         |  SELECT a.source AS sa, b.source AS sb
-         |  FROM stot a JOIN stot b ON a.source < b.source),
-         |ua AS (SELECT p.sa, p.sb, c.w, c.c AS a
-         |       FROM cnt c JOIN pairs p ON c.source = p.sa),
-         |ub AS (SELECT p.sa, p.sb, c.w, c.c AS b
-         |       FROM cnt c JOIN pairs p ON c.source = p.sb),
-         |u AS (
-         |  SELECT coalesce(x.sa, y.sa) AS sa, coalesce(x.sb, y.sb) AS sb,
-         |    coalesce(x.w, y.w) AS w,
-         |    coalesce(x.a, 0) AS a, coalesce(y.b, 0) AS b
-         |  FROM ua x FULL OUTER JOIN ub y
-         |    ON x.sa = y.sa AND x.sb = y.sb AND x.w = y.w),
-         |pv AS (SELECT sa, sb, CAST(count(*) AS BIGINT) AS v
-         |       FROM u GROUP BY 1, 2),
-         |g AS (
-         |  SELECT u.sa, u.sb, u.a, u.b, pv.v,
-         |    na.n AS an, nb.n AS bn
-         |  FROM u JOIN pv ON u.sa = pv.sa AND u.sb = pv.sb
-         |  JOIN stot na ON na.source = u.sa
-         |  JOIN stot nb ON nb.source = u.sb),
-         |contrib AS (
-         |  SELECT sa, sb, v, an, bn,
-         |    CAST(floor((a + 1) * ln(
-         |      CAST(2 * (a + 1) * (bn + v) AS DOUBLE) /
-         |      CAST((a + 1) * (bn + v) + (b + 1) * (an + v) AS DOUBLE))
-         |      * 1000000.0) AS BIGINT) AS kp,
-         |    CAST(floor((b + 1) * ln(
-         |      CAST(2 * (b + 1) * (an + v) AS DOUBLE) /
-         |      CAST((a + 1) * (bn + v) + (b + 1) * (an + v) AS DOUBLE))
-         |      * 1000000.0) AS BIGINT) AS kq
-         |  FROM g)
-         |SELECT sa AS source_a, sb AS source_b, an AS n_a, bn AS n_b, v,
-         |  CAST(sum(kp) AS BIGINT) AS klp_micro,
-         |  CAST(sum(kq) AS BIGINT) AS klq_micro,
-         |  floor((CAST(sum(kp) AS DOUBLE) / 1000000.0 / (an + v)
-         |    + CAST(sum(kq) AS DOUBLE) / 1000000.0 / (bn + v)) / 2
-         |    * 1000000 + 0.5) / 1000000 AS js
-         |FROM contrib GROUP BY sa, sb, v, an, bn""".stripMargin
-    }) { (s, dir) =>
-      val cnt = table(s, dir, "documents")
-        .select(col("source"),
-          explode(split(TF.normalizeText(col("text")), " ")).as("w"))
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-        .localCheckpoint() // model-sized; cut the explode off replays
-      val stot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
-      val pairs = stot.select(col("source").as("sa"))
-        .crossJoin(stot.select(col("source").as("sb")))
-        .filter(col("sa") < col("sb"))
-      val ua = cnt.join(broadcast(pairs), col("source") === col("sa"))
-        .select(col("sa"), col("sb"), col("w"), col("c").as("a"))
-      val ub = cnt.join(broadcast(pairs), col("source") === col("sb"))
-        .select(col("sa"), col("sb"), col("w"), col("c").as("b"))
-      val u = ua.join(ub, Seq("sa", "sb", "w"), "full_outer")
-        .select(col("sa"), col("sb"),
-          coalesce(col("a"), lit(0L)).as("a"),
-          coalesce(col("b"), lit(0L)).as("b"))
-      val pv = u.groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("v"))
-      val g = u.join(broadcast(pv), Seq("sa", "sb"))
-        .join(broadcast(stot.select(col("source").as("sa"), col("n").as("an"))),
-          Seq("sa"))
-        .join(broadcast(stot.select(col("source").as("sb"), col("n").as("bn"))),
-          Seq("sb"))
-      g.withColumn("kp", expr(
-          """CAST(floor((a + 1) * ln(
-            |  CAST(2 * (a + 1) * (bn + v) AS DOUBLE) /
-            |  CAST((a + 1) * (bn + v) + (b + 1) * (an + v) AS DOUBLE))
-            |  * 1000000.0) AS BIGINT)""".stripMargin))
-        .withColumn("kq", expr(
-          """CAST(floor((b + 1) * ln(
-            |  CAST(2 * (b + 1) * (an + v) AS DOUBLE) /
-            |  CAST((a + 1) * (bn + v) + (b + 1) * (an + v) AS DOUBLE))
-            |  * 1000000.0) AS BIGINT)""".stripMargin))
-        .groupBy(col("sa").as("source_a"), col("sb").as("source_b"),
-          col("an").as("n_a"), col("bn").as("n_b"), col("v"))
-        .agg(sum(col("kp")).as("klp_micro"), sum(col("kq")).as("klq_micro"))
-        .withColumn("js",
-          floor((col("klp_micro").cast("double") / 1000000.0
-              / (col("n_a") + col("v"))
-            + col("klq_micro").cast("double") / 1000000.0
-              / (col("n_b") + col("v"))) / 2 * 1000000 + lit(0.5))
-            / 1000000)
     },
 
     // C59: EMBEDDING DIVERSITY SAMPLE — farthest-point (k-center
@@ -862,55 +621,6 @@ object FrontierQueries {
       parts.unionAll(branch("full", orders, li)).unionAll(merged)
     },
 
-    // C61: HEAPS-LAW VOCABULARY GROWTH — types-vs-tokens curve at ten
-    // corpus prefixes (by doc_id), the tokenizer-budget / corpus-size
-    // planning curve (V(n) ≈ K·n^β). A token's first appearance is
-    // its min doc_id — one keyed agg — and each checkpoint is a pair
-    // of conditional integer sums, so the whole curve is TWO
-    // map-side-combinable passes + one 10-value driver assembly, with
-    // every output an exact integer. (The naive spelling — a global
-    // running distinct over token positions — is a single-reducer
-    // sort; first-occurrence min is the distributed form.)
-    Q("heaps_law_curve", {
-      val toksSql = """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
-         |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |dtoks AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok FROM t),
-         |tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
-         |firsts AS (SELECT w, min(doc_id) AS fd FROM tok GROUP BY w),
-         |ks AS (SELECT unnest(range(1, 11)) AS k)
-         |SELECT CAST(k AS INT) AS k,
-         |  CAST((mx.mx * k) // 10 AS BIGINT) AS threshold,
-         |  (SELECT CAST(coalesce(sum(ntok), 0) AS BIGINT) FROM dtoks
-         |    WHERE doc_id <= (mx.mx * k) // 10) AS n_tokens,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM firsts
-         |    WHERE fd <= (mx.mx * k) // 10) AS n_types
-         |FROM ks, mx""".stripMargin
-    }) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        split(TF.normalizeText(col("text")), " ").as("toks"))
-      val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val thresholds = (1 to 10).map(kk => kk -> (mx * kk) / 10)
-      val dtoks = toks.select(col("doc_id"), size(col("toks")).cast("long").as("ntok"))
-      val firsts = toks.select(col("doc_id"), explode(col("toks")).as("w"))
-        .groupBy(col("w")).agg(min(col("doc_id")).as("fd"))
-      val tokCols = thresholds.map { case (kk, th) =>
-        sum(when(col("doc_id") <= th, col("ntok")).otherwise(0L)).as(s"t$kk")
-      }
-      val typeCols = thresholds.map { case (kk, th) =>
-        count(when(col("fd") <= th, lit(1))).as(s"y$kk")
-      }
-      val tokAgg = dtoks.agg(tokCols.head, tokCols.tail: _*).head()
-      val typeAgg = firsts.agg(typeCols.head, typeCols.tail: _*).head()
-      import s.implicits._
-      thresholds.zipWithIndex.map { case ((kk, th), i) =>
-        (kk, th, tokAgg.getLong(i), typeAgg.getLong(i))
-      }.toDF("k", "threshold", "n_tokens", "n_types")
-        .select(col("k").cast("int"), col("threshold"), col("n_tokens"),
-          col("n_types"))
-    },
-
     // B85: ORDERED-SET AGGREGATES — SQL-standard mode() and
     // percentile_disc(0.5) per group, each in its scale-safe
     // spelling: mode = distinct-value collapse + map-side-combinable
@@ -978,8 +688,8 @@ object FrontierQueries {
     // The oracle classifies by normalized TEXT — identical up to the
     // guarded 192-bit collision.
     Q("incremental_dedup",
-      """WITH n AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm,
+      s"""WITH n AS (
+        |  SELECT doc_id, ${TF.normalizeTextSql("text")} AS norm,
         |    (SELECT max(doc_id) // 2 FROM documents) AS t
         |  FROM documents),
         |hist AS (SELECT DISTINCT norm FROM n WHERE doc_id < t),
@@ -995,7 +705,7 @@ object FrontierQueries {
       val docs = table(s, dir, "documents")
       val t = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       val n = docs.select(col("doc_id"),
-        regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("norm"))
+        TF.normalizeText(col("text")).as("norm"))
         .select(col("doc_id"),
           xxhash64(col("norm")).as("f1"),
           xxhash64(lit(42L), col("norm")).as("f2"),
@@ -1048,7 +758,7 @@ object FrontierQueries {
          |    list_reduce(
          |      list_prepend(CAST(0 AS HUGEINT),
          |        list_transform(
-         |          string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ''),
+         |          string_split_regex(${TF.normalizeTextSql("text")}, ''),
          |          c -> CAST(ord(c) AS HUGEINT))),
          |      (h, b) -> (h * 31 + b) % 18446744073709551616) AS fpu,
          |    (SELECT max(doc_id) // 2 FROM documents) AS t
@@ -1092,7 +802,7 @@ object FrontierQueries {
       val m = 4 * t // filter size tracks the historical corpus
       val n = docs.select(col("doc_id"), col("source"),
         Fingerprint64.fingerprint64(
-          regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fp"))
+          TF.normalizeText(col("text"))).as("fp"))
         .localCheckpoint() // one fingerprint pass feeds index + probe + truth
       val posArr = array((1 to 3).map(j =>
         Fingerprint64.fmix64(col("fp").bitwiseXOR(lit(j.toLong)))
@@ -1123,64 +833,6 @@ object FrontierQueries {
           sum(col("isdup")).as("n_true_dup"),
           (sum(col("flagged")) - sum(col("isdup"))).as("n_false_pos"))
         .crossJoin(broadcast(nBits))
-    },
-
-    // C64: QUANTILE LENGTH TRIM — drop token-count outliers outside
-    // [p05, p95], the "too short to be prose / too long to be a
-    // document" corpus filter. The trim edges come from
-    // DistributedQuantile.cutValues (streamed two-pass rank
-    // SELECTION): the kept set is identical to the interpolated-
-    // breakpoint form — `ntok <= b95 ⟺ ntok <= v_lo95`, and
-    // `ntok >= b05` needs only the exact integer remainder
-    // (rem == 0 ? ntok >= v_lo05 : ntok > v_lo05) — but every value
-    // compared or reported is a real data double, engine-stable by
-    // construction (the round-13 ulp de-fuse). The kept SET per
-    // language is pinned by count + id-sum beside the bracket-rank
-    // bounds.
-    Q("corpus_length_trim", {
-      val toksSql = """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH d AS (SELECT doc_id, lang, CAST(len($toksSql) AS BIGINT) AS ntok
-         |           FROM documents),
-         |rk AS (SELECT CAST(ntok AS DOUBLE) AS v,
-         |         row_number() OVER (ORDER BY ntok) - 1 AS r,
-         |         count(*) OVER () AS n
-         |       FROM d),
-         |b AS (SELECT max(CASE WHEN r = (1*(n-1))//20 THEN v END) AS q05,
-         |        max(CASE WHEN r = (19*(n-1))//20 THEN v END) AS q95,
-         |        max((1*(n-1))%20) AS q05_rem FROM rk),
-         |kd AS (
-         |  SELECT doc_id, lang, ntok, q05, q95,
-         |    CASE WHEN q05_rem = 0 THEN ntok >= q05 ELSE ntok > q05 END
-         |      AND ntok <= q95 AS keep
-         |  FROM d, b)
-         |SELECT lang,
-         |  CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  CAST(sum(CASE WHEN NOT keep AND ntok <= q05 THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_short,
-         |  CAST(sum(CASE WHEN ntok > q95 THEN 1 ELSE 0 END) AS BIGINT) AS n_long,
-         |  CAST(sum(CASE WHEN keep THEN doc_id ELSE 0 END)
-         |    AS BIGINT) AS kept_id_sum,
-         |  min(q05) AS q05, min(q95) AS q95
-         |FROM kd GROUP BY lang""".stripMargin
-    }) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"), col("lang"),
-        size(split(TF.normalizeText(col("text")), " ")).cast("long").as("ntok"))
-      val qs = graft.operators.DistributedQuantile
-        .cutValues(d.withColumn("_g", lit("all")), "_g", "ntok",
-          Seq(("q05", 1, 20), ("q95", 19, 20)))
-        .select(col("q05"), col("q95"), col("q05_rem"))
-      val keep = when(col("q05_rem") === 0, col("ntok") >= col("q05"))
-        .otherwise(col("ntok") > col("q05")) && col("ntok") <= col("q95")
-      d.crossJoin(broadcast(qs))
-        .withColumn("keep", keep)
-        .groupBy(col("lang"))
-        .agg(
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-          sum(when(!col("keep") && col("ntok") <= col("q05"), 1L)
-            .otherwise(0L)).as("n_short"),
-          sum(when(col("ntok") > col("q95"), 1L).otherwise(0L)).as("n_long"),
-          sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("kept_id_sum"),
-          min(col("q05")).as("q05"), min(col("q95")).as("q95"))
     },
 
     // B86: ROLLING MEDIAN — per-user 7-day trailing median of daily
@@ -1339,92 +991,6 @@ object FrontierQueries {
           (col("cents_b") - col("cents")).as("delta"))
     },
 
-    // C65: CROSS-SPLIT NEAR-DUP CONTAMINATION — near-duplicate pairs
-    // that STRADDLE the train/test split (doc_id ≡ 0 mod 29 = test):
-    // the eval-integrity check that exact-8-gram contamination (C26)
-    // misses when the leaked document was lightly edited. Reuses the
-    // MinHashLSH operator end-to-end (banded buckets, clone collapse,
-    // jaccard verify) — the oracle is the O(n²) jaccard specification
-    // restricted to crossing pairs, so the emitted pair SET is exact.
-    Q("cross_split_contamination", {
-      val toksSql = "string_split(text, ' ')"
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |g AS (
-         |  SELECT doc_id, list_distinct(list_transform(
-         |    range(1, len(toks) - 1),
-         |    i -> concat(toks[CAST(i AS INT)], ' ',
-         |                toks[CAST(i + 1 AS INT)], ' ',
-         |                toks[CAST(i + 2 AS INT)]))) AS grams
-         |  FROM t WHERE len(toks) >= 3),
-         |p AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-         |      / len(list_distinct(list_concat(a.grams, b.grams))) AS j
-         |  FROM g a JOIN g b ON a.doc_id < b.doc_id)
-         |SELECT
-         |  CASE WHEN id_a % 29 = 0 THEN id_a ELSE id_b END AS test_id,
-         |  CASE WHEN id_a % 29 = 0 THEN id_b ELSE id_a END AS train_id,
-         |  round(j, 4) AS jaccard
-         |FROM p
-         |WHERE j >= 0.8 AND (id_a % 29 = 0) <> (id_b % 29 = 0)""".stripMargin
-    }) { (s, dir) =>
-      graft.operators.MinHashLSH
-        .nearDupPairs(table(s, dir, "documents"), "doc_id", "text", 0.8)
-        .filter((col("id_a") % 29 === 0) =!= (col("id_b") % 29 === 0))
-        .select(
-          when(col("id_a") % 29 === 0, col("id_a")).otherwise(col("id_b"))
-            .as("test_id"),
-          when(col("id_a") % 29 === 0, col("id_b")).otherwise(col("id_a"))
-            .as("train_id"),
-          round(col("jaccard"), 4).as("jaccard"))
-    },
-
-    // C67: FILTER AGREEMENT (Cohen's kappa) — how much do two corpus
-    // quality filters agree beyond chance? Here: the curation
-    // char-length filter vs the token-count filter (the C14/D11
-    // thresholds). kappa is spelled as ONE division of exact-integer
-    // terms — κ = (N·(n11+n00) − r1·c1 − r0·c0) / (N² − r1·c1 − r0·c0)
-    // — so the double compares bit-for-bit; the contingency counts
-    // are emitted beside it. One corpus scan, one 4-counter agg.
-    Q("filter_agreement_kappa", {
-      val toksSql = """len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '))"""
-      s"""WITH f AS (
-         |  SELECT CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS f1,
-         |    CASE WHEN $toksSql >= 30 THEN 1 ELSE 0 END AS f2
-         |  FROM documents),
-         |c AS (
-         |  SELECT
-         |    CAST(sum(f1 * f2) AS BIGINT) AS n11,
-         |    CAST(sum(f1 * (1 - f2)) AS BIGINT) AS n10,
-         |    CAST(sum((1 - f1) * f2) AS BIGINT) AS n01,
-         |    CAST(sum((1 - f1) * (1 - f2)) AS BIGINT) AS n00,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM f)
-         |SELECT n11, n10, n01, n00, n,
-         |  CAST(n * (n11 + n00) - (n11 + n10) * (n11 + n01)
-         |    - (n01 + n00) * (n10 + n00) AS DOUBLE)
-         |  / (n * n - (n11 + n10) * (n11 + n01) - (n01 + n00) * (n10 + n00))
-         |    AS kappa
-         |FROM c""".stripMargin
-    }) { (s, dir) =>
-      table(s, dir, "documents")
-        .select(
-          when(col("n_chars") >= 200, 1L).otherwise(0L).as("f1"),
-          when(size(split(TF.normalizeText(col("text")), " ")) >= 30, 1L)
-            .otherwise(0L).as("f2"))
-        .agg(
-          sum(col("f1") * col("f2")).as("n11"),
-          sum(col("f1") * (lit(1) - col("f2"))).as("n10"),
-          sum((lit(1) - col("f1")) * col("f2")).as("n01"),
-          sum((lit(1) - col("f1")) * (lit(1) - col("f2"))).as("n00"),
-          count(lit(1)).as("n"))
-        .withColumn("kappa", expr(
-          """CAST(n * (n11 + n00) - (n11 + n10) * (n11 + n01)
-            |  - (n01 + n00) * (n10 + n00) AS DOUBLE)
-            |/ (n * n - (n11 + n10) * (n11 + n01) - (n01 + n00) * (n10 + n00))"""
-            .stripMargin))
-    },
-
     // C68: MATRYOSHKA TRUNCATION RECALL — how much ANN recall
     // survives searching on only the FIRST 16 of 64 embedding dims
     // (the MRL/truncated-embedding deployment question: a 4× smaller
@@ -1553,46 +1119,6 @@ object FrontierQueries {
         .agg(min(col("k")).as("run_start"), max(col("k")).as("run_end"),
           count(lit(1)).as("run_len"))
         .drop("island")
-    },
-
-    // C72: PII SCAN REPORT — per-language detection rates for the
-    // C13 scrub patterns (emails, URLs, long digit runs) BEFORE
-    // redaction: the "how much PII is in this source" audit that
-    // decides whether a source needs review rather than blanket
-    // scrubbing. One scan, conditional counts; occurrence counts are
-    // non-overlapping left-to-right regex matches, which both
-    // engines' regex machinery produce identically (the text_scrub
-    // contract).
-    Q("pii_scan_report",
-      """SELECT lang,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN regexp_matches(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}') THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS docs_email,
-        |  CAST(sum(len(regexp_extract_all(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}'))) AS BIGINT) AS n_email,
-        |  CAST(sum(CASE WHEN regexp_matches(text, 'https?://[^ ]+')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS docs_url,
-        |  CAST(sum(len(regexp_extract_all(text, 'https?://[^ ]+'))) AS BIGINT)
-        |    AS n_url,
-        |  CAST(sum(CASE WHEN regexp_matches(text, '[0-9]{4,}')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS docs_num,
-        |  CAST(sum(len(regexp_extract_all(text, '[0-9]{4,}'))) AS BIGINT) AS n_num
-        |FROM documents GROUP BY lang""".stripMargin) { (s, dir) =>
-      val emailPat = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-      val urlPat = "https?://[^ ]+"
-      val numPat = "[0-9]{4,}"
-      def hits(pat: String): Column = regexp_count(col("text"), lit(pat))
-      table(s, dir, "documents")
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(hits(emailPat) > 0, 1L).otherwise(0L)).as("docs_email"),
-          sum(hits(emailPat).cast("long")).as("n_email"),
-          sum(when(hits(urlPat) > 0, 1L).otherwise(0L)).as("docs_url"),
-          sum(hits(urlPat).cast("long")).as("n_url"),
-          sum(when(hits(numPat) > 0, 1L).otherwise(0L)).as("docs_num"),
-          sum(hits(numPat).cast("long")).as("n_num"))
     },
 
     // B92: ROLLING DISTINCT VIA SKETCH ROLLUP — 7-day rolling

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.functions.{TextFunctions => TF}
 import graft.operators.{PageRank, TriangleBitset}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1091,7 +1092,7 @@ object GraphQueries {
     // O(edges); ranks never on the driver; top-20 via
     // TakeOrderedAndProject.
     Q("textrank_keywords",
-      s"""WITH t AS (SELECT ${ZenithQueries.toksSql} AS toks FROM documents),
+      s"""WITH t AS (SELECT ${TF.wsTokensSql("text")} AS toks FROM documents),
          |uni AS (
          |  SELECT unnest(toks) AS w FROM t),
          |vocab AS (
@@ -1118,7 +1119,7 @@ object GraphQueries {
          |      AS rnk
          |  FROM it2)
          |SELECT rnk, keyword, pr_pico FROM r WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val t = table(s, dir, "documents").select(ZenithQueries.sparkToks.as("toks"))
+      val t = table(s, dir, "documents").select(TF.wsTokens(col("text")).as("toks"))
         .localCheckpoint() // feeds the unigram count and the bigram explode
       val vocab = t.select(explode(col("toks")).as("w"))
         .filter(col("w") =!= "")

@@ -602,68 +602,6 @@ object HorizonQueries {
           when(col("level") === col("m"), 1).otherwise(0).cast("int").as("chosen"))
     },
 
-    // C77: LENGTH-BUCKETED BATCH SCHEDULING — the padding-waste
-    // minimizer of LLM training/serving: docs bucket to the next
-    // power-of-two token length (an INTEGER CASE ladder — a float
-    // log2 would flip exact-power boundaries), each bucket packs
-    // fixed-capacity batches of padded tokens, and the report states
-    // per-batch utilization in integer micro-units. The per-bucket
-    // dense index comes from DistributedPrefixSum (two streamed
-    // passes keyed on the bucket — never a global window); everything
-    // downstream of the index is a keyed agg.
-    Q("length_bucket_batches", {
-      val ladder = (4 to 13).map(1 << _) // 16 .. 8192
-      val caseSql = "CASE " + ladder.map(b => s"WHEN n <= $b THEN $b")
-        .mkString(" ") + " ELSE -1 END"
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-         |  FROM documents),
-         |b AS (SELECT doc_id, n, CAST($caseSql AS BIGINT) AS bucket_len FROM t
-         |      WHERE n <= ${ladder.last}),
-         |ix AS (
-         |  SELECT doc_id, n, bucket_len,
-         |    row_number() OVER (PARTITION BY bucket_len ORDER BY doc_id) - 1 AS ix
-         |  FROM b),
-         |bt AS (
-         |  SELECT bucket_len, ix // (16384 // bucket_len) AS batch_id, n
-         |  FROM ix)
-         |SELECT bucket_len, CAST(batch_id AS BIGINT) AS batch_id,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(n) AS BIGINT) AS token_sum,
-         |  CAST(count(*) * bucket_len AS BIGINT) AS padded_tokens,
-         |  CAST((sum(n) * 1000000) // (count(*) * bucket_len) AS BIGINT)
-         |    AS utilization_micro
-         |FROM bt GROUP BY 1, 2""".stripMargin
-    }) { (s, dir) =>
-      val ladder = (4 to 13).map(1 << _)
-      val bucket = ladder.foldRight(lit(-1L): org.apache.spark.sql.Column) {
-        (b, acc) => when(col("n") <= b, b.toLong).otherwise(acc)
-      }
-      // Docs past the top rung (n > 8192) have no power-of-two bucket
-      // (bucket_len = -1 → negative batch capacity, and Spark's
-      // truncating `div` diverges from a flooring `//` on negative
-      // quotients) — a scheduler would truncate or reject them
-      // upstream, so both engines exclude them identically here.
-      val t = table(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n"))
-        .filter(col("n") <= ladder.last.toLong)
-        .withColumn("bucket_len", bucket)
-        .withColumn("_one", lit(1L))
-      graft.operators.DistributedPrefixSum
-        .running(t, "bucket_len", Seq("doc_id"), "_one", "rk")
-        .select(col("bucket_len"), col("n"),
-          expr("(rk - 1) div (16384 div bucket_len)").as("batch_id"))
-        .groupBy(col("bucket_len"), col("batch_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("token_sum"))
-        .select(col("bucket_len"), col("batch_id"), col("n_docs"),
-          col("token_sum"),
-          (col("n_docs") * col("bucket_len")).as("padded_tokens"),
-          expr("(token_sum * 1000000) div (n_docs * bucket_len)")
-            .as("utilization_micro"))
-    },
-
     // B105: WINSORIZATION — robust-stats clipping at the [p01, p99]
     // ORDER STATISTICS: lo = the value at rank ⌈0.01·(n−1)⌉, hi = the
     // value at rank ⌊0.99·(n−1)⌋ (DistributedQuantile.cutValues —

@@ -1418,57 +1418,5 @@ object MeridianQueries {
             floor((lit(3) * col("t") - lit(2) * (col("n") - 2)) / lit(3.0)
               / sqrt((lit(16) * col("n") - 29) / lit(90.0))
               * lit(1000000) + lit(0.5)) / lit(1000000)).as("z"))
-    },
-
-    // C157: CORPUS SOURCE CONCENTRATION — Herfindahl-Hirschman index
-    // (round 12; the antitrust HHI applied to data mixing — the
-    // one-number "is my corpus dominated by one crawl" diagnostic
-    // that motivates C48's domain cap and C33/C81/C87's rebalancers;
-    // 1/HHI is the effective number of sources, the diversity count
-    // C104's datacard reports per-source rows for): HHI = Σ_s
-    // (n_s/N)² = Σn_s²/N² — ONE division of exact widened integers;
-    // effective sources = N²·1e6 div Σn_s² in micro-units (exact
-    // integer division, no double reciprocal); top share ONE more
-    // exact division. Scale shape: one map-side-combinable keyed
-    // count; everything after on the source-sized model relation.
-    Q("corpus_hhi",
-      """WITH g AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1),
-        |s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_sources,
-        |    CAST(sum(n) AS BIGINT) AS total,
-        |    CAST(sum(CAST(n AS HUGEINT) * n) AS HUGEINT) AS sq
-        |  FROM g),
-        |top AS (
-        |  SELECT source AS top_source, n AS top_n FROM g
-        |  ORDER BY n DESC, source LIMIT 1)
-        |SELECT s.n_sources, top.top_source,
-        |  floor(CAST(top.top_n AS DOUBLE) / s.total * 1000000 + 0.5)
-        |    / 1000000 AS top_share,
-        |  floor(CAST(s.sq AS DOUBLE)
-        |    / (CAST(s.total AS DOUBLE) * s.total) * 1000000 + 0.5)
-        |    / 1000000 AS hhi,
-        |  CAST((CAST(s.total AS HUGEINT) * s.total * 1000000) // s.sq
-        |    AS BIGINT) AS effective_sources_micro
-        |FROM s, top""".stripMargin) { (s, dir) =>
-      val g = table(s, dir, "documents")
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .localCheckpoint() // totals + top read the model relation
-      val st = g.agg(count(lit(1)).as("n_sources"),
-        sum(col("n")).as("total"),
-        sum(col("n").cast("decimal(38,0)") * col("n")).as("sq"))
-      val top = g.orderBy(col("n").desc, col("source")).limit(1)
-        .select(col("source").as("top_source"), col("n").as("top_n"))
-      broadcast(st).crossJoin(broadcast(top))
-        .select(col("n_sources"), col("top_source"),
-          (floor(col("top_n").cast("double") / col("total")
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("top_share"),
-          (floor(col("sq").cast("double")
-            / (col("total").cast("double") * col("total"))
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("hhi"),
-          expr("""cast((cast(total as decimal(38,0)) * total * 1000000)
-                 |  div sq as bigint)""".stripMargin)
-            .as("effective_sources_micro"))
     })
 }

@@ -837,166 +837,6 @@ object PinnacleQueries {
             / 1000000).as("llr"))
     },
 
-    // C126: YULE'S K lexical-richness characteristic (Yule 1944;
-    // Tweedie & Baayen 1998 show it's the length-STABLE member of the
-    // richness family — Heaps C66 and distinct-n C114 grow with
-    // sample size, K converges): per source, K = 10⁴·(Σ_m m²V(m) − N)
-    // / N² over the frequency-of-frequencies spectrum — a repetitive/
-    // templated source scores high K, diverse prose low. Exactness:
-    // Σ m²V(m) = Σ_types c² in DECIMAL(38,0)/HUGEINT (c² sums pass
-    // BIGINT at the ×1000 token grain), ONE division, 6dp floor.
-    // Scale shape: one explode + (source, token) count (map-side
-    // combined), one keyed rollup — the C10/C112 token-grain shape.
-    Q("text_yule_k",
-      s"""WITH tok AS (
-         |  SELECT source, unnest(string_split(
-         |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '))
-         |    AS t
-         |  FROM documents),
-         |tc AS (
-         |  SELECT source, t, CAST(count(*) AS BIGINT) AS c
-         |  FROM tok WHERE t <> '' GROUP BY 1, 2),
-         |s AS (
-         |  SELECT source, CAST(sum(c) AS BIGINT) AS n,
-         |    CAST(count(*) AS BIGINT) AS v,
-         |    CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS sc2
-         |  FROM tc GROUP BY 1)
-         |SELECT source, n AS n_tokens, v AS n_types,
-         |  CASE WHEN n > 0 THEN
-         |    floor(10000.0 * CAST(sc2 - n AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * n) * 1000000 + 0.5) / 1000000
-         |    END AS yule_k
-         |FROM s""".stripMargin) { (s, dir) =>
-      val tc = table(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.functions.TextFunctions.wsTokens(col("text")))
-            .as("t"))
-        .filter(col("t") =!= "")
-        .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c"))
-      tc.groupBy(col("source"))
-        .agg(sum(col("c")).as("n"), count(lit(1)).as("v"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("sc2"))
-        .select(col("source"), col("n").as("n_tokens"),
-          col("v").as("n_types"),
-          when(col("n") > 0,
-            floor(lit(10000.0) * (col("sc2") - col("n")).cast("double")
-              / (col("n").cast("double") * col("n"))
-              * lit(1000000) + lit(0.5)) / lit(1000000)).as("yule_k"))
-    },
-
-    // C127: GARBAGE/GIBBERISH SCORE — the OCR-noise and mojibake
-    // screen (the "byte-level quality" cousin of C10's word-level
-    // quality: C10 scores GOOD prose, this flags UNREADABLE text —
-    // Bandy & Vincent 2021 document exactly these artifacts in
-    // BookCorpus): per doc, the non-alphanumeric ratio and the
-    // longest consonant run (real words top out ~6 — 'rhythms'; OCR
-    // noise and key-mash run longer), banded into a flag at the
-    // pinned (0.30, 8) cuts. All integer counts off two regex scans,
-    // ONE division, 6dp floor. Map-only — no shuffle at all.
-    Q("text_garbage_score",
-      """SELECT doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |    AS BIGINT) AS non_alnum,
-        |  CAST(coalesce(list_max(list_transform(
-        |    regexp_extract_all(lower(text),
-        |      '[bcdfghjklmnpqrstvwxz]+'), x -> length(x))), 0)
-        |    AS BIGINT) AS max_cons_run,
-        |  floor(CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |      AS DOUBLE) / greatest(length(text), 1)
-        |    * 1000000 + 0.5) / 1000000 AS non_alnum_ratio,
-        |  CAST(CASE WHEN
-        |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |      AS DOUBLE) / greatest(length(text), 1) > 0.30
-        |    OR coalesce(list_max(list_transform(
-        |      regexp_extract_all(lower(text),
-        |        '[bcdfghjklmnpqrstvwxz]+'), x -> length(x))), 0) >= 8
-        |    THEN 1 ELSE 0 END AS INT) AS is_garbage
-        |FROM documents""".stripMargin) { (s, dir) =>
-      val lowered = lower(col("text"))
-      val nonAl = size(regexp_extract_all(lowered, lit("[^a-z0-9 ]"), lit(0)))
-        .cast("long")
-      val consRun = coalesce(array_max(transform(
-        regexp_extract_all(lowered, lit("[bcdfghjklmnpqrstvwxz]+"), lit(0)),
-        x => length(x))), lit(0)).cast("long")
-      val ratio = nonAl.cast("double") / greatest(length(col("text")), lit(1))
-      table(s, dir, "documents").select(col("doc_id"),
-        length(col("text")).cast("long").as("n_chars"),
-        nonAl.as("non_alnum"), consRun.as("max_cons_run"),
-        (floor(ratio * 1000000 + lit(0.5)) / 1000000).as("non_alnum_ratio"),
-        when(ratio > 0.30 || consRun >= 8, lit(1)).otherwise(lit(0))
-          .cast("int").as("is_garbage"))
-    },
-
-    // C128: SELF-BLEU bigram precision between CONSECUTIVE docs (Zhu
-    // et al. 2018's Self-BLEU diversity metric, Papineni et al.
-    // 2002's clipped modified precision as the core; BP is dropped —
-    // no live exp in the determinism contract): for each (doc, doc+1)
-    // pair, p₂ = Σ_g min(c_a(g), c_b(g)) / |bigrams_a| — high p₂
-    // across the corpus = templated/self-repeating text. Exactness:
-    // clipped counts are integer mins; ONE division each, 6dp. Scale
-    // shape: pairing is an equi-join on doc_id+1 (NO window — a
-    // corpus-order window would single-reduce the corpus); gram joins
-    // are keyed (doc, gram) shuffles, linear in corpus tokens.
-    Q("self_bleu_bigram",
-      s"""WITH tk AS (
-         |  SELECT doc_id, string_split(
-         |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')
-         |    AS t
-         |  FROM documents),
-         |bg AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(range(1, len(t)),
-         |      i -> t[i] || ' ' || t[i + 1])) AS g
-         |  FROM tk WHERE len(t) >= 2),
-         |bc AS (
-         |  SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c
-         |  FROM bg GROUP BY 1, 2),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM (SELECT DISTINCT doc_id FROM bc) a
-         |  JOIN (SELECT DISTINCT doc_id FROM bc) b
-         |    ON b.doc_id = a.doc_id + 1),
-         |clip AS (
-         |  SELECT p.doc_a, p.doc_b,
-         |    CAST(sum(a.c) AS BIGINT) AS n_a,
-         |    CAST(sum(least(a.c, coalesce(b.c, 0))) AS BIGINT) AS clipped
-         |  FROM pairs p
-         |  JOIN bc a ON a.doc_id = p.doc_a
-         |  LEFT JOIN bc b ON b.doc_id = p.doc_b AND b.g = a.g
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, n_a, clipped,
-         |  floor(CAST(clipped AS DOUBLE) / n_a * 1000000 + 0.5) / 1000000
-         |    AS p2
-         |FROM clip""".stripMargin) { (s, dir) =>
-      val tk = table(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.wsTokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 2)
-      val bc = tk
-        .select(col("doc_id"),
-          explode(expr("""transform(sequence(1, size(t) - 1),
-            i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"""))
-            .as("g"))
-        .groupBy(col("doc_id"), col("g"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint() // feeds the pair relation and both join sides
-      val docs = bc.select(col("doc_id")).distinct()
-      val pairs = docs.as("a").join(docs.as("b"),
-          col("b.doc_id") === col("a.doc_id") + 1)
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      val a = bc.select(col("doc_id").as("doc_a"), col("g"), col("c").as("ca"))
-      val b = bc.select(col("doc_id").as("doc_b"), col("g"), col("c").as("cb"))
-      pairs.join(a, Seq("doc_a"))
-        .join(b, Seq("doc_b", "g"), "left")
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(sum(col("ca")).as("n_a"),
-          sum(least(col("ca"), coalesce(col("cb"), lit(0L)))).as("clipped"))
-        .select(col("doc_a"), col("doc_b"), col("n_a"), col("clipped"),
-          (floor(col("clipped").cast("double") / col("n_a")
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("p2"))
-    },
-
     // C129: LEAVE-ONE-OUT TARGET ENCODING (Micci-Barreca 2001; the
     // leakage-free categorical encoder every tabular-ML pipeline
     // ships — plain mean-encoding leaks each row's own label into its
@@ -1036,69 +876,5 @@ object PinnacleQueries {
           when(col("n") > 1,
             floor((col("y") - col("conv")).cast("double") / (col("n") - 1)
               * lit(1000000) + lit(0.5)) / lit(1000000)).as("enc"))
-    },
-
-    // C130: FEATURE HASHING — the hashing trick (Weinberger et al.
-    // ICML 2009; Vowpal Wabbit's input layer): tokens → 16 signed
-    // buckets through the engine's ONE deterministic hash family
-    // (31-poly token hash + separator step + fmix64 —
-    // PositionedNgramHashes at n=1, the C3/C61 machinery), bucket =
-    // h & 15, sign = bit 4, feature = Σ±1 with multiplicity. The
-    // unbiased-sign trick makes E[⟨φ(a),φ(b)⟩] = ⟨a,b⟩ — the
-    // fixed-width embedding a 100 TB corpus can afford without a
-    // vocabulary. Exactness: all-integer; the oracle replays poly31/
-    // fmix64 in HUGEINT mod-2⁶⁴ arithmetic (the dedup_simhash
-    // replay, signed-byte extraction included — exact on multi-byte
-    // UTF-8 too). Scale shape: map-only codegen'd expression →
-    // explode → ONE keyed (doc, bucket) count, map-side combined.
-    Q("feature_hash_vectors", {
-      val c1 = BigInt("18397679294719823053")
-      val c2 = BigInt("14181476777654086739")
-      s"""WITH toks AS (
-         |  SELECT doc_id, tok FROM (
-         |    SELECT doc_id, unnest(string_split(
-         |      regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '))
-         |      AS tok
-         |    FROM documents) WHERE len(tok) > 0),
-         |th AS (
-         |  SELECT doc_id,
-         |    (list_reduce(list_prepend(CAST(0 AS HUGEINT),
-         |      list_transform(range(octet_length(encode(tok))), i ->
-         |        CAST(CASE WHEN CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT) < 128
-         |             THEN CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT)
-         |             ELSE 18446744073709551360 + CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT)
-         |        END AS HUGEINT))),
-         |      (h, b) -> (h * 31 + b) % 18446744073709551616) * 31 + 32)
-         |      % 18446744073709551616 AS t
-         |  FROM (SELECT doc_id, tok, hex(encode(tok)) AS hx FROM toks)),
-         |fm AS (
-         |  SELECT doc_id, xor(d, d // 8589934592) AS h
-         |  FROM (SELECT doc_id, ${DedupQueries.mulMod64("c", c2)} AS d
-         |    FROM (SELECT doc_id, xor(b, b // 8589934592) AS c
-         |      FROM (SELECT doc_id, ${DedupQueries.mulMod64("a", c1)} AS b
-         |        FROM (SELECT doc_id, xor(t, t // 8589934592) AS a FROM th))))),
-         |sb AS (
-         |  SELECT doc_id, CAST(h % 16 AS INT) AS bucket,
-         |    CASE WHEN (h // 16) % 2 = 1 THEN 1 ELSE -1 END AS sgn
-         |  FROM fm)
-         |SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS f,
-         |  CAST(count(*) AS BIGINT) AS n_hits
-         |FROM sb GROUP BY 1, 2""".stripMargin
-    }) { (s, dir) =>
-      val toks = table(s, dir, "documents")
-        .select(col("doc_id"),
-          filter(graft.functions.TextFunctions.wsTokens(col("text")),
-            t => t =!= "").as("t"))
-        .filter(size(col("t")) > 0)
-      val hashed = toks.select(col("doc_id"),
-        explode(graft.functions.VectorExpressions
-          .positionedNgramHashes(col("t"), 1)).as("h"))
-      hashed
-        .select(col("doc_id"),
-          col("h").bitwiseAND(lit(15L)).cast("int").as("bucket"),
-          when(shiftrightunsigned(col("h"), 4).bitwiseAND(lit(1L)) === 1L,
-            lit(1L)).otherwise(lit(-1L)).as("sgn"))
-        .groupBy(col("doc_id"), col("bucket"))
-        .agg(sum(col("sgn")).as("f"), count(lit(1)).as("n_hits"))
     })
 }

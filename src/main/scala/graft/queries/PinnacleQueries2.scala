@@ -5,8 +5,7 @@ import graft.operators.VectorOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-10 closing wave 2: regression diagnostics, seasonal trend,
-  * sentence-grain text stats, and train/eval n-gram novelty.
+/** Round-10 closing wave 2: regression diagnostics and seasonal trend.
   * Conventions as PinnacleQueries (exact integers → one pinned
   * division, 6dp floor; day = epoch // 86400; cents = floor(v·100)).
   */
@@ -147,115 +146,6 @@ object PinnacleQueries2 {
               / sqrt(col("var18").cast("double") / 18.0)
               * lit(1000000) + lit(0.5)) / lit(1000000))
             .otherwise(lit(0.0)).as("z"))
-    },
-
-    // C131: SENTENCE-GRAIN STATISTICS — the segmentation pass under
-    // sentence-level dedup (Lee et al. ACL'22 run it before
-    // ExactSubstr) and under every length-law filter that speaks
-    // "sentences" (Gopher's mean-words-per-sentence bound, Rae et al.
-    // 2021): docs split on [.!?]+ runs, per doc: sentence count,
-    // token total, mean/max sentence length in whitespace tokens.
-    // All-integer counts off one split, ONE division (mean), 6dp.
-    // Empty/blank sentences (consecutive terminators, trailing
-    // punctuation) are dropped on BOTH sides. Map-only, no shuffle.
-    Q("text_sentence_stats",
-      """WITH sent AS (
-        |  SELECT doc_id, s FROM (
-        |    SELECT doc_id, unnest(string_split_regex(
-        |      regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-        |      '[.!?]+')) AS s
-        |    FROM documents)
-        |  WHERE trim(s) <> ''),
-        |st AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS toks
-        |  FROM sent)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sentences,
-        |  CAST(sum(toks) AS BIGINT) AS n_tokens,
-        |  floor(CAST(sum(toks) AS DOUBLE) / count(*) * 1000000 + 0.5)
-        |    / 1000000 AS mean_sentence_len,
-        |  CAST(max(toks) AS BIGINT) AS max_sentence_len
-        |FROM st GROUP BY doc_id""".stripMargin) { (s, dir) =>
-      val sent = table(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(graft.functions.TextFunctions
-            .normalizeText(col("text")), "[.!?]+")).as("s"))
-        .filter(trim(col("s")) =!= "")
-      sent
-        .select(col("doc_id"),
-          size(split(trim(col("s")), " ")).cast("long").as("toks"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_sentences"), sum(col("toks")).as("n_tokens"),
-          (floor(sum(col("toks")).cast("double") / count(lit(1))
-            * lit(1000000) + lit(0.5)) / lit(1000000))
-            .as("mean_sentence_len"),
-          max(col("toks")).as("max_sentence_len"))
-    },
-
-    // C132: N-GRAM NOVELTY vs the train split (McCoy et al. TACL 2023
-    // "RAVEN" n-gram novelty; the memorization-vs-generalization
-    // read-out Carlini et al. 2023 take on generations, here applied
-    // corpus-side to the eval split): for each EVAL doc (doc_id % 10
-    // ≥ 8, the C72 dataset_split convention), the fraction of its
-    // distinct word 4-grams that never appear in ANY train doc. Low
-    // novelty = the eval split leaks training text (the gram-grain
-    // complement of C73's decontaminate, which flags whole docs).
-    // Exactness: distinct-gram counts are integers off the engine's
-    // fmix64 gram hashes — REPLAYED EXACTLY in DuckDB via the C3
-    // HUGEINT machinery... no: the oracle needs no hash at all — it
-    // compares the gram STRINGS (the specification); the Spark side
-    // joins on TokenNgramHashes for shuffle width (8 B vs ~40 B
-    // keys), exact because fmix64 grams collide with probability
-    // ~n²/2⁶⁴ and the C1 fingerprint convention (collision = loud
-    // assert) applies. ONE division, 6dp. Scale: gram explode +
-    // distinct + anti-join — linear keyed shuffles.
-    Q("ngram_novelty",
-      """WITH tk AS (
-        |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')
-        |    AS t
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id,
-        |    array_to_string(t[CAST(i AS INT):CAST(i + 3 AS INT)], ' ')
-        |      AS gram
-        |  FROM tk, unnest(range(1, len(t) - 2)) AS u(i)
-        |  WHERE len(t) >= 4),
-        |train AS (
-        |  SELECT DISTINCT gram FROM g WHERE doc_id % 10 < 8),
-        |ev AS (SELECT doc_id, gram FROM g WHERE doc_id % 10 >= 8),
-        |nov AS (
-        |  SELECT e.doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(CASE WHEN t.gram IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_novel
-        |  FROM ev e LEFT JOIN train t ON e.gram = t.gram
-        |  GROUP BY 1)
-        |SELECT doc_id, n_grams, n_novel,
-        |  floor(CAST(n_novel AS DOUBLE) / n_grams * 1000000 + 0.5)
-        |    / 1000000 AS novelty
-        |FROM nov""".stripMargin) { (s, dir) =>
-      val tk = table(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.wsTokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 4)
-      // 8-byte fmix64 gram hashes instead of ~40-byte gram strings on
-      // the shuffle (the C2/C61 discipline); TokenNgramHashes is
-      // already distinct-per-doc by construction.
-      val g = tk.select(col("doc_id"),
-        explode(graft.functions.VectorExpressions
-          .tokenNgramHashes(col("t"), 4)).as("gh"))
-      val train = g.filter(col("doc_id") % 10 < 8)
-        .select(col("gh")).distinct()
-      val ev = g.filter(col("doc_id") % 10 >= 8)
-      ev.join(train.withColumn("hit", lit(1)), Seq("gh"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
-            .as("n_novel"))
-        .select(col("doc_id"), col("n_grams"), col("n_novel"),
-          (floor(col("n_novel").cast("double") / col("n_grams")
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("novelty"))
     },
 
     // B162: RESCALED-RANGE (R/S) TABLE (Hurst 1951; Mandelbrot &
@@ -1531,69 +1421,6 @@ object PinnacleQueries2 {
               / (col("n").cast("double") * col("n")))
             * sqrt(col("n1").cast("double") * col("n0")) / col("n")
             * lit(1000000) + lit(0.5)) / lit(1000000)).as("r_pb"))
-    },
-
-    // C137: CODE-vs-PROSE DETECTION — the language-domain router
-    // every mixed-corpus pipeline runs before tokenizer/quality
-    // decisions (StarCoder's pipeline, Li et al. 2023, separates
-    // code; code in a prose corpus poisons perplexity filters and
-    // vice versa): per doc, symbol density ({};()=<>[] per char),
-    // code-keyword hits (a PINNED 16-token set over the C10 token
-    // grain), and indented-line ratio (RAW text lines starting with
-    // 2+ spaces — normalization would erase exactly this signal);
-    // flag = symbol ratio > 0.04 AND (keywords ≥ 2 OR indent ratio >
-    // 0.2), cuts pinned. All-integer counts off regex/token scans,
-    // two divisions, 6dp. Map-only.
-    Q("text_code_detect", {
-      val kw = Seq("def", "return", "import", "class", "void", "int",
-        "function", "var", "const", "if", "else", "for", "while",
-        "public", "static", "new")
-      val kwList = kw.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
-         |    AS BIGINT) AS n_symbols,
-         |  CAST(len(list_filter(string_split(
-         |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-         |    t -> list_contains($kwList, t))) AS BIGINT) AS n_keywords,
-         |  CAST(len(list_filter(string_split(text, chr(10)),
-         |    l -> l LIKE '  %')) AS BIGINT) AS n_indented,
-         |  CAST(greatest(len(string_split(text, chr(10))), 1) AS BIGINT)
-         |    AS n_lines,
-         |  floor(CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
-         |      AS DOUBLE) / greatest(length(text), 1)
-         |    * 1000000 + 0.5) / 1000000 AS symbol_ratio,
-         |  CAST(CASE WHEN
-         |    CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
-         |      AS DOUBLE) / greatest(length(text), 1) > 0.04
-         |    AND (len(list_filter(string_split(
-         |        regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-         |        t -> list_contains($kwList, t))) >= 2
-         |      OR CAST(len(list_filter(string_split(text, chr(10)),
-         |          l -> l LIKE '  %')) AS DOUBLE)
-         |        / greatest(len(string_split(text, chr(10))), 1) > 0.2)
-         |    THEN 1 ELSE 0 END AS INT) AS is_code
-         |FROM documents""".stripMargin
-    }) { (s, dir) =>
-      val kw = Seq("def", "return", "import", "class", "void", "int",
-        "function", "var", "const", "if", "else", "for", "while",
-        "public", "static", "new")
-      val kwArr = array(kw.map(lit): _*)
-      val nSym = size(regexp_extract_all(col("text"),
-        lit("[{}();=<>\\[\\]]"), lit(0))).cast("long")
-      val nKw = size(filter(graft.functions.TextFunctions
-        .wsTokens(col("text")), t => array_contains(kwArr, t))).cast("long")
-      val lines = split(col("text"), "\n")
-      val nInd = size(filter(lines, l => l.startsWith("  "))).cast("long")
-      val nLines = greatest(size(lines), lit(1)).cast("long")
-      val symRatio = nSym.cast("double") / greatest(length(col("text")),
-        lit(1))
-      val indRatio = nInd.cast("double") / nLines
-      table(s, dir, "documents").select(col("doc_id"),
-        nSym.as("n_symbols"), nKw.as("n_keywords"),
-        nInd.as("n_indented"), nLines.as("n_lines"),
-        (floor(symRatio * 1000000 + lit(0.5)) / 1000000).as("symbol_ratio"),
-        when(symRatio > 0.04 && (nKw >= 2 || indRatio > 0.2), lit(1))
-          .otherwise(lit(0)).cast("int").as("is_code"))
     },
 
     // B171: KENDALL'S W — coefficient of concordance (Kendall &

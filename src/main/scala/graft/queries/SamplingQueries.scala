@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
-import graft.functions.{BottomKSample, Fingerprint64}
+import graft.functions.{BottomKSample, Fingerprint64, TextFunctions => TF}
 import org.apache.spark.sql.functions._
 
 /** Deterministic sampling queries (SURVEY.md §2 B34, C33): the
@@ -401,9 +401,7 @@ object SamplingQueries {
     // of it; the per-source fold arrays are vocab-length (Heaps-law
     // sublinear). The allocation table is source-count rows.
     Q("corpus_doremi_weights", {
-      val toks =
-        """string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')"""
-      s"""WITH t AS (SELECT source, $toks AS toks FROM documents),
+      s"""WITH t AS (SELECT source, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |wd AS (SELECT source, unnest(toks) AS w FROM t),
          |cw AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
          |       FROM wd GROUP BY 1, 2),
@@ -446,7 +444,7 @@ object SamplingQueries {
       import org.apache.spark.sql.expressions.Window
       val docs = table(s, dir, "documents")
       val cw = docs.select(col("source"),
-          explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("w"))
+          explode(TF.wsTokens(col("text"))).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
         .localCheckpoint() // ns, g, nn and the term join all read it
       val ns = cw.groupBy(col("source"))
@@ -518,8 +516,7 @@ object SamplingQueries {
     Q("corpus_unimax_mix", {
       s"""WITH tk AS (
          |  SELECT doc_id, lang,
-         |    CAST(len(string_split(regexp_replace(lower(trim(text)),
-         |      '\\s+', ' ', 'g'), ' ')) AS BIGINT) AS nt
+         |    CAST(${TF.tokenCountSql("text")} AS BIGINT) AS nt
          |  FROM documents),
          |st AS (SELECT lang, CAST(sum(nt) AS BIGINT) AS n_toks
          |       FROM tk GROUP BY lang),
@@ -572,7 +569,7 @@ object SamplingQueries {
     }) { (s, dir) =>
       import s.implicits._
       val tk = table(s, dir, "documents").select(col("doc_id"), col("lang"),
-        size(graft.functions.TextFunctions.wsTokens(col("text")))
+        size(TF.wsTokens(col("text")))
           .cast("long").as("nt"))
         .localCheckpoint() // one tokenize pass feeds stats + selection
       val stats = tk.groupBy(col("lang")).agg(sum(col("nt")).as("n_toks"))

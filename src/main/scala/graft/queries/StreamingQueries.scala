@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GraftSession
 import graft.GraftSession.table
+import graft.functions.{TextFunctions => TF}
 import graft.streaming.SessionPipeline
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -778,24 +779,24 @@ object StreamingQueries {
     // from the (identical) text — and the oracle is the DISTINCT
     // batch image with the HUGEINT mod-2^64 fingerprint replay.
     Q("streaming_corpus_curate",
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT
         |    list_reduce(
         |      list_prepend(CAST(0 AS HUGEINT),
         |        list_transform(string_split_regex(text, ''),
         |          c -> CAST(ord(c) AS HUGEINT))),
         |      (h, b) -> (h * 31 + b) % 18446744073709551616) AS h,
-        |    len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '))
+        |    ${TF.tokenCountSql("text")}
         |      AS n_tokens
         |  FROM documents
         |  WHERE n_chars >= 200
-        |    AND len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) >= 30)
+        |    AND ${TF.tokenCountSql("text")} >= 30)
         |SELECT DISTINCT
         |  CAST(CASE WHEN h >= 9223372036854775808
         |       THEN h - 18446744073709551616 ELSE h END AS BIGINT) AS fp,
         |  CAST(n_tokens AS BIGINT) AS n_tokens
         |FROM f""".stripMargin) { (s, dir) =>
-      import graft.functions.{Fingerprint64, TextFunctions => TF}
+      import graft.functions.Fingerprint64
       val docs = tableStream(s, dir, "documents")
       // token count computed ONCE per row (filter-after-project —
       // codegen does not CSE across Filter/Project boundaries)
@@ -934,8 +935,8 @@ object StreamingQueries {
     // State is the ONE bounded sketch (≤2m entries), not a per-token
     // key space — the 100 TB-stream shape for "what's trending".
     Q("streaming_heavy_hitters",
-      """WITH t AS (
-        |  SELECT string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+      s"""WITH t AS (
+        |  SELECT ${TF.wsTokensSql("text")} AS toks
         |  FROM documents),
         |c AS (
         |  SELECT tok, CAST(count(*) AS BIGINT) AS cnt
@@ -946,7 +947,7 @@ object StreamingQueries {
         |  FROM c)
         |SELECT tok, cnt, rnk FROM r WHERE rnk <= 20""".stripMargin) { (s, dir) =>
       val toks = tableStream(s, dir, "documents").select(
-        explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("tok"))
+        explode(TF.wsTokens(col("text"))).as("tok"))
       val agg = toks.groupBy()
         .agg(graft.functions.MisraGries.sketch(col("tok"), 64).as("sk"))
       val streamed = runToMemory(s, agg, "graft_stream_mg", mode = "complete")
@@ -1032,7 +1033,7 @@ object StreamingQueries {
     }) { (s, dir) =>
       val toks = tableStream(s, dir, "documents")
         .select(col("source"),
-          explode(graft.functions.TextFunctions.wsTokens(col("text")))
+          explode(TF.wsTokens(col("text")))
             .as("tok"))
         .filter(length(col("tok")) > 0)
       val salted = toks

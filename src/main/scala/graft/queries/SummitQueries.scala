@@ -4,11 +4,10 @@ import graft.GraftSession.table
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-10 statistics wave: rank correlation, autocorrelation, and
-  * distribution distance — the remaining canonical members of the
-  * monitoring/eval families (Spearman beside Kendall B117 and
-  * Mann-Whitney B114; ACF beside seasonal decomposition B111 and Holt
-  * B109; Wasserstein-1 beside PSI D35 and KS B120/D36).
+/** Round-10 statistics wave: rank correlation and autocorrelation —
+  * the remaining canonical members of the monitoring/eval families
+  * (Spearman beside Kendall B117 and Mann-Whitney B114; ACF beside
+  * seasonal decomposition B111 and Holt B109).
   *
   * Shared conventions (AnalyticsQueries): exact BIGINT sums to one
   * pinned double division (+ IEEE sqrt where a variance norm is
@@ -180,72 +179,6 @@ object SummitQueries {
               * lit(1000000) + lit(0.5)) / lit(1000000)).as("acf"))
     },
 
-    // C109: WASSERSTEIN-1 (earth mover's) distance between per-
-    // language document-length distributions — the third canonical
-    // distribution distance beside PSI (D35, needs smoothing) and KS
-    // (B120/D36, sup-norm): EMD is the INTEGRAL of |CDF difference|,
-    // so it sees "how far apart" mass sits, not just the worst bin —
-    // the corpus-mixture drift metric that ranks language/source
-    // pairs by how much rebalancing work separates them (Rubner et
-    // al. 2000). On the shared 64-bin length domain EMD has the exact
-    // closed form Σ_b |CDF_a(b) − CDF_b(b)| (in bin units). Exact
-    // spelling: cross-multiplied integer CDFs — Σ_b |cum_a·n_b −
-    // cum_b·n_a| is a BIGINT (≤ 64·n²  < 2^63 to ~380M docs/lang),
-    // ONE division by n_a·n_b, 6dp floor. Scale shape: one map-only
-    // binning pass + keyed (lang, bin) count (map-side combined);
-    // everything after is langs×64 (model-sized — the windows below
-    // run on that stated bound).
-    Q("hist_emd_langs",
-      """WITH c AS (
-        |  SELECT lang, least(n_chars // 32, 63) AS bin,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM documents GROUP BY 1, 2),
-        |l AS (SELECT lang, CAST(sum(cnt) AS BIGINT) AS n FROM c GROUP BY 1),
-        |grid AS (
-        |  SELECT l.lang, l.n, CAST(unnest(range(64)) AS BIGINT) AS bin
-        |  FROM l),
-        |cdf AS (
-        |  SELECT g.lang, g.n, g.bin,
-        |    CAST(sum(coalesce(c.cnt, 0)) OVER (
-        |      PARTITION BY g.lang ORDER BY g.bin) AS BIGINT) AS cum
-        |  FROM grid g LEFT JOIN c ON g.lang = c.lang AND g.bin = c.bin),
-        |p AS (
-        |  SELECT a.lang AS lang_a, b.lang AS lang_b, a.n AS n_a, b.n AS n_b,
-        |    CAST(sum(abs(a.cum * b.n - b.cum * a.n)) AS BIGINT) AS emd_num
-        |  FROM cdf a JOIN cdf b ON a.bin = b.bin AND a.lang < b.lang
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT lang_a, lang_b, n_a, n_b, emd_num,
-        |  floor(CAST(emd_num AS DOUBLE) / CAST(n_a * n_b AS DOUBLE)
-        |    * 1000000 + 0.5) / 1000000 AS emd_bins
-        |FROM p""".stripMargin) { (s, dir) =>
-      val c = table(s, dir, "documents")
-        .select(col("lang"),
-          least(expr("n_chars div 32"), lit(63L)).as("bin"))
-        .groupBy(col("lang"), col("bin")).agg(count(lit(1)).as("cnt"))
-      val l = c.groupBy(col("lang")).agg(sum(col("cnt")).as("n"))
-      // dense 64-bin domain per lang (langs×64 — model-sized)
-      val grid = l.crossJoin(
-        broadcast(s.range(64).select(col("id").as("bin"))))
-      val cdf = grid.join(c, Seq("lang", "bin"), "left")
-        .select(col("lang"), col("n"), col("bin"),
-          coalesce(col("cnt"), lit(0L)).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(
-          Window.partitionBy(col("lang")).orderBy(col("bin"))))
-      val a = cdf.select(col("lang").as("lang_a"), col("n").as("n_a"),
-        col("bin"), col("cum").as("cum_a"))
-      val b = cdf.select(col("lang").as("lang_b"), col("n").as("n_b"),
-        col("bin").as("bin_b"), col("cum").as("cum_b"))
-      a.join(b, col("bin") === col("bin_b") && col("lang_a") < col("lang_b"))
-        .groupBy(col("lang_a"), col("lang_b"), col("n_a"), col("n_b"))
-        .agg(sum(abs(col("cum_a") * col("n_b") - col("cum_b") * col("n_a")))
-          .as("emd_num"))
-        .select(col("lang_a"), col("lang_b"), col("n_a"), col("n_b"),
-          col("emd_num"),
-          (floor(col("emd_num").cast("double")
-            / (col("n_a") * col("n_b")).cast("double")
-            * lit(1000000) + lit(0.5)) / lit(1000000)).as("emd_bins"))
-    },
-
     // B125: RANGE window frames over event-time VALUE distance — the
     // frame family B26 (ROWS frames) cannot express: "revenue in the
     // 30 CALENDAR DAYS before this order" counts peers and gaps by
@@ -326,57 +259,6 @@ object SummitQueries {
           col("max_cents"), col("min_day"), col("max_day"),
           (col("max_cents") <= 9000000L).cast("int").as("prune_price"),
           (col("max_day") < 10000L).cast("int").as("prune_day"))
-    },
-
-    // C110: INVERTED-INDEX posting lists with delta (gap) encoding —
-    // the IR-engine build step (Zobel & Moffat 2006): per rare-ish
-    // term (length ≥ 4 — the content-word band of this corpus) its document
-    // frequency and the FIRST ≤8 doc ids as gaps (first id, then
-    // successive differences — the compression-friendly layout real
-    // indexes store). Determinism: terms deduped per doc, postings
-    // strictly ascending doc_id, gaps rendered as one CSV string so
-    // the oracle compares exact bytes. Scale shape: the cap runs
-    // through the bounded-heap TopKPerKey physical operator (B39) —
-    // k·|terms-per-partition| memory, never a full per-term sort of
-    // the posting relation; df is a map-side-combined keyed count.
-    Q("inverted_index_postings",
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_distinct(
-         |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-         |    ' '))) AS term
-         |  FROM documents),
-         |t AS (SELECT term, doc_id FROM toks WHERE length(term) >= 4),
-         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-         |       FROM t GROUP BY term),
-         |r AS (
-         |  SELECT term, doc_id,
-         |    row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn,
-         |    doc_id - coalesce(lag(doc_id) OVER (
-         |      PARTITION BY term ORDER BY doc_id), 0) AS gap
-         |  FROM t),
-         |p AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS n_postings,
-         |    string_agg(CAST(gap AS VARCHAR), ',' ORDER BY doc_id)
-         |      AS postings
-         |  FROM r WHERE rn <= 8 GROUP BY term)
-         |SELECT p.term, df.df, p.n_postings, p.postings
-         |FROM p JOIN df USING (term)""".stripMargin) { (s, dir) =>
-      val t = table(s, dir, "documents")
-        .select(col("doc_id"), explode(array_distinct(
-          graft.functions.TextFunctions.wsTokens(col("text")))).as("term"))
-        .filter(length(col("term")) >= 4)
-      val df = t.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val top8 = graft.plans.TopK.perKey(
-        t, Seq("term"), Seq(("doc_id", true)), 8)
-      val p = top8.groupBy(col("term"))
-        .agg(count(lit(1)).as("n_postings"),
-          sort_array(collect_list(col("doc_id"))).as("ids"))
-        .select(col("term"), col("n_postings"),
-          expr("""array_join(transform(ids, (x, i) ->
-            cast(x - if(i = 0, cast(0 as bigint), element_at(ids, i))
-            as string)), ',')""").as("postings"))
-      p.join(df, "term")
-        .select(col("term"), col("df"), col("n_postings"), col("postings"))
     },
 
     // B127: POSITION-BASED (U-shaped) attribution — the industry's

@@ -6,7 +6,10 @@ import graft.operators.{DistributedPrefixSum, DistributedQuantile}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Text-analysis queries (SURVEY.md §2 C9-C12) over `documents`.
+/** Per-document text measures over `documents` (SURVEY.md §2
+  * C9-C12 and later): quality, language, fingerprints, chunking,
+  * sentence/garbage/code screens, feature hashing. Every token is a
+  * TextFunctions whitespace token (`wsTokens` / `wsTokensSql`).
   * All rowwise codegen'd column expressions — at 100 TB these are a
   * single pruned scan, no shuffle at all (the per-lang rollup is the
   * only exchange, map-side combined).
@@ -22,17 +25,16 @@ object TextQueries {
   private def quote(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString("[", ", ", "]")
 
   // DuckDB fragments (computed on `documents.text`):
-  private val normSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
-  private val toksSql = s"string_split($normSql, ' ')"
-  private val nTokSql = s"greatest(len($toksSql), 1)"
+  /** Token count floored at 1, the divisor of every per-token mean. */
+  private val tokDenomSql = s"greatest(${TF.tokenCountSql("text")}, 1)"
   private def hitsSql(ws: Seq[String]): String =
-    s"len(list_filter($toksSql, t -> list_contains(${quote(ws)}, t)))"
+    s"len(list_filter(${TF.wsTokensSql("text")}, t -> list_contains(${quote(ws)}, t)))"
   private val avgTokSql =
-    s"(CAST(length($normSql) - (len($toksSql) - 1) AS DOUBLE) / $nTokSql)"
+    s"(CAST(length(${TF.normalizeTextSql("text")}) - (${TF.tokenCountSql("text")} - 1) AS DOUBLE) / $tokDenomSql)"
   private val punctSql =
     s"(CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / greatest(length(text), 1))"
   private val stopRatioSql =
-    s"(CAST(${hitsSql(TF.EnStop)} AS DOUBLE) / $nTokSql)"
+    s"(CAST(${hitsSql(TF.EnStop)} AS DOUBLE) / $tokDenomSql)"
   /** UNROUNDED quality score (TF.qualityScore's exact formula) —
     * bit-equal across engines (ratios of identical integers combined
     * in one order), so it is safe as an ORDER BY key in other
@@ -61,7 +63,7 @@ object TextQueries {
     // chunks/doc bounded by doc length — token-linear, the C16
     // class; no shuffle at all.
     Q("rag_chunk_split",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM t),
          |c AS (SELECT doc_id, toks, n,
          |  CASE WHEN n <= 64 THEN 1 ELSE 1 + (n - 17) // 48 END AS nc
@@ -111,7 +113,7 @@ object TextQueries {
     // map-only explode + one keyed distinct-count — linear shuffles
     // on fixed-width keys.
     Q("chunk_dedup_stats",
-      s"""WITH t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, source, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |n AS (SELECT doc_id, source, toks,
          |        CAST(len(toks) AS BIGINT) AS n FROM t),
          |c AS (SELECT doc_id, source, toks, n,
@@ -168,7 +170,7 @@ object TextQueries {
     // NULL. Scale shape: map-only chunk explode (token-linear, the
     // C140 class) + one keyed doc rollup.
     Q("text_sttr",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n
          |      FROM t),
          |x AS (
@@ -216,7 +218,7 @@ object TextQueries {
     // C11: token counting — whitespace tokens + BPE-ish subword runs.
     Q("text_tokencount",
       s"""SELECT doc_id,
-         |  CAST(len($toksSql) AS BIGINT) AS n_ws_tokens,
+         |  CAST(${TF.tokenCountSql("text")} AS BIGINT) AS n_ws_tokens,
          |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS n_subwords
          |FROM documents""".stripMargin) { (s, dir) =>
       table(s, dir, "documents").select(
@@ -354,7 +356,7 @@ object TextQueries {
          |      (h, b) -> (h * 31 + b) % 18446744073709551616) AS h,
          |    list_reduce(
          |      list_prepend(CAST(0 AS HUGEINT),
-         |        list_transform(string_split_regex($normSql, ''),
+         |        list_transform(string_split_regex(${TF.normalizeTextSql("text")}, ''),
          |          c -> CAST(ord(c) AS HUGEINT))),
          |      (h, b) -> (h * 31 + b) % 18446744073709551616) AS hn
          |  FROM documents)
@@ -395,7 +397,7 @@ object TextQueries {
     // interpreted lambda.
     Q("text_lm_score",
       s"""WITH toks AS (
-         |  SELECT doc_id, string_split($normSql, ' ') AS t FROM documents),
+         |  SELECT doc_id, ${TF.wsTokensSql("text")} AS t FROM documents),
          |big AS (
          |  SELECT doc_id,
          |    t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
@@ -410,7 +412,7 @@ object TextQueries {
          |FROM big b JOIN bc USING (w1, w2) JOIN uc USING (w1), v
          |GROUP BY b.doc_id""".stripMargin) { (s, dir) =>
       val toks = table(s, dir, "documents").select(
-        col("doc_id"), split(TF.normalizeText(col("text")), " ").as("t"))
+        col("doc_id"), TF.wsTokens(col("text")).as("t"))
       val big2 = toks.filter(size(col("t")) >= 2)
         .select(col("doc_id"),
           explode(graft.functions.VectorExpressions.tokenPairs(col("t"))).as("bg"))
@@ -450,10 +452,10 @@ object TextQueries {
     // correct smoothing over out-of-model pairs), one doc rollup.
     Q("text_lm_crossscore",
       s"""WITH toks AS (
-         |  SELECT doc_id, string_split($normSql, ' ') AS t FROM documents),
+         |  SELECT doc_id, ${TF.wsTokensSql("text")} AS t FROM documents),
          |clean AS (
          |  SELECT doc_id FROM documents
-         |  WHERE n_chars >= 200 AND $nTokSql >= 30),
+         |  WHERE n_chars >= 200 AND $tokDenomSql >= 30),
          |big AS (
          |  SELECT doc_id,
          |    t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
@@ -478,7 +480,7 @@ object TextQueries {
         .filter(col("n_chars") >= 200 && TF.tokenCount(col("text")) >= 30)
         .select(col("doc_id"), lit(1).as("in_train"))
       val big2 = docs
-        .select(col("doc_id"), split(TF.normalizeText(col("text")), " ").as("t"))
+        .select(col("doc_id"), TF.wsTokens(col("text")).as("t"))
         .filter(size(col("t")) >= 2)
         .select(col("doc_id"),
           explode(graft.functions.VectorExpressions.tokenPairs(col("t"))).as("bg"))
@@ -510,7 +512,7 @@ object TextQueries {
     // step is integer-derived doubles combined in the same order in
     // both engines → bit-equal scores (rounded 4dp for safety).
     Q("text_bm25",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |d AS (SELECT doc_id, len(toks) AS dl,
          |  len(list_filter(toks, x -> x = 'spark')) AS tf0,
          |  len(list_filter(toks, x -> x = 'table')) AS tf1,
@@ -537,7 +539,7 @@ object TextQueries {
       import graft.functions.VectorExpressions
       val terms = Seq("spark", "table", "key")
       val base = table(s, dir, "documents")
-        .withColumn("toks", split(TF.normalizeText(col("text")), " "))
+        .withColumn("toks", TF.wsTokens(col("text")))
         .withColumn("_st", VectorExpressions.tokenSetStats(
           col("toks"), terms.map(Seq(_))))
         .select(col("doc_id"), size(col("toks")).as("dl"),
@@ -568,7 +570,7 @@ object TextQueries {
     // shuffle); the oracle re-derives the same counts relationally.
     Q("text_repetition",
       s"""WITH t AS (
-         |  SELECT doc_id, $toksSql AS toks FROM documents),
+         |  SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
          |tc AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w),
          |ta AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
@@ -588,7 +590,7 @@ object TextQueries {
       import graft.functions.VectorExpressions
       table(s, dir, "documents")
         .withColumn("_st", VectorExpressions.tokenRepetitionStats(
-          split(TF.normalizeText(col("text")), " ")))
+          TF.wsTokens(col("text"))))
         .select(
           col("doc_id"),
           col("_st.n_toks").as("n_tokens"),
@@ -614,7 +616,7 @@ object TextQueries {
     // exact-integer guarantee like the fingerprint queries.
     // H = ln(n) − S/n.
     Q("text_entropy",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
          |tc AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w),
          |cc AS (SELECT doc_id, c, count(*) AS m FROM tc GROUP BY doc_id, c),
@@ -630,7 +632,7 @@ object TextQueries {
          |FROM e""".stripMargin) { (s, dir) =>
       table(s, dir, "documents")
         .withColumn("_e", graft.functions.VectorExpressions.tokenEntropyStats(
-          split(TF.normalizeText(col("text")), " ")))
+          TF.wsTokens(col("text"))))
         .select(col("doc_id"),
           col("_e.n_toks").as("n_tokens"),
           col("_e.n_distinct").as("n_types"),
@@ -669,7 +671,7 @@ object TextQueries {
     // at a near-tie quotient — the mean is the consumer's division).
     // Map-only, zero shuffle.
     Q("text_quality_model",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |s AS (
          |  SELECT doc_id, len(toks) AS n,
          |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
@@ -714,7 +716,7 @@ object TextQueries {
     // what the signed arithmetic shift + mask reads in Spark (shifts
     // only differ in HIGH bits).
     Q("doc_embed_hash",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |i AS (
          |  SELECT doc_id, unnest(list_transform(toks, tok ->
          |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
@@ -986,7 +988,7 @@ object TextQueries {
     // labels + the 16-row model from keyed aggs of it, scoring a
     // broadcast join — no iteration, no global sort.
     Q("naive_bayes_score",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |i AS (
          |  SELECT doc_id, unnest(list_transform(toks, tok ->
          |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
@@ -1144,7 +1146,7 @@ object TextQueries {
     // floor(x·1e4 + 0.5) convention (text_entropy's documented
     // sub-ulp-libm caveat applies to that column alone).
     Q("text_pmi_bigrams",
-      s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT ${TF.wsTokensSql("text")} AS toks FROM documents),
          |b AS (
          |  SELECT toks[CAST(i AS INT)] AS w1, toks[CAST(i + 1 AS INT)] AS w2
          |  FROM t, unnest(range(1, len(toks))) AS u(i)
@@ -1161,7 +1163,7 @@ object TextQueries {
          |WHERE n_pair >= 5
          |ORDER BY lift DESC, w1, w2 LIMIT 20""".stripMargin) { (s, dir) =>
       val big2 = table(s, dir, "documents")
-        .select(split(TF.normalizeText(col("text")), " ").as("t"))
+        .select(TF.wsTokens(col("text")).as("t"))
         .filter(size(col("t")) >= 2)
         .select(explode(graft.functions.VectorExpressions.tokenPairs(col("t"))).as("bg"))
         .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
@@ -1233,7 +1235,7 @@ object TextQueries {
     // length (the B45 small-group rule; TopKPerKey's bounded-heap
     // contract is for LOW-cardinality keys, wrong here).
     Q("text_tfidf_top_terms",
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
          |tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
          |tf AS (
          |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
@@ -1281,7 +1283,7 @@ object TextQueries {
     // token is in the vocabulary iff the mass BEFORE it is under
     // 90%), so the kept SET is exact in both engines.
     Q("vocab_coverage",
-      s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT ${TF.wsTokensSql("text")} AS toks FROM documents),
          |tok AS (SELECT unnest(toks) AS term FROM t),
          |c AS (
          |  SELECT term, CAST(count(*) AS BIGINT) AS cnt
@@ -1504,7 +1506,7 @@ object TextQueries {
     // is in the model ⇒ inner join, no OOV branch.
     Q("text_kn_score",
       s"""WITH toks AS (
-         |  SELECT doc_id, string_split($normSql, ' ') AS t FROM documents),
+         |  SELECT doc_id, ${TF.wsTokensSql("text")} AS t FROM documents),
          |big AS (
          |  SELECT doc_id,
          |    t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
@@ -1523,7 +1525,7 @@ object TextQueries {
          |  JOIN cc USING (w2), tt
          |GROUP BY b.doc_id""".stripMargin) { (s, dir) =>
       val toks = table(s, dir, "documents").select(
-        col("doc_id"), split(TF.normalizeText(col("text")), " ").as("t"))
+        col("doc_id"), TF.wsTokens(col("text")).as("t"))
       val big2 = toks.filter(size(col("t")) >= 2)
         .select(col("doc_id"),
           explode(graft.functions.VectorExpressions.tokenPairs(col("t"))).as("bg"))
@@ -1703,7 +1705,7 @@ object TextQueries {
     // one LEFT scoring join.
     Q("text_lm_heldout",
       s"""WITH toks AS (
-         |  SELECT doc_id, string_split($normSql, ' ') AS t FROM documents),
+         |  SELECT doc_id, ${TF.wsTokensSql("text")} AS t FROM documents),
          |big AS (
          |  SELECT doc_id,
          |    t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
@@ -1726,7 +1728,7 @@ object TextQueries {
          |LEFT JOIN uc USING (w1), v
          |GROUP BY te.doc_id""".stripMargin) { (s, dir) =>
       val toks = table(s, dir, "documents").select(
-        col("doc_id"), split(TF.normalizeText(col("text")), " ").as("t"))
+        col("doc_id"), TF.wsTokens(col("text")).as("t"))
       val big2 = toks.filter(size(col("t")) >= 2)
         .select(col("doc_id"),
           explode(graft.functions.VectorExpressions.tokenPairs(col("t")))
@@ -1781,7 +1783,7 @@ object TextQueries {
     Q("tokenizer_fertility",
       s"""WITH m AS (
          |  SELECT lang,
-         |    CAST(len($toksSql) AS BIGINT) AS words,
+         |    CAST(${TF.tokenCountSql("text")} AS BIGINT) AS words,
          |    CAST(len(regexp_extract_all(lower(text),
          |      '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS subwords,
          |    CAST(length(text) AS BIGINT) AS chars
@@ -1886,12 +1888,12 @@ object TextQueries {
     Q("gopher_rules",
       s"""WITH m AS (
          |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS n_words,
-         |    CAST(length($normSql) - (len($toksSql) - 1) AS BIGINT)
+         |    CAST(${TF.tokenCountSql("text")} AS BIGINT) AS n_words,
+         |    CAST(length(${TF.normalizeTextSql("text")}) - (${TF.tokenCountSql("text")} - 1) AS BIGINT)
          |      AS sum_word_len,
-         |    CAST(len(list_filter($toksSql, t -> strlen(t) = 1)) AS BIGINT)
+         |    CAST(len(list_filter(${TF.wsTokensSql("text")}, t -> strlen(t) = 1)) AS BIGINT)
          |      AS n_one_char,
-         |    CAST(len(list_filter($toksSql, t -> regexp_matches(t, '[a-z]')))
+         |    CAST(len(list_filter(${TF.wsTokensSql("text")}, t -> regexp_matches(t, '[a-z]')))
          |      AS BIGINT) AS n_alpha_words,
          |    CAST(${hitsSql(TF.EnStop)} AS BIGINT) AS n_stop_hits
          |  FROM documents)
@@ -1941,6 +1943,283 @@ object TextQueries {
         rAlpha.cast("int").as("r_alpha"),
         rStop.cast("int").as("r_stopwords"),
         (rWc && rMwl && rOne && rAlpha && rStop).cast("int").as("keep"))
+    },
+
+    // C127: GARBAGE/GIBBERISH SCORE — the OCR-noise and mojibake
+    // screen (the "byte-level quality" cousin of C10's word-level
+    // quality: C10 scores GOOD prose, this flags UNREADABLE text —
+    // Bandy & Vincent 2021 document exactly these artifacts in
+    // BookCorpus): per doc, the non-alphanumeric ratio and the
+    // longest consonant run (real words top out ~6 — 'rhythms'; OCR
+    // noise and key-mash run longer), banded into a flag at the
+    // pinned (0.30, 8) cuts. All integer counts off two regex scans,
+    // ONE division, 6dp floor. Map-only — no shuffle at all.
+    Q("text_garbage_score",
+      """SELECT doc_id,
+        |  CAST(length(text) AS BIGINT) AS n_chars,
+        |  CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
+        |    AS BIGINT) AS non_alnum,
+        |  CAST(coalesce(list_max(list_transform(
+        |    regexp_extract_all(lower(text),
+        |      '[bcdfghjklmnpqrstvwxz]+'), x -> length(x))), 0)
+        |    AS BIGINT) AS max_cons_run,
+        |  floor(CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
+        |      AS DOUBLE) / greatest(length(text), 1)
+        |    * 1000000 + 0.5) / 1000000 AS non_alnum_ratio,
+        |  CAST(CASE WHEN
+        |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
+        |      AS DOUBLE) / greatest(length(text), 1) > 0.30
+        |    OR coalesce(list_max(list_transform(
+        |      regexp_extract_all(lower(text),
+        |        '[bcdfghjklmnpqrstvwxz]+'), x -> length(x))), 0) >= 8
+        |    THEN 1 ELSE 0 END AS INT) AS is_garbage
+        |FROM documents""".stripMargin) { (s, dir) =>
+      val lowered = lower(col("text"))
+      val nonAl = size(regexp_extract_all(lowered, lit("[^a-z0-9 ]"), lit(0)))
+        .cast("long")
+      val consRun = coalesce(array_max(transform(
+        regexp_extract_all(lowered, lit("[bcdfghjklmnpqrstvwxz]+"), lit(0)),
+        x => length(x))), lit(0)).cast("long")
+      val ratio = nonAl.cast("double") / greatest(length(col("text")), lit(1))
+      table(s, dir, "documents").select(col("doc_id"),
+        length(col("text")).cast("long").as("n_chars"),
+        nonAl.as("non_alnum"), consRun.as("max_cons_run"),
+        (floor(ratio * 1000000 + lit(0.5)) / 1000000).as("non_alnum_ratio"),
+        when(ratio > 0.30 || consRun >= 8, lit(1)).otherwise(lit(0))
+          .cast("int").as("is_garbage"))
+    },
+
+    // C128: SELF-BLEU bigram precision between CONSECUTIVE docs (Zhu
+    // et al. 2018's Self-BLEU diversity metric, Papineni et al.
+    // 2002's clipped modified precision as the core; BP is dropped —
+    // no live exp in the determinism contract): for each (doc, doc+1)
+    // pair, p₂ = Σ_g min(c_a(g), c_b(g)) / |bigrams_a| — high p₂
+    // across the corpus = templated/self-repeating text. Exactness:
+    // clipped counts are integer mins; ONE division each, 6dp. Scale
+    // shape: pairing is an equi-join on doc_id+1 (NO window — a
+    // corpus-order window would single-reduce the corpus); gram joins
+    // are keyed (doc, gram) shuffles, linear in corpus tokens.
+    Q("self_bleu_bigram",
+      s"""WITH tk AS (
+         |  SELECT doc_id, ${TF.wsTokensSql("text")}
+         |    AS t
+         |  FROM documents),
+         |bg AS (
+         |  SELECT doc_id,
+         |    unnest(list_transform(range(1, len(t)),
+         |      i -> t[i] || ' ' || t[i + 1])) AS g
+         |  FROM tk WHERE len(t) >= 2),
+         |bc AS (
+         |  SELECT doc_id, g, CAST(count(*) AS BIGINT) AS c
+         |  FROM bg GROUP BY 1, 2),
+         |pairs AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |  FROM (SELECT DISTINCT doc_id FROM bc) a
+         |  JOIN (SELECT DISTINCT doc_id FROM bc) b
+         |    ON b.doc_id = a.doc_id + 1),
+         |clip AS (
+         |  SELECT p.doc_a, p.doc_b,
+         |    CAST(sum(a.c) AS BIGINT) AS n_a,
+         |    CAST(sum(least(a.c, coalesce(b.c, 0))) AS BIGINT) AS clipped
+         |  FROM pairs p
+         |  JOIN bc a ON a.doc_id = p.doc_a
+         |  LEFT JOIN bc b ON b.doc_id = p.doc_b AND b.g = a.g
+         |  GROUP BY 1, 2)
+         |SELECT doc_a, doc_b, n_a, clipped,
+         |  floor(CAST(clipped AS DOUBLE) / n_a * 1000000 + 0.5) / 1000000
+         |    AS p2
+         |FROM clip""".stripMargin) { (s, dir) =>
+      val tk = table(s, dir, "documents")
+        .select(col("doc_id"),
+          TF.wsTokens(col("text")).as("t"))
+        .filter(size(col("t")) >= 2)
+      val bc = tk
+        .select(col("doc_id"),
+          explode(expr("""transform(sequence(1, size(t) - 1),
+            i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"""))
+            .as("g"))
+        .groupBy(col("doc_id"), col("g"))
+        .agg(count(lit(1)).as("c"))
+        .localCheckpoint() // feeds the pair relation and both join sides
+      val docs = bc.select(col("doc_id")).distinct()
+      val pairs = docs.as("a").join(docs.as("b"),
+          col("b.doc_id") === col("a.doc_id") + 1)
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      val a = bc.select(col("doc_id").as("doc_a"), col("g"), col("c").as("ca"))
+      val b = bc.select(col("doc_id").as("doc_b"), col("g"), col("c").as("cb"))
+      pairs.join(a, Seq("doc_a"))
+        .join(b, Seq("doc_b", "g"), "left")
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(sum(col("ca")).as("n_a"),
+          sum(least(col("ca"), coalesce(col("cb"), lit(0L)))).as("clipped"))
+        .select(col("doc_a"), col("doc_b"), col("n_a"), col("clipped"),
+          (floor(col("clipped").cast("double") / col("n_a")
+            * lit(1000000) + lit(0.5)) / lit(1000000)).as("p2"))
+    },
+
+    // C130: FEATURE HASHING — the hashing trick (Weinberger et al.
+    // ICML 2009; Vowpal Wabbit's input layer): tokens → 16 signed
+    // buckets through the engine's ONE deterministic hash family
+    // (31-poly token hash + separator step + fmix64 —
+    // PositionedNgramHashes at n=1, the C3/C61 machinery), bucket =
+    // h & 15, sign = bit 4, feature = Σ±1 with multiplicity. The
+    // unbiased-sign trick makes E[⟨φ(a),φ(b)⟩] = ⟨a,b⟩ — the
+    // fixed-width embedding a 100 TB corpus can afford without a
+    // vocabulary. Exactness: all-integer; the oracle replays poly31/
+    // fmix64 in HUGEINT mod-2⁶⁴ arithmetic (the dedup_simhash
+    // replay, signed-byte extraction included — exact on multi-byte
+    // UTF-8 too). Scale shape: map-only codegen'd expression →
+    // explode → ONE keyed (doc, bucket) count, map-side combined.
+    Q("feature_hash_vectors", {
+      val c1 = BigInt("18397679294719823053")
+      val c2 = BigInt("14181476777654086739")
+      s"""WITH toks AS (
+         |  SELECT doc_id, tok FROM (
+         |    SELECT doc_id, unnest(${TF.wsTokensSql("text")})
+         |      AS tok
+         |    FROM documents) WHERE len(tok) > 0),
+         |th AS (
+         |  SELECT doc_id,
+         |    (list_reduce(list_prepend(CAST(0 AS HUGEINT),
+         |      list_transform(range(octet_length(encode(tok))), i ->
+         |        CAST(CASE WHEN CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT) < 128
+         |             THEN CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT)
+         |             ELSE 18446744073709551360 + CAST(('0x' || substring(hx, CAST(2 * i + 1 AS INT), 2)) AS INT)
+         |        END AS HUGEINT))),
+         |      (h, b) -> (h * 31 + b) % 18446744073709551616) * 31 + 32)
+         |      % 18446744073709551616 AS t
+         |  FROM (SELECT doc_id, tok, hex(encode(tok)) AS hx FROM toks)),
+         |fm AS (
+         |  SELECT doc_id, xor(d, d // 8589934592) AS h
+         |  FROM (SELECT doc_id, ${DedupQueries.mulMod64("c", c2)} AS d
+         |    FROM (SELECT doc_id, xor(b, b // 8589934592) AS c
+         |      FROM (SELECT doc_id, ${DedupQueries.mulMod64("a", c1)} AS b
+         |        FROM (SELECT doc_id, xor(t, t // 8589934592) AS a FROM th))))),
+         |sb AS (
+         |  SELECT doc_id, CAST(h % 16 AS INT) AS bucket,
+         |    CASE WHEN (h // 16) % 2 = 1 THEN 1 ELSE -1 END AS sgn
+         |  FROM fm)
+         |SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS f,
+         |  CAST(count(*) AS BIGINT) AS n_hits
+         |FROM sb GROUP BY 1, 2""".stripMargin
+    }) { (s, dir) =>
+      val toks = table(s, dir, "documents")
+        .select(col("doc_id"),
+          filter(TF.wsTokens(col("text")),
+            t => t =!= "").as("t"))
+        .filter(size(col("t")) > 0)
+      val hashed = toks.select(col("doc_id"),
+        explode(graft.functions.VectorExpressions
+          .positionedNgramHashes(col("t"), 1)).as("h"))
+      hashed
+        .select(col("doc_id"),
+          col("h").bitwiseAND(lit(15L)).cast("int").as("bucket"),
+          when(shiftrightunsigned(col("h"), 4).bitwiseAND(lit(1L)) === 1L,
+            lit(1L)).otherwise(lit(-1L)).as("sgn"))
+        .groupBy(col("doc_id"), col("bucket"))
+        .agg(sum(col("sgn")).as("f"), count(lit(1)).as("n_hits"))
+    },
+
+    // C131: SENTENCE-GRAIN STATISTICS — the segmentation pass under
+    // sentence-level dedup (Lee et al. ACL'22 run it before
+    // ExactSubstr) and under every length-law filter that speaks
+    // "sentences" (Gopher's mean-words-per-sentence bound, Rae et al.
+    // 2021): docs split on [.!?]+ runs, per doc: sentence count,
+    // token total, mean/max sentence length in whitespace tokens.
+    // All-integer counts off one split, ONE division (mean), 6dp.
+    // Empty/blank sentences (consecutive terminators, trailing
+    // punctuation) are dropped on BOTH sides. Map-only, no shuffle.
+    Q("text_sentence_stats",
+      s"""WITH sent AS (
+        |  SELECT doc_id, s FROM (
+        |    SELECT doc_id, unnest(string_split_regex(
+        |      ${TF.normalizeTextSql("text")},
+        |      '[.!?]+')) AS s
+        |    FROM documents)
+        |  WHERE trim(s) <> ''),
+        |st AS (
+        |  SELECT doc_id,
+        |    CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS toks
+        |  FROM sent)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sentences,
+        |  CAST(sum(toks) AS BIGINT) AS n_tokens,
+        |  floor(CAST(sum(toks) AS DOUBLE) / count(*) * 1000000 + 0.5)
+        |    / 1000000 AS mean_sentence_len,
+        |  CAST(max(toks) AS BIGINT) AS max_sentence_len
+        |FROM st GROUP BY doc_id""".stripMargin) { (s, dir) =>
+      val sent = table(s, dir, "documents")
+        .select(col("doc_id"),
+          explode(split(TF.normalizeText(col("text")), "[.!?]+")).as("s"))
+        .filter(trim(col("s")) =!= "")
+      sent
+        .select(col("doc_id"),
+          size(split(trim(col("s")), " ")).cast("long").as("toks"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_sentences"), sum(col("toks")).as("n_tokens"),
+          (floor(sum(col("toks")).cast("double") / count(lit(1))
+            * lit(1000000) + lit(0.5)) / lit(1000000))
+            .as("mean_sentence_len"),
+          max(col("toks")).as("max_sentence_len"))
+    },
+
+    // C137: CODE-vs-PROSE DETECTION — the language-domain router
+    // every mixed-corpus pipeline runs before tokenizer/quality
+    // decisions (StarCoder's pipeline, Li et al. 2023, separates
+    // code; code in a prose corpus poisons perplexity filters and
+    // vice versa): per doc, symbol density ({};()=<>[] per char),
+    // code-keyword hits (a PINNED 16-token set over the C10 token
+    // grain), and indented-line ratio (RAW text lines starting with
+    // 2+ spaces — normalization would erase exactly this signal);
+    // flag = symbol ratio > 0.04 AND (keywords ≥ 2 OR indent ratio >
+    // 0.2), cuts pinned. All-integer counts off regex/token scans,
+    // two divisions, 6dp. Map-only.
+    Q("text_code_detect", {
+      val kw = Seq("def", "return", "import", "class", "void", "int",
+        "function", "var", "const", "if", "else", "for", "while",
+        "public", "static", "new")
+      val kwList = kw.map(w => s"'$w'").mkString("[", ", ", "]")
+      s"""SELECT doc_id,
+         |  CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
+         |    AS BIGINT) AS n_symbols,
+         |  CAST(len(list_filter(${TF.wsTokensSql("text")},
+         |    t -> list_contains($kwList, t))) AS BIGINT) AS n_keywords,
+         |  CAST(len(list_filter(string_split(text, chr(10)),
+         |    l -> l LIKE '  %')) AS BIGINT) AS n_indented,
+         |  CAST(greatest(len(string_split(text, chr(10))), 1) AS BIGINT)
+         |    AS n_lines,
+         |  floor(CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
+         |      AS DOUBLE) / greatest(length(text), 1)
+         |    * 1000000 + 0.5) / 1000000 AS symbol_ratio,
+         |  CAST(CASE WHEN
+         |    CAST(len(regexp_extract_all(text, '[{}();=<>\\[\\]]'))
+         |      AS DOUBLE) / greatest(length(text), 1) > 0.04
+         |    AND (len(list_filter(${TF.wsTokensSql("text")},
+         |        t -> list_contains($kwList, t))) >= 2
+         |      OR CAST(len(list_filter(string_split(text, chr(10)),
+         |          l -> l LIKE '  %')) AS DOUBLE)
+         |        / greatest(len(string_split(text, chr(10))), 1) > 0.2)
+         |    THEN 1 ELSE 0 END AS INT) AS is_code
+         |FROM documents""".stripMargin
+    }) { (s, dir) =>
+      val kw = Seq("def", "return", "import", "class", "void", "int",
+        "function", "var", "const", "if", "else", "for", "while",
+        "public", "static", "new")
+      val kwArr = array(kw.map(lit): _*)
+      val nSym = size(regexp_extract_all(col("text"),
+        lit("[{}();=<>\\[\\]]"), lit(0))).cast("long")
+      val nKw = size(filter(TF.wsTokens(col("text")), t => array_contains(kwArr, t))).cast("long")
+      val lines = split(col("text"), "\n")
+      val nInd = size(filter(lines, l => l.startsWith("  "))).cast("long")
+      val nLines = greatest(size(lines), lit(1)).cast("long")
+      val symRatio = nSym.cast("double") / greatest(length(col("text")),
+        lit(1))
+      val indRatio = nInd.cast("double") / nLines
+      table(s, dir, "documents").select(col("doc_id"),
+        nSym.as("n_symbols"), nKw.as("n_keywords"),
+        nInd.as("n_indented"), nLines.as("n_lines"),
+        (floor(symRatio * 1000000 + lit(0.5)) / 1000000).as("symbol_ratio"),
+        when(symRatio > 0.04 && (nKw >= 2 || indRatio > 0.2), lit(1))
+          .otherwise(lit(0)).cast("int").as("is_code"))
     })
 
   /** Winnowing selection (C53): word-trigram rolling hashes, w=4
@@ -1954,7 +2233,7 @@ object TextQueries {
     * and the C91 calibration table so both oracles state ONE model.
     */
   private lazy val rocchioCtes: String =
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
        |i AS (
        |  SELECT doc_id, unnest(list_transform(toks, tok ->
        |    list_reduce(list_prepend(CAST(0 AS HUGEINT),
@@ -2175,7 +2454,7 @@ object TextQueries {
 
   private def bpeInput(s: org.apache.spark.sql.SparkSession, dir: String) =
     table(s, dir, "documents")
-      .select(col("doc_id"), split(TF.normalizeText(col("text")), " ").as("toks"))
+      .select(col("doc_id"), TF.wsTokens(col("text")).as("toks"))
 
   private def bpePairsCte(t: String, p: String) =
     s"""$p AS (
@@ -2208,7 +2487,7 @@ object TextQueries {
 
   /** Shared replay of three BPE training rounds (t0 → m1..m3, t1/t2). */
   private lazy val bpeCtes: String =
-    s"""WITH t0 AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""WITH t0 AS (SELECT doc_id, ${TF.wsTokensSql("text")} AS toks FROM documents),
        |${bpePairsCte("t0", "p1")},
        |${bpeTopCte("p1", "m1")},
        |${bpeMergeCte("t0", "m1", "t1")},

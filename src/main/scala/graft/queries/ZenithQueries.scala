@@ -24,13 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object ZenithQueries {
 
-  // DuckDB fragments — the TextQueries normalization contract
-  private val normSql = """regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"""
-  private[queries] val toksSql = s"string_split($normSql, ' ')"
-
-  private[queries] def sparkToks = split(
-    regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
-
   val all: Seq[Q] = Seq(
 
     // B131: ONE-WAY ANOVA F statistic (Fisher 1925) of order value
@@ -485,245 +478,6 @@ object ZenithQueries {
         .select(col("segment"), col("nation"), col("n_xy"),
           (col("pmi_e4").cast("double") / 10000).as("pmi"),
           col("mi_nats"))
-    },
-
-    // C112: ZIPF'S-LAW FIT (Zipf 1949; Piantadosi 2014 review) —
-    // the rank-frequency power-law exponent of the corpus unigram
-    // distribution, the companion diagnostic to Heaps' law C61 (Heaps
-    // measures vocabulary GROWTH, Zipf the frequency DECAY; a corpus
-    // whose slope drifts from ≈−1 signals template/boilerplate
-    // contamination or synthetic text). Exact spelling: token counts
-    // collapse to the VOCAB grain; ranks are (freq DESC, token ASC)
-    // row_numbers over that grain (model-sized by Heaps' law — the
-    // stated bound for the one unpartitioned window); the log-log OLS
-    // runs on ln(rank), ln(freq) quantized to the exact 1e-6 integer
-    // grid (the C34/B133 convention — sub-ulp libm drift is absorbed
-    // by the grid, and every OLS sum is then order-independent BIGINT/
-    // DECIMAL(38,0) arithmetic). slope = (nΣxy−ΣxΣy)/(nΣxx−Σx²) and
-    // intercept = (ΣyΣxx−ΣxΣxy)/(nΣxx−Σx²) — exact integer products
-    // into ONE double division each, 6dp floor. Top-1000 ranks fitted;
-    // top-20 rows emitted with the fit constants attached.
-    Q("zipf_law_fit",
-      s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
-        |tok AS (SELECT unnest(toks) AS w FROM t),
-        |vc AS (SELECT w, CAST(count(*) AS BIGINT) AS freq
-        |       FROM tok WHERE w <> '' GROUP BY w),
-        |r AS (
-        |  SELECT w, freq,
-        |    CAST(row_number() OVER (ORDER BY freq DESC, w) AS BIGINT) AS rnk
-        |  FROM vc),
-        |g AS (
-        |  SELECT rnk, w, freq,
-        |    CAST(floor(ln(CAST(rnk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-        |      AS x,
-        |    CAST(floor(ln(CAST(freq AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-        |      AS y
-        |  FROM r WHERE rnk <= 1000),
-        |s AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-        |    CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-        |  FROM g),
-        |fit AS (
-        |  SELECT
-        |    CASE WHEN n * sxx > sx * sx THEN
-        |      floor(CAST(n * sxy - sx * sy AS DOUBLE)
-        |        / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000 + 0.5)
-        |        / 1000000 END AS slope,
-        |    CASE WHEN n * sxx > sx * sx THEN
-        |      floor(CAST(sy * sxx - sx * sxy AS DOUBLE)
-        |        / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000 + 0.5)
-        |        / 1000000 END AS intercept,
-        |    CAST(n AS BIGINT) AS n_ranks
-        |  FROM s)
-        |SELECT rnk, w AS token, freq, n_ranks, slope, intercept
-        |FROM g, fit WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val vc = table(s, dir, "documents")
-        .select(explode(sparkToks).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      // vocab grain from here on (Heaps-bounded — the one
-      // unpartitioned window runs on that bound)
-      val r = vc.select(col("w"), col("freq"),
-        row_number().over(
-          Window.orderBy(col("freq").desc, col("w"))).cast("long").as("rnk"))
-      val g = r.filter(col("rnk") <= 1000)
-        .select(col("rnk"), col("w"), col("freq"),
-          floor(log(col("rnk").cast("double")) * 1000000 + lit(0.5))
-            .cast("long").as("x"),
-          floor(log(col("freq").cast("double")) * 1000000 + lit(0.5))
-            .cast("long").as("y"))
-        .localCheckpoint() // feeds the fit and the top-20 output
-      val fit = g.agg(
-          count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum(col("x")).cast("decimal(38,0)").as("sx"),
-          sum(col("y")).cast("decimal(38,0)").as("sy"),
-          sum(col("x").cast("decimal(38,0)") * col("x")).as("sxx"),
-          sum(col("x").cast("decimal(38,0)") * col("y")).as("sxy"))
-        .select(
-          when(col("n") * col("sxx") > col("sx") * col("sx"),
-            floor((col("n") * col("sxy") - col("sx") * col("sy"))
-                .cast("double")
-              / (col("n") * col("sxx") - col("sx") * col("sx"))
-                .cast("double") * 1000000 + lit(0.5)) / 1000000)
-            .as("slope"),
-          when(col("n") * col("sxx") > col("sx") * col("sx"),
-            floor((col("sy") * col("sxx") - col("sx") * col("sxy"))
-                .cast("double")
-              / (col("n") * col("sxx") - col("sx") * col("sx"))
-                .cast("double") * 1000000 + lit(0.5)) / 1000000)
-            .as("intercept"),
-          col("n").cast("long").as("n_ranks"))
-      g.filter(col("rnk") <= 20)
-        .select(col("rnk"), col("w").as("token"), col("freq"))
-        .crossJoin(broadcast(fit))
-        .select(col("rnk"), col("token"), col("freq"), col("n_ranks"),
-          col("slope"), col("intercept"))
-    },
-
-    // C113: TOKEN BURSTINESS — the variance-to-mean ratio (Fisher
-    // dispersion index) of each token's per-document count over the
-    // WHOLE corpus including zero-docs (Church & Gale 1995: content
-    // words are bursty — they cluster in few documents — while
-    // function words are Poisson-ish; burstiness separates topical
-    // terms from glue, the term-weighting signal TF-IDF approximates).
-    // Exact spelling: VMR = var/mean = (N·Σc² − cf²)/(N·cf) — the
-    // zero-docs enter ONLY through N, so the per-token sufficient
-    // statistics (cf = Σc, Σc², df) come off the TF grain; all
-    // products in DECIMAL(38,0)/HUGEINT, ONE double division, ranked
-    // on that exact quotient (identical in both engines), 6dp floor
-    // emitted. Top-20 by (vmr DESC, token) among tokens in ≥ 5 docs.
-    // Scale shape: one (doc,token) count (the TF grain — linear in
-    // corpus tokens, map-side combinable), one vocab-grain rollup,
-    // one vocab-bounded window.
-    Q("token_burstiness",
-      s"""WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
-        |tf AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS c
-        |       FROM tok WHERE w <> '' GROUP BY doc_id, w),
-        |vg AS (
-        |  SELECT w, CAST(count(*) AS BIGINT) AS df,
-        |    CAST(sum(c) AS BIGINT) AS cf,
-        |    CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS sc2
-        |  FROM tf GROUP BY w),
-        |v AS (
-        |  SELECT w, df, cf,
-        |    CAST(n * sc2 - CAST(cf AS HUGEINT) * cf AS DOUBLE)
-        |      / CAST(n * CAST(cf AS HUGEINT) AS DOUBLE) AS vmr
-        |  FROM vg, nd WHERE df >= 5),
-        |r AS (
-        |  SELECT w, df, cf, vmr,
-        |    CAST(row_number() OVER (ORDER BY vmr DESC, w) AS BIGINT) AS rnk
-        |  FROM v)
-        |SELECT rnk, w AS token, df, cf,
-        |  floor(vmr * 1000000 + 0.5) / 1000000 AS burstiness
-        |FROM r WHERE rnk <= 20""".stripMargin) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val nDocs = docs.agg(count(lit(1)).as("n"))
-      val tf = docs.select(col("doc_id"), explode(sparkToks).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
-      val vg = tf.groupBy(col("w"))
-        .agg(count(lit(1)).as("df"), sum(col("c")).as("cf"),
-          sum((col("c") * col("c")).cast("decimal(38,0)")).as("sc2"))
-        .filter(col("df") >= 5)
-        .crossJoin(broadcast(nDocs))
-        .select(col("w"), col("df"), col("cf"),
-          ((col("n").cast("decimal(38,0)") * col("sc2")
-            - col("cf").cast("decimal(38,0)") * col("cf")).cast("double")
-            / (col("n").cast("decimal(38,0)") * col("cf")).cast("double"))
-            .as("vmr"))
-      // vocab grain (Heaps-bounded) — the one unpartitioned window
-      vg.select(col("w"), col("df"), col("cf"), col("vmr"),
-          row_number().over(Window.orderBy(col("vmr").desc, col("w")))
-            .cast("long").as("rnk"))
-        .filter(col("rnk") <= 20)
-        .select(col("rnk"), col("w").as("token"), col("df"), col("cf"),
-          (floor(col("vmr") * 1000000 + lit(0.5)) / 1000000)
-            .as("burstiness"))
-    },
-
-    // C114: DISTINCT-N DIVERSITY — distinct-n-gram / total-n-gram
-    // ratios per source for n = 1, 2, 3 (Li et al. NAACL 2016's
-    // "distinct-N"; the standard NLG/corpus diversity metric —
-    // near-duplicate or templated sources score low at n=2,3 long
-    // before exact dedup fires). Exact spelling: counts are exact
-    // BIGINTs per (source, n); three independent one-division ratios,
-    // 6dp floor. Scale shape: the n-gram explode is ≤ 3× the token
-    // scan (linear); distinct-counting shuffles on (source, ngram) —
-    // map-side combinable, the dedup-exact shape. The n-gram window
-    // never crosses a document boundary.
-    Q("distinct_ngram_diversity",
-      s"""WITH t AS (SELECT source, $toksSql AS toks FROM documents),
-        |grams AS (
-        |  SELECT source, 1 AS n, unnest(toks) AS gram
-        |  FROM t WHERE len(toks) >= 1
-        |  UNION ALL
-        |  SELECT source, 2 AS n,
-        |    unnest(list_transform(range(1, len(toks)),
-        |      i -> concat(toks[CAST(i AS INT)], ' ',
-        |                  toks[CAST(i + 1 AS INT)])))
-        |  FROM t WHERE len(toks) >= 2
-        |  UNION ALL
-        |  SELECT source, 3 AS n,
-        |    unnest(list_transform(range(1, len(toks) - 1),
-        |      i -> concat(toks[CAST(i AS INT)], ' ',
-        |                  toks[CAST(i + 1 AS INT)], ' ',
-        |                  toks[CAST(i + 2 AS INT)])))
-        |  FROM t WHERE len(toks) >= 3),
-        |c AS (
-        |  SELECT source, n, gram, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM grams GROUP BY 1, 2, 3),
-        |g AS (
-        |  SELECT source, CAST(n AS INT) AS n,
-        |    CAST(sum(cnt) AS BIGINT) AS total_ngrams,
-        |    CAST(count(*) AS BIGINT) AS distinct_ngrams
-        |  FROM c GROUP BY 1, 2)
-        |SELECT source, n, total_ngrams, distinct_ngrams,
-        |  floor(CAST(distinct_ngrams AS DOUBLE) / CAST(total_ngrams AS DOUBLE)
-        |    * 1000000 + 0.5) / 1000000 AS diversity
-        |FROM g""".stripMargin) { (s, dir) =>
-      // Round-14 optimization (guide §2.3, extending the r13
-      // hash-on-the-exchange): the readout needs only gram IDENTITY,
-      // so hash every TOKEN to 8 bytes ONCE per document and derive
-      // each n-gram's identity by hashing the n member hashes —
-      // no concatenated gram string is ever built (r13 still
-      // allocated one string per gram before hashing it), the
-      // checkpoint carries array<long> instead of array<string>, and
-      // the explode emits longs. Identical up to 64-bit collisions —
-      // the same declared contract as r13 (the oracle keeps counting
-      // strings); n=1 identities are bit-identical to r13's. A
-      // collision between two TOKEN hashes is not confined to one
-      // gram: it merges every n-gram that contains those tokens at
-      // the same position, since gram identity is built from the
-      // member-token hashes.
-      val t = table(s, dir, "documents")
-        .select(col("source"),
-          transform(sparkToks, tk => xxhash64(tk)).as("hs"))
-        .localCheckpoint() // feeds three n-gram explodes
-      def grams(n: Int): org.apache.spark.sql.DataFrame = {
-        val gcol =
-          if (n == 1) explode(col("hs"))
-          else explode(expr(
-            s"transform(sequence(1, size(hs) - ${n - 1}), " +
-              s"i -> xxhash64(${(0 until n)
-                .map(k => s"element_at(hs, i + $k)").mkString(", ")}))"))
-        t.filter(size(col("hs")) >= n)
-          .select(col("source"), lit(n).as("n"), gcol.as("gram"))
-      }
-      (1 to 3).map(grams).reduce(_ unionAll _)
-        .groupBy(col("source"), col("n"), col("gram"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("source"), col("n"))
-        .agg(sum(col("cnt")).as("total_ngrams"),
-          count(lit(1)).as("distinct_ngrams"))
-        .select(col("source"), col("n"), col("total_ngrams"),
-          col("distinct_ngrams"),
-          (floor(col("distinct_ngrams").cast("double")
-            / col("total_ngrams").cast("double") * 1000000 + lit(0.5))
-            / 1000000).as("diversity"))
     },
 
     // B136: HOLT-WINTERS additive triple exponential smoothing

@@ -22,12 +22,6 @@ class Round10PlanSpec extends SparkTestBase {
       "scan reads columns the zone stats never touch")
   }
 
-  test("posting lists cap through the bounded-heap TopKPerKey operator") {
-    val plan = planOf("inverted_index_postings")
-    assert(plan.contains("TopKPerKey"),
-      s"posting cap fell back to a window sort:\n$plan")
-  }
-
   test("RANGE frames fuse into one window pass with a partition-local sort") {
     val plan = planOf("window_range_frames")
     assert(plan.contains("RangeFrame"), s"no RANGE frame:\n$plan")

@@ -43,14 +43,6 @@ class Round11PlanSpec extends SparkTestBase {
       s"the model-sized grid got shuffled:\n$plan")
   }
 
-  test("burstiness/zipf collapse the TF explode to the vocab grain map-side") {
-    for (q <- Seq("token_burstiness", "zipf_law_fit")) {
-      val plan = planOf(q)
-      assert(plan.contains("partial_count") || plan.contains("partial_"),
-        s"$q: the token explode reaches a shuffle un-combined:\n$plan")
-    }
-  }
-
   test("scene-cut windows partition per document — no global sort") {
     val plan = planOf("mm_scene_cuts")
     assert(!plan.matches("(?s).*Exchange SinglePartition.*Window.*"),

@@ -171,118 +171,6 @@ class MutualInfoSpec extends SparkTestBase {
   }
 }
 
-/** C112 zipf_law_fit — planted geometric frequencies give a
-  * hand-checkable fit; the rank order and the grid quantization are
-  * pinned against an independent Scala recompute.
-  */
-class ZipfSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("planted 8/4/2/1 frequencies: ranks, grid points, exact OLS") {
-    val dir = java.nio.file.Files.createTempDirectory("zipf").toString
-    val text = (Seq.fill(8)("aa") ++ Seq.fill(4)("bb") ++
-      Seq.fill(2)("cc") ++ Seq("dd")).mkString(" ")
-    Seq((1L, text, "en", "s")).toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("zipf_law_fit")(spark, dir)
-      .collect().sortBy(_.getAs[Long]("rnk"))
-    assert(out.map(r => (r.getAs[String]("token"), r.getAs[Long]("freq")))
-      .toSeq == Seq("aa" -> 8L, "bb" -> 4L, "cc" -> 2L, "dd" -> 1L))
-    // independent recompute on the same 1e-6 grid
-    val freqs = Seq(8L, 4L, 2L, 1L)
-    val pts = freqs.zipWithIndex.map { case (f, i) =>
-      (math.floor(math.log(i + 1.0) * 1e6 + 0.5).toLong,
-        math.floor(math.log(f.toDouble) * 1e6 + 0.5).toLong)
-    }
-    val n = BigInt(pts.length)
-    val sx = pts.map(p => BigInt(p._1)).sum
-    val sy = pts.map(p => BigInt(p._2)).sum
-    val sxx = pts.map(p => BigInt(p._1) * p._1).sum
-    val sxy = pts.map(p => BigInt(p._1) * p._2).sum
-    val slope = math.floor((n * sxy - sx * sy).toDouble
-      / (n * sxx - sx * sx).toDouble * 1e6 + 0.5) / 1e6
-    assert(out.head.getAs[Double]("slope") == slope, s"want $slope")
-    // a geometric rank-frequency curve is steeply negative
-    assert(slope < -1.0)
-  }
-
-  test("corpus fit is Zipf-shaped: negative slope, full rank rows") {
-    val out = SparkEntry.queries("zipf_law_fit")(spark, sfDir).collect()
-    assert(out.length == 20)
-    assert(out.head.getAs[Double]("slope") < 0.0)
-    assert(out.head.getAs[Long]("n_ranks") > 20)
-  }
-}
-
-/** C113 token_burstiness — constant-rate tokens score exactly 0,
-  * concentrated tokens score high, and the VMR arithmetic is pinned
-  * by hand.
-  */
-class BurstinessSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("uniform token VMR=0; 2-per-doc-in-half-the-docs VMR=1") {
-    val dir = java.nio.file.Files.createTempDirectory("burst").toString
-    // 10 docs; "uu" once in every doc; "bb" twice in docs 0-4
-    val docs = (0 until 10).map { i =>
-      val b = if (i < 5) " bb bb" else ""
-      (i.toLong, s"uu$b", "en", "s")
-    }
-    docs.toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("token_burstiness")(spark, dir)
-      .collect().map(r => r.getAs[String]("token") ->
-        (r.getAs[Long]("rnk"), r.getAs[Long]("df"), r.getAs[Long]("cf"),
-          r.getAs[Double]("burstiness"))).toMap
-    // bb: N=10, df=5, cf=10, Σc²=20 → (10·20−100)/(10·10) = 1.0
-    assert(out("bb") == ((1L, 5L, 10L, 1.0)), s"${out("bb")}")
-    // uu: constant 1/doc → variance 0 → VMR exactly 0
-    assert(out("uu") == ((2L, 10L, 10L, 0.0)), s"${out("uu")}")
-  }
-
-  test("corpus run ranks bursty above uniform, all VMR >= 0") {
-    val out = SparkEntry.queries("token_burstiness")(spark, sfDir).collect()
-    assert(out.length == 20)
-    assert(out.forall(_.getAs[Double]("burstiness") >= 0.0))
-  }
-}
-
-/** C114 distinct_ngram_diversity — degenerate repetition and full
-  * diversity land on exact hand-computed ratios at every n.
-  */
-class DistinctNgramSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("'x x x x' vs 'a b c d': exact ratios at n=1,2,3") {
-    val dir = java.nio.file.Files.createTempDirectory("dngram").toString
-    Seq((1L, "x x x x", "en", "rep"), (2L, "a b c d", "en", "div"))
-      .toDF("doc_id", "text", "lang", "source")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("distinct_ngram_diversity")(spark, dir)
-      .collect().map(r => (r.getAs[String]("source"), r.getAs[Int]("n")) ->
-        (r.getAs[Long]("total_ngrams"), r.getAs[Long]("distinct_ngrams"),
-          r.getAs[Double]("diversity"))).toMap
-    assert(out(("rep", 1)) == ((4L, 1L, 0.25)))
-    assert(out(("rep", 2)) == ((3L, 1L, math.floor(1.0 / 3 * 1e6 + 0.5) / 1e6)))
-    assert(out(("rep", 3)) == ((2L, 1L, 0.5)))
-    assert(out(("div", 1)) == ((4L, 4L, 1.0)))
-    assert(out(("div", 2)) == ((3L, 3L, 1.0)))
-    assert(out(("div", 3)) == ((2L, 2L, 1.0)))
-  }
-
-  test("corpus diversity falls as n rises per source (soup repeats unigrams)") {
-    val out = SparkEntry.queries("distinct_ngram_diversity")(spark, sfDir)
-      .collect().map(r => (r.getAs[String]("source"), r.getAs[Int]("n")) ->
-        r.getAs[Double]("diversity")).toMap
-    val sources = out.keys.map(_._1).toSet
-    assert(sources.size >= 3)
-    sources.foreach { s =>
-      assert(out((s, 1)) < out((s, 2)) && out((s, 2)) < out((s, 3)),
-        s"$s: ${out((s, 1))} ${out((s, 2))} ${out((s, 3))}")
-    }
-  }
-}
-
 /** B136 holt_winters — a constant series is a fixed point (level =
   * the constant, zero trend/season), and a pure period-7 signal is
   * recovered EXACTLY by the seasonal forecasts.

@@ -48,25 +48,11 @@ class Round20PlanSpec extends SparkTestBase {
       s"a window operator crept into the SPRT walk:\n$plan")
   }
 
-  test("feature hashing scans documents map-only into a combined keyed count") {
-    val plan = planOf("feature_hash_vectors")
-    assert(plan.contains("positioned_ngram_hashes"),
-      s"the codegen'd hash expression is not in the plan:\n$plan")
-    assert(plan.contains("partial_sum") || plan.contains("partial_count"),
-      s"bucket counts reach the exchange un-combined:\n$plan")
-  }
-
   test("time-decay attribution joins clicks through the keyed interval bucketing") {
     val plan = planOf("attribution_time_decay")
     // the B94 RangeJoin discipline: a (user, bucket) equi-join, not a
     // cartesian/broadcast-nested-loop range scan of the click stream
     assert(!plan.contains("CartesianProduct"),
       s"cartesian range scan instead of the bucketed join:\n$plan")
-  }
-
-  test("ngram novelty ships 8-byte gram hashes, not gram strings, to the shuffle") {
-    val plan = planOf("ngram_novelty")
-    assert(plan.contains("token_ngram_hashes"),
-      s"the codegen'd gram-hash expression is not in the plan:\n$plan")
   }
 }

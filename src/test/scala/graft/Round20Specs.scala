@@ -242,78 +242,6 @@ class ABInfraSpec extends SparkTestBase {
   }
 }
 
-/** C126 text_yule_k / C127 text_garbage_score / C128 self_bleu_bigram
-  * — hand-computable text plants.
-  */
-class TextCurationSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def docsDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("txt").toString
-    rows.map { case (id, text, src) => (id, text, "en", src, text.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("yule_k: 'a a a b' → N=4, V=2, K = 1e4·(10−4)/16 = 3750") {
-    val r = SparkEntry.queries("text_yule_k")(
-      spark, docsDir(Seq((0L, "a a a b", "s1")))).collect().head
-    assert(r.getAs[Long]("n_tokens") == 4L)
-    assert(r.getAs[Long]("n_types") == 2L)
-    assert(r.getAs[Double]("yule_k") == 3750.0)
-  }
-
-  test("garbage: 10-consonant run flags; clean prose does not") {
-    val dir = docsDir(Seq(
-      (0L, "abc!!! zzzzzzzzzz", "s1"),
-      (1L, "the quick brown fox", "s1")))
-    val rows = SparkEntry.queries("text_garbage_score")(spark, dir)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    val g = rows(0L)
-    assert(g.getAs[Long]("n_chars") == 17L)
-    assert(g.getAs[Long]("non_alnum") == 3L)
-    assert(g.getAs[Long]("max_cons_run") == 10L)
-    assert(g.getAs[Int]("is_garbage") == 1)
-    val c = rows(1L)
-    assert(c.getAs[Long]("max_cons_run") == 2L) // th/ck/br/wn
-    assert(c.getAs[Int]("is_garbage") == 0)
-  }
-
-  test("self_bleu: shared {a b, b c} of 3 bigrams → p2 = 2/3") {
-    val dir = docsDir(Seq((0L, "a b c d", "s1"), (1L, "a b c e", "s2")))
-    val r = SparkEntry.queries("self_bleu_bigram")(spark, dir)
-      .collect().head
-    assert(r.getAs[Long]("doc_a") == 0L && r.getAs[Long]("doc_b") == 1L)
-    assert(r.getAs[Long]("n_a") == 3L)
-    assert(r.getAs[Long]("clipped") == 2L)
-    assert(r.getAs[Double]("p2") == 0.666667)
-  }
-
-  test("corpus: yule per source positive; p2 within [0,1]; garbage flags consistent") {
-    val yk = SparkEntry.queries("text_yule_k")(spark, sfDir).collect()
-    assert(yk.nonEmpty)
-    yk.foreach(r => assert(r.getAs[Double]("yule_k") >= 0.0))
-    val sb = SparkEntry.queries("self_bleu_bigram")(spark, sfDir).collect()
-    assert(sb.nonEmpty)
-    sb.foreach { r =>
-      val p = r.getAs[Double]("p2")
-      assert(p >= 0.0 && p <= 1.0)
-      assert(r.getAs[Long]("clipped") <= r.getAs[Long]("n_a"))
-    }
-    val gs = SparkEntry.queries("text_garbage_score")(spark, sfDir).collect()
-    gs.foreach { r =>
-      val flag = r.getAs[Int]("is_garbage") == 1
-      val computed = r.getAs[Double]("non_alnum_ratio") > 0.30 ||
-        r.getAs[Long]("max_cons_run") >= 8L
-      // 6dp floor of the ratio can only round DOWN: a flag set by a
-      // ratio microscopically over 0.30 may show a rounded 0.30 —
-      // assert the implication that can't be broken by the grid
-      if (!flag) assert(!computed)
-    }
-  }
-}
-
 /** C129 target_encode_loo / C130 feature_hash_vectors — plants pin
   * the leave-one-out algebra and the hashing-trick invariants.
   */
@@ -339,23 +267,6 @@ class FeatureOpsSpec extends SparkTestBase {
       val expected = if (r.getAs[Int]("conv") == 1) 0.444444 else 0.555556
       assert(r.getAs[Double]("enc") == expected, s"cust ${r.get(1)}")
     }
-  }
-
-  test("feature_hash: repeated token lands twice in one bucket, |f| = n_hits") {
-    val dir = java.nio.file.Files.createTempDirectory("fh").toString
-    Seq((0L, "x x", "en", "s1", 3L), (1L, "x y x y", "en", "s1", 7L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SparkEntry.queries("feature_hash_vectors")(spark, dir)
-      .collect()
-    val d0 = rows.filter(_.getAs[Long]("doc_id") == 0L)
-    assert(d0.length == 1) // one token type → one bucket
-    assert(d0.head.getAs[Long]("n_hits") == 2L)
-    assert(math.abs(d0.head.getAs[Long]("f")) == 2L) // same sign twice
-    val d1 = rows.filter(_.getAs[Long]("doc_id") == 1L)
-    assert(d1.map(_.getAs[Long]("n_hits")).sum == 4L) // multiplicity kept
-    d1.foreach(r =>
-      assert(math.abs(r.getAs[Long]("f")) <= r.getAs[Long]("n_hits")))
   }
 
   test("corpus: encodings stay in [0,1]; hash buckets in range, hits conserved") {

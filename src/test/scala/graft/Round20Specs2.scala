@@ -47,35 +47,6 @@ class InfluenceSeasonalSpec extends SparkTestBase {
     assert(r.getAs[Double]("z") == 2.267787)
   }
 
-  private def docs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("docs2").toString
-    rows.map { case (id, t) => (id, t, "en", "s1", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("sentence stats: 'hello world. foo bar baz! ok?' → 3 sentences, max 3") {
-    val r = SparkEntry.queries("text_sentence_stats")(
-      spark, docs(Seq((0L, "hello world. foo bar baz! ok?"))))
-      .collect().head
-    assert(r.getAs[Long]("n_sentences") == 3L)
-    assert(r.getAs[Long]("n_tokens") == 6L)
-    assert(r.getAs[Double]("mean_sentence_len") == 2.0)
-    assert(r.getAs[Long]("max_sentence_len") == 3L)
-  }
-
-  test("ngram novelty: eval doc sharing one 4-gram with train → 4/5 novel") {
-    val dir = docs(Seq((0L, "a b c d e"), (8L, "a b c d x y z w")))
-    val rows = SparkEntry.queries("ngram_novelty")(spark, dir).collect()
-    assert(rows.length == 1) // only doc 8 is in the eval split
-    val r = rows.head
-    assert(r.getAs[Long]("doc_id") == 8L)
-    assert(r.getAs[Long]("n_grams") == 5L)
-    assert(r.getAs[Long]("n_novel") == 4L)
-    assert(r.getAs[Double]("novelty") == 0.8)
-  }
-
   test("corpus: leverage sums to ~p; novelty in [0,1]; sentence stats consistent") {
     val lev = SparkEntry.queries("ols_influence")(spark, sfDir).collect()
     val hsum = lev.map(_.getAs[Double]("leverage")).sum
@@ -336,25 +307,6 @@ class HurstDwKeyframeSpec extends SparkTestBase {
       assert(r.getAs[Long]("fused_rank") >= 1L
         && r.getAs[Long]("fused_rank") <= 10L)
     }
-  }
-
-  test("code detect: keyword+indent+symbol plant flags; prose does not") {
-    val dir = java.nio.file.Files.createTempDirectory("code").toString
-    import spark.implicits._
-    Seq((0L, "def foo():\n  return bar;\n  x = [1];", "en", "s1", 1L),
-      (1L, "the cat sat on the mat", "en", "s1", 1L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SparkEntry.queries("text_code_detect")(spark, dir)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    val c = rows(0L)
-    assert(c.getAs[Long]("n_keywords") == 2L) // def, return
-    assert(c.getAs[Long]("n_indented") == 2L)
-    assert(c.getAs[Long]("n_lines") == 3L)
-    assert(c.getAs[Int]("is_code") == 1)
-    val p = rows(1L)
-    assert(p.getAs[Long]("n_symbols") == 0L)
-    assert(p.getAs[Int]("is_code") == 0)
   }
 
   test("kendall_w: two perfectly concordant days → W = 1") {

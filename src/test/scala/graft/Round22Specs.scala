@@ -241,20 +241,6 @@ class Round22Specs extends SparkTestBase {
     assert(r.getAs[Double]("z") == 1.069045)
   }
 
-  test("corpus_hhi: 3+1 source split → HHI 0.625, 1.6 effective sources") {
-    val dir = java.nio.file.Files.createTempDirectory("r22hhi").toString
-    Seq((1L, "t", "en", "a", 1L), (2L, "t", "en", "a", 1L),
-      (3L, "t", "en", "a", 1L), (4L, "t", "en", "b", 1L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = SparkEntry.queries("corpus_hhi")(spark, dir).collect().head
-    assert(r.getAs[Long]("n_sources") == 2L)
-    assert(r.getAs[String]("top_source") == "a")
-    assert(r.getAs[Double]("top_share") == 0.75)
-    assert(r.getAs[Double]("hhi") == 0.625)
-    assert(r.getAs[Long]("effective_sources_micro") == 1600000L)
-  }
-
   test("streaming_late_accounting: planted 3-wave replay drops exactly one row") {
     // wave0 (u0): t=100, t=100000 → wm after batch0 = 96400;
     // wave1 (u1): never filtered (late wm still at epoch);

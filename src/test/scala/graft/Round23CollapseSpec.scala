@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Equivalence gates for the round-13 clone-collapse optimizations
   * (suffix_dup_stats, line_dedup, naive_bayes_score): the base SF
@@ -13,7 +14,9 @@ import org.apache.spark.sql.functions._
   * (the bench cloneTables construction) and assert row-set equality
   * with the registered (collapsed) query.
   */
-class Round23CollapseSpec extends SparkTestBase {
+class Round23CollapseSpec extends SparkTestBase with BeforeAndAfterAll {
+
+  private var tmpDir: Option[java.io.File] = None
 
   /** sf0.001 documents ×3: clone k shifts doc_id by k·(max+1) —
     * exactly the bench cloneTables id arithmetic.
@@ -23,6 +26,7 @@ class Round23CollapseSpec extends SparkTestBase {
     val shift = base.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1L
     val dir = java.nio.file.Files
       .createTempDirectory("graft_clone_corpus").toString
+    tmpDir = Some(new java.io.File(dir))
     base.crossJoin(broadcast(
         spark.range(3).select(col("id").as("_rep"))))
       .withColumn("doc_id", col("doc_id") + col("_rep") * lit(shift))
@@ -30,6 +34,10 @@ class Round23CollapseSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
+
+  override def afterAll(): Unit =
+    try tmpDir.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Planted specs for the round-10 engine-surface wave: RANGE frames
-  * (B125), zone-map prune stats (B126), inverted-index postings
-  * (C110).
+  * (B125) and zone-map prune stats (B126).
   */
 class RangeFramesSpec extends SparkTestBase {
   import spark.implicits._
@@ -65,48 +64,5 @@ class ZonemapSpec extends SparkTestBase {
     assert(got.agg(sum($"n_rows")).as[Long].head() == total)
     assert(got.filter($"min_cents" > $"max_cents").count() == 0)
     assert(got.filter($"min_day" > $"max_day").count() == 0)
-  }
-}
-
-class PostingsSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("postings").toString
-    rows.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", length($"text"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("gaps reconstruct sorted doc ids; per-doc dedup; cap at 8") {
-    // "alpha" in docs 3, 10, 11 (twice in doc 3 -> dedup);
-    // "bravo" in 10 docs -> df 10 but only 8 postings
-    val dir = docsDir(
-      Seq((3L, "alpha alpha x"), (10L, "alpha y"), (11L, "alpha z")) ++
-        (20L to 29L).map(i => (i, s"bravo d$i")))
-    val got = SparkEntry.queries("inverted_index_postings")(spark, dir)
-      .select($"term", $"df", $"n_postings", $"postings")
-      .as[(String, Long, Long, String)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(got("alpha") == (("alpha", 3L, 3L, "3,7,1")), s"${got("alpha")}")
-    val b = got("bravo")
-    assert(b._2 == 10L && b._3 == 8L, s"bravo $b")
-    // decode: cumulative sums of the gaps = first 8 doc ids
-    val ids = b._4.split(",").map(_.toLong)
-      .scanLeft(0L)(_ + _).drop(1).toSeq
-    assert(ids == (20L to 27L), s"decoded $ids")
-  }
-
-  test("corpus run: non-vacuous, df >= n_postings, gaps positive after first") {
-    val rows = SparkEntry.queries("inverted_index_postings")(spark, sfDir)
-      .select($"term", $"df", $"n_postings", $"postings")
-      .as[(String, Long, Long, String)].collect()
-    assert(rows.length >= 10, s"only ${rows.length} terms indexed")
-    assert(rows.forall(r => r._2 >= r._3), "df < n_postings somewhere")
-    assert(rows.forall(_._4.split(",").drop(1).forall(_.toLong > 0)),
-      "non-positive gap: postings not strictly ascending")
-    assert(rows.exists(_._3 == 8L), "no term hit the posting cap")
   }
 }

@@ -100,50 +100,3 @@ class AcfSpec extends SparkTestBase {
     assert(got.values.forall(_.forall(v => v >= -1.0 && v <= 1.0)), s"$got")
   }
 }
-
-class EmdSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def docsDir(rows: Seq[(Long, String, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("emd").toString
-    rows.toDF("doc_id", "lang", "n_chars")
-      .withColumn("text", lit("x")).withColumn("source", lit("s"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("point masses at bins 0 and 10 are exactly 10 bins apart") {
-    val dir = docsDir(Seq(
-      (0L, "aa", 0L), (1L, "aa", 5L),        // both bin 0
-      (2L, "bb", 320L), (3L, "bb", 330L)))   // both bin 10
-    val got = SparkEntry.queries("hist_emd_langs")(spark, dir)
-      .select($"lang_a", $"lang_b", $"emd_bins")
-      .as[(String, String, Double)].collect().toSet
-    assert(got == Set(("aa", "bb", 10.0)), s"got $got")
-  }
-
-  test("identical distributions have EMD exactly 0; order is lang_a < lang_b") {
-    val dir = docsDir(Seq(
-      (0L, "aa", 10L), (1L, "aa", 100L),
-      (2L, "bb", 12L), (3L, "bb", 101L),     // same bins as aa
-      (4L, "cc", 320L)))
-    val got = SparkEntry.queries("hist_emd_langs")(spark, dir)
-      .select($"lang_a", $"lang_b", $"emd_bins")
-      .as[(String, String, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(got(("aa", "bb")) == 0.0, s"got $got")
-    assert(got.keySet == Set(("aa", "bb"), ("aa", "cc"), ("bb", "cc")))
-    // cc sits 10 bins (aa: bins 0,3 → avg distance (10+7)/2 = 8.5)
-    assert(got(("aa", "cc")) == 8.5, s"got $got")
-  }
-
-  test("unequal sizes: cross-multiplied CDFs stay exact") {
-    // aa: 3 docs at bin 0; bb: 1 doc at bin 2 → EMD = 2 bins exactly
-    val dir = docsDir(Seq(
-      (0L, "aa", 0L), (1L, "aa", 1L), (2L, "aa", 2L),
-      (3L, "bb", 64L)))
-    val got = SparkEntry.queries("hist_emd_langs")(spark, dir)
-      .select($"emd_bins").as[Double].head()
-    assert(got == 2.0, s"got $got")
-  }
-}

@@ -160,17 +160,19 @@ class AudioFingerprintSpec extends SparkTestBase {
     val stranger = (0 until 400).map(i => ('n' + (i * 13 + 3) % 13).toChar)
       .mkString
     val tmp = java.nio.file.Files.createTempDirectory("graft_audio_spec")
-      .toString
-    Seq((1L, base, "en", "s0", base.length.toLong),
-        (2L, base, "en", "s0", base.length.toLong),
-        (3L, extended, "en", "s0", extended.length.toLong),
-        (4L, stranger, "en", "s0", stranger.length.toLong))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$tmp/documents.parquet")
-    val pairs = SparkEntry.queries("mm_audio_fingerprint")(spark, tmp)
-      .select($"doc_a", $"doc_b", $"n_shared")
-      .as[(Long, Long, Long)].collect()
-      .map(p => (p._1, p._2) -> p._3).toMap
+      .toFile
+    val pairs = try {
+      Seq((1L, base, "en", "s0", base.length.toLong),
+          (2L, base, "en", "s0", base.length.toLong),
+          (3L, extended, "en", "s0", extended.length.toLong),
+          (4L, stranger, "en", "s0", stranger.length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$tmp/documents.parquet")
+      SparkEntry.queries("mm_audio_fingerprint")(spark, tmp.toString)
+        .select($"doc_a", $"doc_b", $"n_shared")
+        .as[(Long, Long, Long)].collect()
+        .map(p => (p._1, p._2) -> p._3).toMap
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
     assert(pairs.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)),
       s"got $pairs")
     assert(pairs((1L, 2L)) == 3, "identical docs share all 3 shingles")
